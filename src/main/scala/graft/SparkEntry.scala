@@ -322,9 +322,11 @@ object SparkEntry {
       r1h.select(
         col("user_id"), col("bucket_ts"),
         col("close").as("close"),
-        (graft.functions.Cents.centsToMoney(sum(col("vol_cents")).over(w)) /
-          count(lit(1)).over(w)).as("vol_sma7"),
-        count(lit(1)).over(w).cast(LongType).as("n_in_frame"))
+        sum(col("vol_cents")).over(w).as("__sv"),
+        count(lit(1)).over(w).as("__n"))
+        .select(col("user_id"), col("bucket_ts"), col("close"),
+          (graft.functions.Cents.centsToMoney(col("__sv")) / col("__n")).as("vol_sma7"),
+          col("__n").cast(LongType).as("n_in_frame"))
     }),
 
     // ----- Technical indicators: Bollinger bands and simple RSI over
@@ -3148,12 +3150,14 @@ object SparkEntry {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("bucket_ts"))
       val cents = round(col("close") * 100).cast(LongType)
-      val sgn = when(cents > lag(cents, 1).over(w), 1)
-        .when(cents < lag(cents, 1).over(w), -1).otherwise(0)
+      val (c, pc) = (col("__c"), col("__pc"))
+      val sgn = when(c > pc, 1).when(c < pc, -1).otherwise(0)
       val wSgn = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"), col("sgn")).orderBy(col("bucket_ts"))
-      r1d.select(col("user_id"), col("bucket_ts"), sgn.as("sgn"),
-          lag(cents, 1).over(w).isNotNull.as("__has_prev"))
+      r1d.select(col("user_id"), col("bucket_ts"), cents.as("__c"),
+          lag(cents, 1).over(w).as("__pc"))
+        .select(col("user_id"), col("bucket_ts"), sgn.as("sgn"),
+          pc.isNotNull.as("__has_prev"))
         .filter(col("__has_prev"))
         .withColumn("__rn_all", row_number().over(w))
         .filter(col("sgn") =!= 0)

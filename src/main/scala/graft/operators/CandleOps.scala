@@ -38,6 +38,28 @@ object CandleOps {
   private def spreadByKeys(df: DataFrame, keys: Seq[String]): DataFrame =
     graft.api.Par.spreadKeyed(df, keys)
 
+  /** Every window function an indicator needs is appended ONCE as a
+    * named column, and the arithmetic that reads it (bound predicates,
+    * branches, denominators, `when(den > 0, …)`) runs in the plain
+    * Project above the Window. Catalyst's analyzer
+    * (`ExtractWindowExpressions`) gives every `WindowExpression`
+    * OCCURRENCE its own `_weN` slot and nothing dedupes them, so a lag
+    * written into three expressions is computed three times per row.
+    * The staging select sits between the same spread and the same
+    * Window, so it adds no exchange; [[graft.GlobalWindowAuditSpec]]
+    * keeps every query at one slot per distinct window function.
+    */
+  private[operators] def lagName(c: String, j: Int): String = s"${c}__lag$j"
+
+  /** `df` plus the lags 1 until `n` of its column `c` over `wOrd`, named
+    * by [[lagName]]. */
+  private[operators] def withLags(df: DataFrame, c: String, n: Int, wOrd: WindowSpec): DataFrame =
+    df.select(col("*") +: (1 until n).map(j => lag(col(c), j).over(wOrd).as(lagName(c, j))): _*)
+
+  /** `c` and its staged lags 1 until `n` — the x_j inputs of [[emaNumDen]]. */
+  private[operators] def lagged(c: String, n: Int): Seq[Column] =
+    col(c) +: (1 until n).map(j => col(lagName(c, j)))
+
 
   // ---------------------------------------------------------------------
   // B2 — last-writer-wins dedup ("FINAL" over ReplacingMergeTree,
@@ -295,17 +317,20 @@ object CandleOps {
     require(k > 0, s"k=$k must be positive")
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
       .rowsBetween(-(nWindow - 1), Window.currentRow)
-    val cents = round(col(closeCol) * 100).cast(LongType)
-    val n = count(lit(1)).over(w)
-    val sx = sum(cents).over(w)
-    val sxx = sum(cents * cents).over(w)
+    val cents = col("close_cents")
+    val (n, sx, sxx) = (col("n_in_frame"), col("__sx"), col("__sxx"))
     val mid = sx.cast(DoubleType) / n.cast(DoubleType)
     val delta = lit(k) *
       sqrt((n * sxx - sx * sx).cast(DoubleType) / (n * n).cast(DoubleType))
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+
-        n.as("n_in_frame") :+ mid.as("mid_cents") :+
-        (mid + delta).as("upper_cents") :+ (mid - delta).as("lower_cents")): _*)
+    spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+
+        round(col(closeCol) * 100).cast(LongType).as("close_cents")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+ cents :+
+        count(lit(1)).over(w).as("n_in_frame") :+ sum(cents).over(w).as("__sx") :+
+        sum(cents * cents).over(w).as("__sxx")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+ cents :+ n :+
+        mid.as("mid_cents") :+ (mid + delta).as("upper_cents") :+
+        (mid - delta).as("lower_cents")): _*)
   }
 
   /** Simple (Cutler's) RSI: 100 * gains / (gains + losses) over the
@@ -328,14 +353,14 @@ object CandleOps {
     val d = cents - lag(cents, 1).over(wOrd)
     val withD = spreadByKeys(rollup, keys).select(
       (keys.map(col) :+ col(bucketCol) :+ d.as("__d")): _*)
-    val gains = sum(when(col("__d") > 0, col("__d")).otherwise(0L)).over(w)
-    val losses = sum(when(col("__d") < 0, -col("__d")).otherwise(0L)).over(w)
+    val gains = col("gains_cents")
+    val losses = col("losses_cents")
     withD.select(
-      (keys.map(col) :+ col(bucketCol) :+ gains.as("gains_cents") :+
-        losses.as("losses_cents") :+
-        when(gains + losses === 0, lit(null).cast(DoubleType))
-          .otherwise((gains * 100).cast(DoubleType) /
-            (gains + losses).cast(DoubleType)).as("rsi")): _*)
+      (keys.map(col) :+ col(bucketCol) :+
+        sum(when(col("__d") > 0, col("__d")).otherwise(0L)).over(w).as("gains_cents") :+
+        sum(when(col("__d") < 0, -col("__d")).otherwise(0L)).over(w).as("losses_cents")): _*)
+      .withColumn("rsi", when(gains + losses === 0, lit(null).cast(DoubleType))
+        .otherwise((gains * 100).cast(DoubleType) / (gains + losses).cast(DoubleType)))
   }
 
   /** Resample a rollup onto a continuous per-key grid and forward-fill
@@ -479,8 +504,9 @@ object CandleOps {
     * values to ~1e12.
     *
     * One window per key — the same single-exchange shape as the other
-    * indicators; the n explicit lags stay inside one codegen'd window
-    * frame (no self-joins, no per-row arrays).
+    * indicators: the n−1 lags are staged once as named columns
+    * ([[withLags]]) and the convolution runs in the Project above the
+    * Window (no self-joins, no per-row arrays).
     */
   def ema(
       rollup: DataFrame,
@@ -491,20 +517,35 @@ object CandleOps {
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val (num, den) = emaNumDen(cents, wOrd, nWindow)
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+
+    val (num, den) = emaNumDen(lagged("close_cents", nWindow))
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents")): _*)
+    withLags(staged, "close_cents", nWindow, wOrd).select(
+      (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         (num.cast(DoubleType) / den.cast(DoubleType)).as("ema_cents")): _*)
   }
 
   /** The exact-rational core of [[ema]]: decimal(38,0) numerator and
-    * denominator of the truncated EWMA over the trailing `nWindow`
-    * values of the integer column `x` in window order `wOrd`. Both
-    * sums are over explicit lags, so the pair is usable for rational
-    * arithmetic ACROSS two EMAs (see [[macd]]) — num/den stays exact
-    * until the caller's one division.
+    * denominator of the truncated EWMA over `xs` — the current value
+    * of an integer column followed by its lags 1 .. n−1, staged by the
+    * caller as named columns ([[withLags]]/[[lagged]]), so n =
+    * `xs.length`. Both sums are over explicit lags, so the pair is
+    * usable for rational arithmetic ACROSS two EMAs (see [[macd]]) —
+    * num/den stays exact until the caller's one division.
+    *
+    * The lags are columns, not `lag(x, j).over(w)` written inline:
+    * Catalyst evaluates every window-expression occurrence separately,
+    * and the inline form referenced each lag four to six times (bound
+    * predicate, both numerator branches, denominator). Measured at
+    * sf0.001 over the whole query suite: 761 window slots for 130
+    * distinct window functions in 28 queries before (q_macd 192/16,
+    * q_keltner 125/14, q_ema 110/11, q_holt_brown 80/10, q_ewma_vol
+    * 43/6), one slot per function after. q_ewma_vol's CPU in the
+    * `candle` benchmark (perfbench, 4 vCPUs, median over ten
+    * alternating pairs) went from 1.40 to 1.10 s.
     */
-  private def emaNumDen(x: Column, wOrd: WindowSpec, nWindow: Int): (Column, Column) = {
+  private def emaNumDen(xs: Seq[Column]): (Column, Column) = {
+    val nWindow = xs.length
     require(nWindow > 1 && nWindow <= 20,
       s"nWindow=$nWindow outside (1, 20]: weights (n+1)^(n-1) must stay decimal-exact")
     val dec = DecimalType(38, 0)
@@ -513,13 +554,12 @@ object CandleOps {
       BigInt(nWindow - 1).pow(j) * BigInt(nWindow + 1).pow(nWindow - 1 - j)
     }
     val wMax = weights.max
-    if (wMax.bitLength <= 52) emaNumDenLong(x, wOrd, weights, dec)
+    if (wMax.bitLength <= 52) emaNumDenLong(xs, weights, dec)
     else {
       // wide-weight fallback (nWindow 15-20: 16^14 is 57 bits, 17^15
       // is 62 — both past the 52-bit long-split gate): the per-term
       // decimal products genuinely need >63-bit headroom
-      val terms = weights.zipWithIndex.map { case (wj, j) =>
-        val xj = if (j == 0) x else lag(x, j).over(wOrd)
+      val terms = weights.zip(xs).map { case (wj, xj) =>
         val wLit = lit(BigDecimal(wj)).cast(dec)
         (when(xj.isNotNull, xj.cast(dec) * wLit).otherwise(lit(0).cast(dec)),
           when(xj.isNotNull, wLit).otherwise(lit(0).cast(dec)))
@@ -554,8 +594,8 @@ object CandleOps {
     * documented decimal budgets — holtBrown's s1µ ≤ 1e15, ewmaVol's
     * d² ≤ 2^60): the numerator falls back per row to the SAME-valued
     * decimal convolution, lazily — CaseWhen evaluates only the taken
-    * branch, and the lag expressions are shared by both branches and
-    * the bound predicate, so in-bound rows (any priced series: the
+    * branch, and the bound predicate and both branches read the same
+    * staged lag columns, so in-bound rows (any priced series: the
     * bound is ~4.6e13 at n = 6 and ≥ 2^35 cents at n ≤ 13) pay pure
     * long arithmetic and only past-bound rows pay BigDecimal. The
     * full decimal(38,0) domain of
@@ -563,7 +603,7 @@ object CandleOps {
     * x-free (n · wMax < 2^56) and always rides the long path.
     */
   private def emaNumDenLong(
-      x: Column, wOrd: WindowSpec, weights: Seq[BigInt],
+      xjs: Seq[Column], weights: Seq[BigInt],
       dec: DecimalType): (Column, Column) = {
     val n = weights.length
     val wBits = weights.max.bitLength
@@ -572,10 +612,6 @@ object CandleOps {
       ((w >> s).max(w & ((BigInt(1) << s) - 1))).max(BigInt(1))
     }.max
     val xBound = ((BigInt(1) << 62) / (BigInt(n) * partMax)).toLong
-    // one lag expression per offset, shared by the bound predicate and
-    // both numerator branches (the Window operator computes distinct
-    // window expressions once)
-    val xjs = weights.indices.map(j => if (j == 0) x else lag(x, j).over(wOrd))
     // no abs(): abs(Long.MinValue) wraps negative and would misroute
     // that (absurd) input onto the long branch
     val inBound = xjs.map(xj =>
@@ -626,14 +662,17 @@ object CandleOps {
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
     val ws = wOrd.rowsBetween(-(smoothN - 1), Window.currentRow)
     def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val withBounds = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+
-        (cts("close") - min(cts("low")).over(w)).as("__num") :+
-        (max(cts("high")).over(w) - min(cts("low")).over(w)).as("__den")): _*)
-    val sNum = sum(col("__num")).over(ws)
-    val sDen = sum(col("__den")).over(ws)
-    withBounds.select(
-      (keys.map(col) :+ col(bucketCol) :+
+    val withBounds = spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+
+        max(cts("high")).over(w).as("__hi") :+ min(cts("low")).over(w).as("__lo")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+
+        (col("__c") - col("__lo")).as("__num") :+
+        (col("__hi") - col("__lo")).as("__den")): _*)
+    val (sNum, sDen) = (col("__sn"), col("__sd"))
+    withBounds
+      .select((keys.map(col) :+ col(bucketCol) :+ col("__num") :+ col("__den") :+
+        sum(col("__num")).over(ws).as("__sn") :+ sum(col("__den")).over(ws).as("__sd")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+
         col("__num").as("k_num_cents") :+ col("__den").as("k_den_cents") :+
         when(col("__den") > 0, (col("__num") * 100).cast(DoubleType) /
           col("__den").cast(DoubleType)).as("k_raw") :+
@@ -658,17 +697,32 @@ object CandleOps {
     require(nWindow > 1, s"nWindow=$nWindow must exceed 1")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
+    val withTr = trueRange(spreadByKeys(rollup, keys), keys, bucketCol, wOrd)
+    withTr
+      .select((keys.map(col) :+ col(bucketCol) :+ col("__tr").as("tr_cents") :+
+        sum(col("__tr")).over(w).as("__ts") :+ count(lit(1)).over(w).as("__tc")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+ col("tr_cents") :+
+        (col("__ts").cast(DoubleType) / col("__tc").cast(DoubleType)).as("atr_cents")): _*)
+  }
+
+  /** Keys, bucket, high/low/close cents (`__h`, `__l`, `__c`; the close
+    * with its lags 1 until `nLags`) and the exact-cent true range
+    * `__tr` = max(high−low,
+    * |high−prevClose|, |low−prevClose|) (first bucket: high−low) — the
+    * shared core of [[atr]] and [[keltner]]. The previous close is the
+    * staged lag 1, read three times by the range arithmetic above the
+    * Window. */
+  private def trueRange(
+      spread: DataFrame, keys: Seq[String], bucketCol: String, wOrd: WindowSpec,
+      nLags: Int = 2): DataFrame = {
     def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val pc = lag(cts("close"), 1).over(wOrd)
-    val hl = cts("high") - cts("low")
+    val staged = spread.select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+
+      cts("high").as("__h") :+ cts("low").as("__l")): _*)
+    val pc = col(lagName("__c", 1))
+    val hl = col("__h") - col("__l")
     val tr = when(pc.isNull, hl).otherwise(
-      greatest(hl, abs(cts("high") - pc), abs(cts("low") - pc)))
-    val withTr = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ tr.as("__tr")): _*)
-    withTr.select(
-      (keys.map(col) :+ col(bucketCol) :+ col("__tr").as("tr_cents") :+
-        (sum(col("__tr")).over(w).cast(DoubleType) /
-          count(lit(1)).over(w).cast(DoubleType)).as("atr_cents")): _*)
+      greatest(hl, abs(col("__h") - pc), abs(col("__l") - pc)))
+    withLags(staged, "__c", nLags, wOrd).withColumn("__tr", tr)
   }
 
   /** Keltner channels kept exact end-to-end: middle = the truncated
@@ -697,15 +751,12 @@ object CandleOps {
     val dec38 = DecimalType(38, 0)
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(atrN - 1), Window.currentRow)
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val pc = lag(cts("close"), 1).over(wOrd)
-    val hl = cts("high") - cts("low")
-    val tr = when(pc.isNull, hl).otherwise(
-      greatest(hl, abs(cts("high") - pc), abs(cts("low") - pc)))
-    val (numE, denE) = emaNumDen(cts("close"), wOrd, emaN)
-    val staged = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
-        tr.as("__tr") :+ numE.as("__ne") :+ denE.as("__de")): _*)
+    // the true range's previous close IS the EMA's lag 1: one staged set
+    // of close lags feeds both
+    val (numE, denE) = emaNumDen(lagged("__c", emaN))
+    val staged = trueRange(spreadByKeys(rollup, keys), keys, bucketCol, wOrd, emaN).select(
+      (keys.map(col) :+ col(bucketCol) :+ col("__c").as("close_cents") :+
+        col("__tr") :+ numE.as("__ne") :+ denE.as("__de")): _*)
     staged
       .withColumn("__ts", sum(col("__tr")).over(w).cast(dec38))
       .withColumn("__tc", count(lit(1)).over(w).cast(dec38))
@@ -737,14 +788,14 @@ object CandleOps {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
     def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val upper = max(cts("high")).over(w)
-    val lower = min(cts("low")).over(w)
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
-        upper.as("upper_cents") :+ lower.as("lower_cents") :+
-        ((upper + lower).cast(DoubleType) / lit(2.0)).as("mid_cents") :+
-        when(upper > lower, (cts("close") - lower).cast(DoubleType) /
-          (upper - lower).cast(DoubleType)).as("position")): _*)
+    val (close, upper, lower) = (col("close_cents"), col("upper_cents"), col("lower_cents"))
+    spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
+        max(cts("high")).over(w).as("upper_cents") :+
+        min(cts("low")).over(w).as("lower_cents")): _*)
+      .withColumn("mid_cents", (upper + lower).cast(DoubleType) / lit(2.0))
+      .withColumn("position", when(upper > lower, (close - lower).cast(DoubleType) /
+        (upper - lower).cast(DoubleType)))
   }
 
   /** On-balance volume: the running sum of volume signed by the close-
@@ -766,10 +817,12 @@ object CandleOps {
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cents = round(col(closeCol) * 100).cast(LongType)
     val volCents = volCentsCol(rollup, volumeCol)
-    val d = cents - lag(cents, 1).over(wOrd)
-    val signed = when(d > 0, volCents).when(d < 0, -volCents).otherwise(lit(0L))
-    val withSigned = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+
+    val d = col("close_cents") - col(lagName("close_cents", 1))
+    val signed = when(d > 0, col("__v")).when(d < 0, -col("__v")).otherwise(lit(0L))
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+ volCents.as("__v")): _*)
+    val withSigned = withLags(staged, "close_cents", 2, wOrd).select(
+      (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         signed.as("__sv")): _*)
     withSigned.select(
       (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
@@ -791,15 +844,19 @@ object CandleOps {
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val ph = lag(cts("high"), 1).over(wOrd)
-    val pl = lag(cts("low"), 1).over(wOrd)
-    val pc = lag(cts("close"), 1).over(wOrd)
-    val p = (ph + pl + pc).cast(DoubleType) / lit(3.0)
+    val ph = col("prev_high_cents")
+    val pl = col("prev_low_cents")
+    val pc = col("prev_close_cents")
+    val p = col("pivot")
     val range = (ph - pl).cast(DoubleType)
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
-        ph.as("prev_high_cents") :+ pl.as("prev_low_cents") :+
-        pc.as("prev_close_cents") :+ p.as("pivot") :+
+    spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
+        lag(cts("high"), 1).over(wOrd).as("prev_high_cents") :+
+        lag(cts("low"), 1).over(wOrd).as("prev_low_cents") :+
+        lag(cts("close"), 1).over(wOrd).as("prev_close_cents")): _*)
+      .withColumn("pivot", (ph + pl + pc).cast(DoubleType) / lit(3.0))
+      .select((keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
+        ph :+ pl :+ pc :+ p :+
         (lit(2.0) * p - pl.cast(DoubleType)).as("r1") :+
         (lit(2.0) * p - ph.cast(DoubleType)).as("s1") :+
         (p + range).as("r2") :+ (p - range).as("s2")): _*)
@@ -863,15 +920,18 @@ object CandleOps {
       s"need 1 < fast=$fast < slow=$slow <= 13 for the decimal(38,0) cross-multiply budget")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val (numF, denF) = emaNumDen(cents, wOrd, fast)
-    val (numS, denS) = emaNumDen(cents, wOrd, slow)
+    // fast < slow: the slow EMA's staged lags cover the fast one's
+    val (numF, denF) = emaNumDen(lagged("close_cents", fast))
+    val (numS, denS) = emaNumDen(lagged("close_cents", slow))
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents")): _*)
     // Materialize the four convolution sums into columns before any
     // expression references them twice: their per-term when(isNotNull)
     // guards block codegen subexpression elimination, so an inline
     // `macdCents` used by both outputs re-evaluates all fast+slow
     // decimal terms per output (measured ~2x the window wall at sf1).
-    val sums = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+
+    val sums = withLags(staged, "close_cents", slow, wOrd).select(
+      (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         numF.as("__nf") :+ denF.as("__df") :+
         numS.as("__ns") :+ denS.as("__ds")): _*)
     val macdCents = (col("__nf") * col("__ds") - col("__ns") * col("__df"))
@@ -880,8 +940,8 @@ object CandleOps {
       (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         macdCents.as("macd_cents") :+
         floor(macdCents * lit(1000000.0)).cast(LongType).as("macd_micro")): _*)
-    val (numSig, denSig) = emaNumDen(col("macd_micro"), wOrd, signalN)
-    val sums2 = stage1.select(
+    val (numSig, denSig) = emaNumDen(lagged("macd_micro", signalN))
+    val sums2 = withLags(stage1, "macd_micro", signalN, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         col("macd_cents") :+ col("macd_micro") :+
         numSig.as("__nsig") :+ denSig.as("__dsig")): _*)
@@ -920,20 +980,22 @@ object CandleOps {
       s"nWindow=$nWindow outside (1, 8]: the decimal(38,0) cross-multiply budget")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val (num1, den1) = emaNumDen(cents, wOrd, nWindow)
+    val (num1, den1) = emaNumDen(lagged("close_cents", nWindow))
     val s1 = num1.cast(DoubleType) / den1.cast(DoubleType)
-    val stage1 = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents") :+
+    val closes = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cents.as("close_cents")): _*)
+    val stage1 = withLags(closes, "close_cents", nWindow, wOrd).select(
+      (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         floor(s1 * lit(1000000.0)).cast(LongType).as("s1_micro")): _*)
     val dec38 = DecimalType(38, 0)
-    val (num2, den2) = emaNumDen(col("s1_micro"), wOrd, nWindow)
+    val (num2, den2) = emaNumDen(lagged("s1_micro", nWindow))
     // Stage the second-pass sums into columns before the three outputs
     // reference them: the convolution's when(isNotNull) guards block
     // codegen subexpression elimination, so inlining num2/den2 into
     // level+trend+forecast re-evaluated the n-term decimal sums up to
     // six times per row (measured: this query cost MORE than macd's
     // 24-lag triple despite half the lags).
-    val sums2 = stage1.select(
+    val sums2 = withLags(stage1, "s1_micro", nWindow, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+ col("close_cents") :+
         col("s1_micro") :+ num2.as("__n2") :+ den2.as("__d2")): _*)
     val s1d = col("s1_micro").cast(dec38)
@@ -974,16 +1036,18 @@ object CandleOps {
       s"nWindow=$nWindow outside (1, 8]: the decimal(38,0) budget at squared cents")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val d = cents - lag(cents, 1).over(wOrd)
-    val staged = spreadByKeys(rollup, keys).select(
+    val d = col("__c") - col(lagName("__c", 1))
+    val closes = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cents.as("__c")): _*)
+    val staged = withLags(closes, "__c", 2, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+ d.as("__d") :+
         (d * d).as("__d2")): _*)
-    val (num, den) = emaNumDen(col("__d2"), wOrd, nWindow)
+    val (num, den) = emaNumDen(lagged("__d2", nWindow))
     // Stage the sums once: inlining num/den into both outputs would
     // re-run the n-term decimal convolution twice per row (the
     // when(isNotNull) term guards block codegen subexpression
     // elimination — see macd/holtBrown).
-    val sums = staged.select(
+    val sums = withLags(staged, "__d2", nWindow, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+ col("__d") :+
         num.as("__num") :+ den.as("__den")): _*)
     val varC = col("__num").cast(DoubleType) / col("__den").cast(DoubleType)
@@ -1014,10 +1078,9 @@ object CandleOps {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val peak = max(cents).over(w)
-    val dd = peak - cents
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ cents.as("__cents") :+ peak.as("__peak") :+ dd.as("__dd")): _*)
+    spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ cents.as("__cents") :+ max(cents).over(w).as("__peak")): _*)
+      .withColumn("__dd", col("__peak") - col("__cents"))
       .groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("n_buckets"),
@@ -1133,20 +1196,24 @@ object CandleOps {
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     def cts(c: String) = round(col(c) * 100).cast(LongType)
-    val (o, h, l, c) = (cts("open"), cts("high"), cts("low"), cts("close"))
+    val (o, h, l, c) =
+      (col("open_cents"), col("high_cents"), col("low_cents"), col("close_cents"))
     val body = abs(c - o)
     val range = h - l
     val lowerShadow = least(o, c) - l
     val upperShadow = h - greatest(o, c)
-    val po = lag(o, 1).over(wOrd)
-    val pc = lag(c, 1).over(wOrd)
+    val po = col(lagName("open_cents", 1))
+    val pc = col(lagName("close_cents", 1))
     val doji = body * 10 <= range && range > 0
     val hammer = lowerShadow >= body * 2 && upperShadow <= body && body > 0
     val bullEngulf = pc.isNotNull && pc < po && c > o && c >= po && o <= pc
     val bearEngulf = pc.isNotNull && pc > po && c < o && c <= po && o >= pc
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ o.as("open_cents") :+
-        h.as("high_cents") :+ l.as("low_cents") :+ c.as("close_cents") :+
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cts("open").as("open_cents") :+
+        cts("high").as("high_cents") :+ cts("low").as("low_cents") :+
+        cts("close").as("close_cents")): _*)
+    withLags(withLags(staged, "open_cents", 2, wOrd), "close_cents", 2, wOrd).select(
+      (keys.map(col) :+ col(bucketCol) :+ o :+ h :+ l :+ c :+
         doji.as("doji") :+ hammer.as("hammer") :+
         bullEngulf.as("bullish_engulfing") :+
         bearEngulf.as("bearish_engulfing")): _*)
@@ -1231,7 +1298,8 @@ object CandleOps {
     * exact max/min over raw extremes and the two computed doubles.
     *
     * One window per key, same single-exchange shape as the indicator
-    * family; the n explicit lags stay inside one codegen'd frame.
+    * family; the n lags are staged once as named columns and the
+    * weighted sums run in the Project above the Window.
     */
   def heikinAshi(
       rollup: DataFrame,
@@ -1259,17 +1327,20 @@ object CandleOps {
         lit(s" exceeds the long-exact bound $hc4Bound at nWindow=$nWindow;"
           + " lower nWindow or rescale prices"))))
     val terms = (1 to nWindow).map { j =>
-      val xj = lag(hc4, j).over(wOrd)
+      val xj = col(lagName("__hc4", j))
       val wj = lit(1L << (nWindow - j))
       (when(xj.isNotNull, xj * wj).otherwise(lit(0L)),
         when(xj.isNotNull, wj).otherwise(lit(0L)))
     }
     val num = terms.map(_._1).reduce(_ + _)
     val wsum = terms.map(_._2).reduce(_ + _)
-    val haClose = hc4.cast(DoubleType) / lit(400.0)
-    val haOpen = when(wsum === 0, (oc + cc).cast(DoubleType) / lit(200.0))
+    val haClose = col("__hc4").cast(DoubleType) / lit(400.0)
+    val haOpen = when(wsum === 0, (col("__oc") + col("__cc")).cast(DoubleType) / lit(200.0))
       .otherwise(num.cast(DoubleType) / (wsum * lit(400L)).cast(DoubleType))
-    spreadByKeys(rollup, keys).select(
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ oc.as("__oc") :+ cc.as("__cc") :+
+        hc4.as("__hc4") :+ col("high") :+ col("low")): _*)
+    withLags(staged, "__hc4", nWindow + 1, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+
         haOpen.as("ha_open") :+ haClose.as("ha_close") :+
         col("high") :+ col("low")): _*)
@@ -1441,10 +1512,12 @@ object CandleOps {
     val keyCols = keys.map(col)
     val w = Window.partitionBy(keyCols: _*).orderBy(col(bucketCol))
     val cents = round(col(closeCol) * 100).cast(LongType)
-    val sgn = when(cents > lag(cents, 1).over(w), 1)
-      .when(cents < lag(cents, 1).over(w), -1).otherwise(0)
+    val (c, pc) = (col("__c"), col(lagName("__c", 1)))
+    val sgn = when(c > pc, 1).when(c < pc, -1).otherwise(0)
     val wSgnOrd = Window.partitionBy(keyCols: _*).orderBy(col(bucketCol))
-    val moves = spreadByKeys(rollup, keys)
+    val closes = spreadByKeys(rollup, keys)
+      .select((keyCols :+ col(bucketCol) :+ cents.as("__c")): _*)
+    val moves = withLags(closes, "__c", 2, w)
       .select((keyCols :+ col(bucketCol) :+ sgn.as("__sgn")): _*)
       .filter(col("__sgn") =!= 0)
       .withColumn("__prev", lag(col("__sgn"), 1).over(wSgnOrd))

@@ -123,16 +123,20 @@ object EventOps {
       val raw = min(when(
         col(typeCol) === steps(i - 1) && us > prev &&
           us <= col("__t1") + windowUs, us)).over(w)
-      val guarded = mode match {
+      // the guard reads the raw link twice: both window values are
+      // staged as columns so each is evaluated once
+      val (r, g) = (col(s"__raw$i"), col(s"__guard$i"))
+      df = mode match {
         case "strict_dedup" =>
           val dup = min(when(col(typeCol) === steps(i - 2) && us > prev, us)).over(w)
-          when(dup.isNull || raw < dup, raw)
+          df.select(col("*"), raw.as(s"__raw$i"), dup.as(s"__guard$i"))
+            .withColumn(s"__t$i", when(g.isNull || r < g, r))
         case "strict_order" =>
           val nextAny = min(when(isStep && us > prev, us)).over(w)
-          when(raw === nextAny, raw)
-        case _ => raw
+          df.select(col("*"), raw.as(s"__raw$i"), nextAny.as(s"__guard$i"))
+            .withColumn(s"__t$i", when(r === g, r))
+        case _ => df.withColumn(s"__t$i", raw)
       }
-      df = df.withColumn(s"__t$i", guarded)
     }
     val level = (1 to steps.size).foldLeft(lit(0)) { (acc, i) =>
       when(col(s"__t$i").isNotNull, lit(i)).otherwise(acc)
@@ -412,9 +416,11 @@ object EventOps {
         date_trunc("week", col(tsCol)).cast("date").as("week_start"))
       .distinct()
     val w = Window.partitionBy(col(userCol)).orderBy(col("week_start"))
-    val prev = lag(col("week_start"), 1).over(w)
-    val next = lead(col("week_start"), 1).over(w)
+    val (prev, next) = (col("__prev"), col("__next"))
     weekly
+      .select(col(userCol), col("week_start"),
+        lag(col("week_start"), 1).over(w).as("__prev"),
+        lead(col("week_start"), 1).over(w).as("__next"))
       .withColumn("__status",
         when(prev.isNull, "new")
           .when(datediff(col("week_start"), prev) === 7, "retained")
@@ -543,16 +549,15 @@ object EventOps {
     // flag different rows on different runs
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(idCol))
       .rowsBetween(-(windowRows - 1), Window.currentRow)
-    val n = count(lit(1)).over(w)
-    val sx = sum(cents).over(w)
-    val sxx = sum(cents * cents).over(w)
-    val dev = n * cents - sx
+    val (c, n, sx, sxx) = (col("__c"), col("__n"), col("__sx"), col("__sxx"))
+    val dev = n * c - sx
     spreadBy(events, keyCol)
       .where(col(valueCol).isNotNull) // null metric: n would count, sums skip
-      .withColumn("__flag",
-        dev * dev > lit(k.toLong * k) * (n * sxx - sx * sx))
-      .where(col("__flag"))
-      .drop("__flag")
+      .withColumn("__c", cents)
+      .select(col("*"), count(lit(1)).over(w).as("__n"), sum(c).over(w).as("__sx"),
+        sum(c * c).over(w).as("__sxx"))
+      .where(dev * dev > lit(k.toLong * k) * (n * sxx - sx * sx))
+      .drop("__c", "__n", "__sx", "__sxx")
   }
 
   /** Multi-touch attribution: credit each conversion's value back to
@@ -658,9 +663,8 @@ object EventOps {
       .agg(count(lit(1)).as("n"))
     val wf = Window.partitionBy(col("from_type"))
     counts.select(col("from_type"), col("to_type"), col("n"),
-      sum(col("n")).over(wf).as("n_from"),
-      (col("n").cast(DoubleType) / sum(col("n")).over(wf).cast(DoubleType))
-        .as("p"))
+      sum(col("n")).over(wf).as("n_from"))
+      .withColumn("p", col("n").cast(DoubleType) / col("n_from").cast(DoubleType))
   }
 
   /** Streaming form of [[driftChi2]]: each event-time window's type
@@ -925,8 +929,8 @@ object EventOps {
       sum(col("n_events")).over(w7).as("n_events_7d"),
       sum(col("__np")).over(w30).as("n_purchases_30d"),
       sum(col("__pc")).over(w30).as("purchase_cents_30d"),
-      coalesce(sum(col("__np")).over(wNext7), lit(0L)).as("purchases_next_7d"),
-      (coalesce(sum(col("__np")).over(wNext7), lit(0L)) > 0).as("label_next_7d"))
+      coalesce(sum(col("__np")).over(wNext7), lit(0L)).as("purchases_next_7d"))
+      .withColumn("label_next_7d", col("purchases_next_7d") > 0)
   }
 
   /** Cohort lifetime value: users grouped by first-seen month, revenue

@@ -54,12 +54,13 @@ object MicrostructureOps {
     require(nWindow > 1, s"nWindow=$nWindow must exceed 1")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
-    val hh = max(cts("high")).over(w)
-    val ll = min(cts("low")).over(w)
-    val num = hh - cts("close")
+    val (hh, ll) = (col("__hh"), col("__ll"))
+    val num = hh - col("__c")
     val den = hh - ll
-    spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+
+    spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+
+        max(cts("high")).over(w).as("__hh") :+ min(cts("low")).over(w).as("__ll")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+
         num.as("hh_minus_close_cents") :+ den.as("range_cents") :+
         when(den > 0, (num * -100).cast(DoubleType) / den.cast(DoubleType))
           .as("willr")): _*)
@@ -97,16 +98,20 @@ object MicrostructureOps {
         lit(s"aroon: |$c| cents "), raw.cast("string"),
         lit(s" exceeds the pack-exact bound $maxCents; rescale prices"))))
     }
-    val rn = row_number().over(wOrd).cast(LongType)
-    val base = spreadByKeys(rollup, keys).select(
-      (keys.map(col) :+ col(bucketCol) :+ rn.as("__rn") :+
+    val rn = col("__rn")
+    val base = spreadByKeys(rollup, keys)
+      .select((keys.map(col) :+ col(bucketCol) :+ col("high") :+ col("low") :+
+        row_number().over(wOrd).cast(LongType).as("__rn")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+ rn :+
         (guarded("high") * P + rn).as("__ph") :+
         (guarded("low") * P + (lit(P - 1) - rn)).as("__pl")): _*)
-    val m = count(lit(1)).over(w)
-    val sinceHigh = col("__rn") - pmod(max(col("__ph")).over(w), lit(P))
-    val sinceLow = col("__rn") - (lit(P - 1) - pmod(min(col("__pl")).over(w), lit(P)))
-    base.select(
-      (keys.map(col) :+ col(bucketCol) :+
+    val m = col("__m")
+    val sinceHigh = rn - pmod(col("__mph"), lit(P))
+    val sinceLow = rn - (lit(P - 1) - pmod(col("__mpl"), lit(P)))
+    base
+      .select((keys.map(col) :+ col(bucketCol) :+ rn :+ count(lit(1)).over(w).as("__m") :+
+        max(col("__ph")).over(w).as("__mph") :+ min(col("__pl")).over(w).as("__mpl")): _*)
+      .select((keys.map(col) :+ col(bucketCol) :+
         sinceHigh.as("bars_since_high") :+ sinceLow.as("bars_since_low") :+
         ((m - sinceHigh) * 100).cast(DoubleType).divide(m.cast(DoubleType))
           .as("aroon_up") :+
@@ -132,20 +137,22 @@ object MicrostructureOps {
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
     val tp3 = cts("high") + cts("low") + cts("close")
     val volC = CandleOps.volCentsCol(rollup, "volume")
-    val dir = tp3 - lag(tp3, 1).over(wOrd)
-    val mf = tp3 * volC
-    val base = spreadByKeys(rollup, keys).select(
+    val dir = col("__tp3") - col(CandleOps.lagName("__tp3", 1))
+    val mf = col("__tp3") * col("__v")
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ tp3.as("__tp3") :+ volC.as("__v")): _*)
+    val base = CandleOps.withLags(staged, "__tp3", 2, wOrd).select(
       (keys.map(col) :+ col(bucketCol) :+
         when(dir > 0, mf).otherwise(lit(0L)).as("__pos") :+
         when(dir < 0, mf).otherwise(lit(0L)).as("__neg")): _*)
-    val pos = sum(col("__pos")).over(w)
-    val neg = sum(col("__neg")).over(w)
-    base.select(
-      (keys.map(col) :+ col(bucketCol) :+
-        pos.as("pos_flow") :+ neg.as("neg_flow") :+
-        when(pos + neg > 0,
-          (pos * 100).cast(DoubleType) / (pos + neg).cast(DoubleType))
-          .as("mfi")): _*)
+    val pos = col("pos_flow")
+    val neg = col("neg_flow")
+    base
+      .select((keys.map(col) :+ col(bucketCol) :+
+        sum(col("__pos")).over(w).as("pos_flow") :+
+        sum(col("__neg")).over(w).as("neg_flow")): _*)
+      .withColumn("mfi", when(pos + neg > 0,
+        (pos * 100).cast(DoubleType) / (pos + neg).cast(DoubleType)))
   }
 
   /** Commodity channel index, exactly: CCI = (tp − SMA)/(0.015·MD)
@@ -242,10 +249,12 @@ object MicrostructureOps {
       bucketCol: String
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
-    val d = cts("close") - lag(cts("close"), 1).over(wOrd)
+    val d = col("__c") - col(CandleOps.lagName("__c", 1))
     val volC = CandleOps.volCentsCol(rollup, "volume")
-    val sv = signum(d).cast(LongType) * volC
-    val base = spreadByKeys(rollup, keys).select(
+    val sv = signum(d).cast(LongType) * col("__v")
+    val staged = spreadByKeys(rollup, keys).select(
+      (keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+ volC.as("__v")): _*)
+    val base = CandleOps.withLags(staged, "__c", 2, wOrd).select(
       (keys.map(col) :+ d.as("__y") :+ sv.as("__x")): _*)
       .filter(col("__y").isNotNull)
     val n = count(lit(1))

@@ -349,11 +349,20 @@ class CandleOpsSpec extends SparkSpec {
     }
   }
 
+  /** Exact truncated-EWMA numerator and denominator at row `t` of `xs`
+    * over the trailing `n` values: weights (n-1)^j (n+1)^(n-1-j). */
+  private def emaRef(xs: Seq[Long], t: Int, n: Int): (BigInt, BigInt) =
+    (0 until n).filter(j => t - j >= 0).map { j =>
+      val w = BigInt(n - 1).pow(j) * BigInt(n + 1).pow(n - 1 - j)
+      (w * xs(t - j), w)
+    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+
   test("emaNumDen hybrid: values past the long-split bound take the exact decimal branch") {
-    // n=3 weights [16, 8, 4] split at s=3 -> partMax 4, long bound
-    // 2^62/12 ~ 3.8e17 cents. A close of 2^55 dollars (cents 2^57*25,
-    // double-exact) is far past it: the r15 guard RAISED here; the
-    // hybrid must compute the same exact decimal value per row.
+    // n=3 weights [16, 8, 4] are under 32 bits, so no hi/lo split
+    // (s = 0): partMax 16, long bound 2^62/48 ~ 9.6e16 cents. A close
+    // of 2^55 dollars (cents 2^57*25, double-exact) is far past it: the
+    // r15 guard RAISED here; the hybrid must compute the same exact
+    // decimal value per row.
     val huge = math.pow(2, 55) // dollars; cents = 2^55*100, exact
     val c1 = BigInt(2).pow(55) * 100
     val rows = Seq(
@@ -394,6 +403,61 @@ class CandleOpsSpec extends SparkSpec {
     val ev = CandleOps.ewmaVolatility(mv, Seq("sym"), "bucket_ts", "close")
       .select("ewma_vol_cents").as[Option[Double]].collect().flatten
     assert(ev.toSeq == Seq(1.0e9))
+
+    // macd slow=13 and keltner emaN=13: n=13 weights peak at 14^12 (46
+    // bits), so they split hi/lo at s = 23 (partMax 6,946,816, long
+    // bound 2^62/(13*partMax) ~ 5.1e10 cents). Rows whose trailing 13
+    // closes stay under $510M take the split long branch; once a $1B
+    // close enters the frame the row takes the decimal branch. Either
+    // way the value is the exact rational.
+    val closes = Seq(100.25, 101.5, 99.75, 1.0e9, 1.0e9 + 0.5, 102.0, 1.0e9 - 3.25)
+    val xs = closes.map(c => math.round(c * 100))
+    val pastBound = closes.zipWithIndex.map { case (c, i) =>
+      ("S", new Timestamp(ts("2024-03-01 00:00:00").getTime + i * 3600000L),
+        c + 1.0, c - 1.0, c)
+    }.toDF("sym", "bucket_ts", "high", "low", "close")
+    val md = CandleOps.macd(pastBound, Seq("sym"), "bucket_ts", "close",
+      fast = 6, slow = 13, signalN = 5)
+      .select("bucket_ts", "macd_cents", "macd_micro", "signal_micro", "hist_micro")
+      .as[(Timestamp, Double, Long, Double, Double)].collect().sortBy(_._1.getTime).toSeq
+    val macd = xs.indices.map { t =>
+      val (nf, df) = emaRef(xs, t, 6)
+      val (ns, ds) = emaRef(xs, t, 13)
+      (nf * ds - ns * df).toDouble / (df * ds).toDouble
+    }
+    val micro = macd.map(m => math.floor(m * 1000000.0).toLong)
+    // the signal pass (n=5) also sees micro-cents past its long bound
+    assert(micro.exists(m => math.abs(m) > 711679941115337L))
+    xs.indices.foreach { t =>
+      val (nSig, dSig) = emaRef(micro, t, 5)
+      val signal = nSig.toDouble / dSig.toDouble
+      assert(md(t)._2 == macd(t), s"macd_cents row $t")
+      assert(md(t)._3 == micro(t), s"macd_micro row $t")
+      assert(md(t)._4 == signal, s"signal_micro row $t")
+      assert(md(t)._5 == micro(t).toDouble - signal, s"hist_micro row $t")
+    }
+
+    val (atrN, k) = (3, 2)
+    val kc = CandleOps.keltner(pastBound, Seq("sym"), "bucket_ts",
+      emaN = 13, atrN = atrN, k = k)
+      .select("bucket_ts", "tr_cents", "mid_cents", "upper_cents", "lower_cents")
+      .as[(Timestamp, Long, Double, Double, Double)].collect().sortBy(_._1.getTime).toSeq
+    // high/low sit 100 cents either side of the close
+    val tr = xs.indices.map { t =>
+      if (t == 0) 200L
+      else Seq(200L, math.abs(xs(t) + 100 - xs(t - 1)), math.abs(xs(t) - 100 - xs(t - 1))).max
+    }
+    xs.indices.foreach { t =>
+      val (ne, de) = emaRef(xs, t, 13)
+      val frame = tr.slice(math.max(0, t - atrN + 1), t + 1)
+      val (trSum, trCnt) = (BigInt(frame.sum), BigInt(frame.size))
+      assert(kc(t)._2 == tr(t), s"tr_cents row $t")
+      assert(kc(t)._3 == ne.toDouble / de.toDouble, s"mid_cents row $t")
+      assert(kc(t)._4 == (ne * trCnt + k * trSum * de).toDouble / (de * trCnt).toDouble,
+        s"upper_cents row $t")
+      assert(kc(t)._5 == (ne * trCnt - k * trSum * de).toDouble / (de * trCnt).toDouble,
+        s"lower_cents row $t")
+    }
   }
 
   test("resample spans spread survives as a RANGE exchange (a hash spread is planner-elided)") {

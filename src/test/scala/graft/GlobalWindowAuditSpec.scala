@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -19,6 +21,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * exchange. Each allowance names that bound. Anything new that plans
   * a global window over raw rows must restructure (partition the
   * window, or pre-aggregate) rather than extend the list.
+  *
+  * The same planning pass also checks that no `Window` operator
+  * evaluates a window function twice. Catalyst's analyzer
+  * (`ExtractWindowExpressions`) gives every `WindowExpression`
+  * occurrence its own `_weN` output and nothing dedupes them, so an
+  * operator that writes `lag(x, j).over(w)` into two expressions
+  * computes that lag twice per row; the engine stages each lag and
+  * rolling frame once as a named column instead. That audit has no
+  * allow-list.
   */
 class GlobalWindowAuditSpec extends SparkSpec {
 
@@ -45,6 +56,17 @@ class GlobalWindowAuditSpec extends SparkSpec {
     "q_topk_churn" -> "day-lag window over the distinct-days frame (rows = observed days)"
   )
 
+  /** Every SparkEntry query, planned once for both audits. */
+  private lazy val planned: Seq[(String, QueryExecution)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe =
+        try { val qe = fn(spark, sfDir).queryExecution; qe.executedPlan; qe }
+        catch { case e: Throwable =>
+          fail(s"$name failed to plan: ${e.getMessage}")
+        }
+      name -> qe
+    }
+
   private def globalWindows(plan: SparkPlan): Seq[String] = plan.collect {
     case w: WindowExec if w.partitionSpec.isEmpty =>
       s"WindowExec[${w.windowExpression.map(_.name).mkString(",")}]"
@@ -56,13 +78,8 @@ class GlobalWindowAuditSpec extends SparkSpec {
   test("global (single-partition) windows only over bounded inputs") {
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
     val seen = scala.collection.mutable.Set.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan =
-        try fn(spark, sfDir).queryExecution.executedPlan
-        catch { case e: Throwable =>
-          fail(s"$name failed to plan: ${e.getMessage}")
-        }
-      val gw = globalWindows(plan)
+    planned.foreach { case (name, qe) =>
+      val gw = globalWindows(qe.executedPlan)
       if (gw.nonEmpty) {
         seen += name
         if (!boundedGlobalWindow.contains(name))
@@ -73,5 +90,22 @@ class GlobalWindowAuditSpec extends SparkSpec {
       s"unexplained global windows (single-partition at scale):\n  ${offenders.mkString("\n  ")}")
     val stale = boundedGlobalWindow.keySet.diff(seen)
     assert(stale.isEmpty, s"stale global-window allowances: $stale")
+  }
+
+  test("every Window operator holds pairwise-distinct window expressions") {
+    val offenders = planned.flatMap { case (name, qe) =>
+      val slots = qe.optimizedPlan.collect { case w: Window =>
+        val exprs = w.windowExpressions.map {
+          case a: Alias => a.child.canonicalized
+          case e => e.canonicalized
+        }
+        (exprs.size, exprs.distinct.size)
+      }
+      val (total, distinct) = (slots.map(_._1).sum, slots.map(_._2).sum)
+      if (total > distinct) Some(s"$name $total/$distinct") else None
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} queries evaluate a window function more than once " +
+        s"(query total/distinct):\n  ${offenders.mkString("\n  ")}")
   }
 }
