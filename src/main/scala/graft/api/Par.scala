@@ -62,15 +62,14 @@ object Par {
     * Filter, aliasing wrappers); anything else conservatively answers
     * "not bucketed" and spreads.
     *
-    * Known boundary (r15 advice): only bucketed SCANS are recognized.
-    * A frame already hash-partitioned on the keys by an upstream
-    * repartition/aggregate still gets the explicit exchange — correct,
-    * and for the engine's call sites budget-pinned, but a library
-    * caller should NOT pre-partition before a spreadKeyed call site
-    * (the pin would add one exchange where the window previously
-    * reused the upstream partitioning). Checking the physical output
-    * partitioning instead would require planning the frame here and
-    * racing AQE's re-planning; documented rather than guessed.
+    * Only bucketed SCANS are recognized here, and nothing more is
+    * needed: over a frame already hash-partitioned on the keys the
+    * planner drops the spread's exchange. Over a `groupBy(keys)` it is
+    * removed as identical to the aggregate's own exchange, which keeps
+    * its ENSURE_REQUIREMENTS origin; over a `repartition(n, keys)` at
+    * the same width the two collapse into one REPARTITION_BY_NUM
+    * exchange. Either plan holds exactly one exchange
+    * (ExchangeBudgetSpec pins both).
     */
   def spreadKeyed(df: DataFrame, keyNames: Seq[String]): DataFrame =
     if (keyNames.isEmpty || bucketedOn(df.queryExecution.analyzed, keyNames)) df

@@ -70,7 +70,7 @@ object BloomStream {
     * contributions.
     */
   def readWordRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(storePath))
+    if (!exists(spark, storePath))
       spark.range(0).select(col("id").cast("int").as("__w"),
         col("id").as("__bits"))
     else
@@ -84,12 +84,12 @@ object BloomStream {
       spark: SparkSession, storePath: String, numWords: Int): Array[Long] =
     BloomOps.wordsArray(readWordRows(spark, storePath), numWords)
 
-  private def exists(path: String): Boolean =
-    partitions(path).nonEmpty
+  private def exists(spark: SparkSession, path: String): Boolean =
+    partitions(spark, path).nonEmpty
 
-  private def partitions(path: String): Seq[String] = {
+  private def partitions(spark: SparkSession, path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("batch_seq="))
@@ -157,7 +157,7 @@ object BloomStream {
     * per-batch contributions — never collected, never a plan literal.
     */
   def readShardRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(storePath))
+    if (!exists(spark, storePath))
       spark.range(0).select(col("id").cast("int").as("__shard"),
         col("id").cast("int").as("__w"), col("id").as("__bits"))
     else
@@ -193,7 +193,7 @@ object BloomStream {
     * partitions (everything listed BEFORE the write) are swept after.
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
-    val before = partitions(storePath)
+    val before = partitions(spark, storePath)
     if (before.size <= 1) return
     val n = before.filter(_.startsWith("compact-"))
       .map(_.stripPrefix("compact-").toLong)
@@ -210,7 +210,7 @@ object BloomStream {
       .partitionBy("batch_seq")
       .parquet(storePath)
     val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     before.foreach { part =>
       fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_seq=$part"), true)
     }

@@ -73,7 +73,7 @@ object BoilerplateStream {
       storePath: String,
       except: String = null
   ): DataFrame =
-    if (!exists(storePath))
+    if (!exists(spark, storePath))
       spark.range(0).select(col("id").as("__h"), col("id").as("__nd"))
     else {
       val all = spark.read.parquet(storePath)
@@ -115,9 +115,9 @@ object BoilerplateStream {
     TextOps.scrubAgainst(batch, idCol, textCol,
       frequentHashes(batch.sparkSession, storePath, minDocs, except))
 
-  private def exists(path: String): Boolean = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(p) && fs.listStatus(p).exists(st =>
       st.getPath.getName.startsWith("batch_seq="))
   }

@@ -64,7 +64,7 @@ object CmsStream {
     * fold): one sum re-aggregation across per-batch contributions.
     */
   def readCellRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(storePath))
+    if (!exists(spark, storePath))
       spark.range(0).select(col("id").cast("int").as("__d"),
         col("id").cast("int").as("__c"), col("id").as("__count"))
     else
@@ -81,9 +81,9 @@ object CmsStream {
   ): Array[Long] =
     CmsOps.cellsArray(readCellRows(spark, storePath), width, depth)
 
-  private def exists(path: String): Boolean = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(p) && fs.listStatus(p).exists(st =>
       st.getPath.getName.startsWith("batch_seq="))
   }

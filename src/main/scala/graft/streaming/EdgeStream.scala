@@ -129,6 +129,11 @@ object EdgeStream {
     d.take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Known limit: the manifest is read and flipped through `java.nio`,
+    * so the store works on local paths only. The delta and generation
+    * files go through the session's Hadoop conf, but a store on another
+    * filesystem scheme fails at the manifest.
+    */
   private def manifest(storePath: String) =
     java.nio.file.Paths.get(storePath, "CURRENT")
 
@@ -207,9 +212,9 @@ object EdgeStream {
     * optionally restricted to one epoch's prefix.
     */
   private def listDeltaPartitions(
-      storePath: String, epoch: Option[Long]): Seq[String] = {
+      spark: SparkSession, storePath: String, epoch: Option[Long]): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(deltaDir(storePath))
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Seq.empty
     else {
       val names = fs.listStatus(p).toSeq.map(_.getPath.getName)
@@ -228,7 +233,7 @@ object EdgeStream {
     */
   private def readDeltas(
       spark: SparkSession, storePath: String, epoch: Long): Option[DataFrame] =
-    if (listDeltaPartitions(storePath, Some(epoch)).isEmpty) None
+    if (listDeltaPartitions(spark, storePath, Some(epoch)).isEmpty) None
     else Some(
       spark.read.parquet(deltaDir(storePath))
         .filter(col("batch_seq").startsWith(epochPrefix(epoch)))
@@ -368,7 +373,7 @@ object EdgeStream {
       spark: SparkSession, storePath: String, compactEvery: Int): Unit = {
     val (_, _, _, epoch) = readManifest(storePath)
     if (compactEvery > 0 &&
-        listDeltaPartitions(storePath, Some(epoch)).size >= compactEvery)
+        listDeltaPartitions(spark, storePath, Some(epoch)).size >= compactEvery)
       compact(spark, storePath)
   }
 
@@ -385,7 +390,7 @@ object EdgeStream {
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
     val (gen, lastApplied, key, epoch) = readManifest(storePath)
-    val open = listDeltaPartitions(storePath, Some(epoch))
+    val open = listDeltaPartitions(spark, storePath, Some(epoch))
     if (open.isEmpty) return
     val base =
       if (gen < 0)
@@ -412,8 +417,8 @@ object EdgeStream {
     // partitions plus any stragglers from earlier interrupted sweeps);
     // a failure here only leaves invisible garbage for the next sweep
     val p = new org.apache.hadoop.fs.Path(deltaDir(storePath))
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    listDeltaPartitions(storePath, None)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    listDeltaPartitions(spark, storePath, None)
       .filterNot(_.startsWith(epochPrefix(epoch + 1)))
       .foreach { part =>
         fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_seq=$part"), true)

@@ -92,20 +92,20 @@ object SubstringStream {
     * batch_seq).
     */
   def readSpans(spark: SparkSession, spansPath: String): DataFrame = {
-    require(exists(spansPath), s"no spans landed at $spansPath")
+    require(exists(spark, spansPath), s"no spans landed at $spansPath")
     spark.read.parquet(spansPath)
   }
 
-  private def exists(path: String): Boolean = {
+  private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(p) && fs.listStatus(p).exists(st =>
       st.getPath.getName.startsWith("batch_seq="))
   }
 
   private def readStoreExcept(
       spark: SparkSession, storePath: String, except: String): DataFrame =
-    if (!exists(storePath))
+    if (!exists(spark, storePath))
       spark.range(0).select(col("id").as("__h"))
     else {
       val all = spark.read.parquet(storePath)

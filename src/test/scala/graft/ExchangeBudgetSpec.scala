@@ -384,6 +384,33 @@ class ExchangeBudgetSpec extends SparkSpec {
     assert(over.isEmpty, s"shuffle budget violations:\n  ${over.mkString("\n  ")}")
   }
 
+  test("spreadKeyed over a child already hash-partitioned on the keys plans one exchange") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number, sum}
+    import spark.implicits._
+    val keys = Seq("sym", "day")
+    val base = Seq(("a", 1, 1L, 1.0), ("a", 1, 2L, 2.0), ("a", 2, 3L, 3.0),
+      ("b", 1, 1L, 4.0), ("b", 2, 2L, 5.0)).toDF("sym", "day", "t", "v")
+    val byKey = Window.partitionBy(keys.map(col): _*).orderBy(col("v"))
+    val children = Seq(
+      // the planner drops the spread as identical to the aggregate's
+      // own exchange, which keeps its coalescible origin
+      "groupBy" -> (base.groupBy(keys.map(col): _*).agg(sum("v").as("v")),
+        "ENSURE_REQUIREMENTS"),
+      // the spread collapses into the identical repartition below it
+      "repartition" -> (base.repartition(
+        spark.sessionState.conf.numShufflePartitions, keys.map(col): _*),
+        "REPARTITION_BY_NUM"))
+    children.foreach { case (name, (child, origin)) =>
+      val plan = graft.api.Par.spreadKeyed(child, keys)
+        .withColumn("r", row_number().over(byKey))
+        .queryExecution.executedPlan.toString
+      assert(graft.tools.ExchangeAudit.shuffleExchanges(plan) == 1, s"$name:\n$plan")
+      val origins = "(ENSURE_REQUIREMENTS|REPARTITION_BY_NUM)".r.findAllIn(plan).toSeq
+      assert(origins == Seq(origin), s"$name:\n$plan")
+    }
+  }
+
   test("no stale pins: every budget entry names a live query") {
     val stale = budgets.keySet.diff(SparkEntry.queries.keySet)
     assert(stale.isEmpty, s"budget entries for removed queries: $stale")
