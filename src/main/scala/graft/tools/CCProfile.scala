@@ -14,6 +14,7 @@ object CCProfile {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

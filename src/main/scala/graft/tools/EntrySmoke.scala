@@ -12,6 +12,7 @@ object EntrySmoke {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.entry(spark)

@@ -15,6 +15,7 @@ object PlanLab {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -15,6 +16,11 @@ import scala.collection.mutable
   * Also writes each query's `.explain("formatted")` to
   * `plans/r15/<query>_<tag>.txt` when a tag is given — the round's
   * plan-evidence deliverable.
+  *
+  * Each PROFILE line also carries `compiles=`: the classes Janino
+  * compiled during the warm pass (CodegenMetrics). A warm pass should
+  * compile 0; more means its generated classes were evicted from the
+  * codegen cache or differ between runs (per-run literals in the code).
   *
   * Usage: runMain graft.tools.ProfileQuery [--plans=<tag>] q1 q2 ...
   */
@@ -124,14 +130,16 @@ object ProfileQuery {
               java.nio.file.Files.writeString(dir.resolve(s"${name}_$tag.txt"), txt)
             }
             listener.rows.synchronized(listener.rows.clear())
+            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()
             consume(fn(spark, sfDir))
             val wall = (System.nanoTime() - t0) / 1e9
+            val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
             // listener bus is async; give it a beat to drain
             Thread.sleep(300)
             val rows = listener.rows.synchronized(listener.rows.toVector).sortBy(-_.taskMs)
             println(f"PROFILE $name wall=$wall%.2f s, ${rows.length} stages, " +
-              f"jobsTaskTime=${rows.map(_.taskMs).sum / 1e3}%.2f s")
+              f"jobsTaskTime=${rows.map(_.taskMs).sum / 1e3}%.2f s, compiles=$compiles")
             rows.take(14).foreach { r =>
               println(f"  stage ${r.stageId}%4d ${r.wallMs}%6d ms wall ${r.taskMs}%7d ms task gc=${r.gcMs}%6d ms " +
                 f"${r.numTasks}%4d tasks in=${r.inputBytes / 1024}%8d KB sr=${r.shuffleReadBytes / 1024}%8d KB " +

@@ -27,7 +27,9 @@ object StreamBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
