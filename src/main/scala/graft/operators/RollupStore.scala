@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.BatchSeqStore
+
 /** Materialized-rollup maintenance over month-partitioned parquet — the
   * Spark restatement of the reference's rollup repair machinery:
   *
@@ -174,13 +176,8 @@ object RollupStore {
     val window = base.filter(col(tsCol) >= monthLo && col(tsCol) < monthHi)
     val recomputed = withMonth(
       CandleOps.ohlcvRollup(window, keys, tsCol, valueCol, grain))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try recomputed.write.mode("overwrite").partitionBy(PartitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    recomputed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(PartitionCol).parquet(path)
   }
 
   /** Keyed upsert — the MERGE / ReplacingMergeTree-write analog for a
@@ -230,14 +227,9 @@ object RollupStore {
     // it was computed from (correct under the default committer's
     // staging, but not guaranteed across committers).
     val merged = if (exists) merged0.localCheckpoint(true) else merged0
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode(if (exists) "overwrite" else "errorifexists")
+    merged.write.mode(if (exists) "overwrite" else "errorifexists")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(PartitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
   }
 
   /** Small-file compaction — the `OPTIMIZE TABLE` analog for streaming
@@ -278,8 +270,7 @@ object RollupStore {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val twoLevel = months.exists { m =>
       val md = new org.apache.hadoop.fs.Path(root, s"$PartitionCol=$m")
-      fs.exists(md) && fs.listStatus(md).exists(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_seq="))
+      fs.exists(md) && BatchSeqStore.partsOf(fs.listStatus(md)).nonEmpty
     }
     if (twoLevel) { compactBatchSeqMonths(spark, fs, root, months, targetRowsPerFile); return }
     val df = spark.read.parquet(path)
@@ -289,14 +280,9 @@ object RollupStore {
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
     val nFiles = math.max(1,
       math.ceil(counts.values.sum.toDouble / targetRowsPerFile).toInt)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.repartition(nFiles, col(PartitionCol))
-      .write.mode("overwrite").partitionBy(PartitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    df.repartition(nFiles, col(PartitionCol))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(PartitionCol).parquet(path)
   }
 
   /** Streaming-sink layout compaction: fold each month's
@@ -340,14 +326,12 @@ object RollupStore {
       val monthDir = new Path(root, s"$PartitionCol=$m")
       if (fs.exists(monthDir)) {
         recoverPendingCompaction(fs, monthDir)
-        val victims = fs.listStatus(monthDir).filter(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch_seq=")).map(_.getPath)
-        val alreadyFolded = victims.length == 1 &&
-          victims.head.getName.startsWith("batch_seq=compacted-")
+        val parts = BatchSeqStore.partsOf(fs.listStatus(monthDir))
+        val victims = parts.map(BatchSeqStore.dir(monthDir, _))
+        val alreadyFolded = parts.length == 1 && parts.head.startsWith("compacted-")
         if (victims.nonEmpty && !alreadyFolded) {
           onAfterVictimList(m)
-          val gen = victims.flatMap { p =>
-            val nm = p.getName.stripPrefix("batch_seq=")
+          val gen = parts.flatMap { nm =>
             if (nm.startsWith("compacted-"))
               scala.util.Try(nm.stripPrefix("compacted-").toLong).toOption
             else None
@@ -362,7 +346,7 @@ object RollupStore {
           val rows = spark.read
             .option("basePath", root.toString)
             .parquet(victims.map(_.toString): _*)
-            .drop(PartitionCol, "batch_seq")
+            .drop(PartitionCol, BatchSeqStore.Col)
           val n = rows.count()
           val nFiles = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
           val tmp = new Path(monthDir, s".compact_tmp_$gen")
@@ -371,7 +355,7 @@ object RollupStore {
           val out = fs.create(marker, true)
           try out.write(victims.map(_.getName).mkString("\n").getBytes("UTF-8"))
           finally out.close()
-          val dest = new Path(monthDir, s"batch_seq=compacted-$gen")
+          val dest = BatchSeqStore.dir(monthDir, s"compacted-$gen")
           if (!fs.rename(tmp, dest))
             throw new java.io.IOException(s"compaction commit rename failed: $tmp -> $dest")
           victims.foreach(p => fs.delete(p, true))
@@ -393,7 +377,7 @@ object RollupStore {
       .filter(_.getPath.getName.startsWith("._compact_pending_"))
       .foreach { st =>
         val gen = st.getPath.getName.stripPrefix("._compact_pending_")
-        val dest = new Path(monthDir, s"batch_seq=compacted-$gen")
+        val dest = BatchSeqStore.dir(monthDir, s"compacted-$gen")
         if (fs.exists(dest)) {
           // committed: finish deleting the victims it replaced
           val in = fs.open(st.getPath)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.BloomOps
 
@@ -17,8 +17,7 @@ import graft.operators.BloomOps
   * commutative, and associative, so the folded filter is independent
   * of batch boundaries, arrival order, AND replays — a re-delivered
   * batch re-ORs bits that are already set. The store still writes
-  * each batch's contribution under its own `batch_seq=<key>-<id>`
-  * partition (dynamic overwrite, the [[SubstringStream]] layout) so a
+  * each batch's contribution as its own [[BatchSeqStore]] part so a
   * torn write never leaves a partial partition visible next to a
   * committed one, but unlike the edge store's generation fold or the
   * substring store's anti-join, correctness here needs NO manifest,
@@ -37,17 +36,10 @@ object BloomStream {
       k: Int,
       storePath: String,
       checkpoint: String
-  ): DataStreamWriter[Row] = {
-    val key = EdgeStream.streamKey(checkpoint)
-    keys.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, keyCol, numWords, k, storePath,
-          f"$key%s-$batchId%09d")
-      }
-  }
+  ): DataStreamWriter[Row] =
+    BatchSeqStore.sink(keys, checkpoint) { (batch, _, part) =>
+      foldBatch(batch, keyCol, numWords, k, storePath, part)
+    }
 
   private[graft] def foldBatch(
       batch: DataFrame,
@@ -57,25 +49,17 @@ object BloomStream {
       storePath: String,
       part: String
   ): Unit =
-    BloomOps.bloomWordRows(batch, keyCol, numWords, k)
-      .withColumn("batch_seq", lit(part))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(storePath)
+    BatchSeqStore.write(BloomOps.bloomWordRows(batch, keyCol, numWords, k), storePath, part)
 
   /** The folded filter as sparse word rows (empty before the first
     * fold): one bit_or re-aggregation across the per-batch
     * contributions.
     */
   def readWordRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(spark, storePath))
-      spark.range(0).select(col("id").cast("int").as("__w"),
-        col("id").as("__bits"))
-    else
-      spark.read.parquet(storePath)
-        .groupBy(col("__w")).agg(expr("bit_or(__bits)").as("__bits"))
+    BatchSeqStore.read(spark, storePath)
+      .map(_.groupBy(col("__w")).agg(expr("bit_or(__bits)").as("__bits")))
+      .getOrElse(spark.range(0).select(col("id").cast("int").as("__w"),
+        col("id").as("__bits")))
 
   /** The folded filter dense — ready for
     * [[BloomOps.flagBatch]]/[[BloomOps.mightContainFromHashes]].
@@ -83,18 +67,6 @@ object BloomStream {
   def readWords(
       spark: SparkSession, storePath: String, numWords: Int): Array[Long] =
     BloomOps.wordsArray(readWordRows(spark, storePath), numWords)
-
-  private def exists(spark: SparkSession, path: String): Boolean =
-    partitions(spark, path).nonEmpty
-
-  private def partitions(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch_seq="))
-      .map(_.stripPrefix("batch_seq="))
-  }
 
   // ---- sharded store: the 100 TB path --------------------------------
   //
@@ -123,17 +95,10 @@ object BloomStream {
       k: Int,
       storePath: String,
       checkpoint: String
-  ): DataStreamWriter[Row] = {
-    val key = EdgeStream.streamKey(checkpoint)
-    keys.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatchSharded(batch, keyCol, nShards, wordsPerShard, k, storePath,
-          f"$key%s-$batchId%09d")
-      }
-  }
+  ): DataStreamWriter[Row] =
+    BatchSeqStore.sink(keys, checkpoint) { (batch, _, part) =>
+      foldBatchSharded(batch, keyCol, nShards, wordsPerShard, k, storePath, part)
+    }
 
   private[graft] def foldBatchSharded(
       batch: DataFrame,
@@ -144,26 +109,18 @@ object BloomStream {
       storePath: String,
       part: String
   ): Unit =
-    BloomOps.bloomShardRows(batch, keyCol, nShards, wordsPerShard, k)
-      .withColumn("batch_seq", lit(part))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(storePath)
+    BatchSeqStore.write(
+      BloomOps.bloomShardRows(batch, keyCol, nShards, wordsPerShard, k), storePath, part)
 
   /** The folded sharded filter as a cluster-resident relation (empty
     * before the first fold): one bit_or re-aggregation across the
     * per-batch contributions — never collected, never a plan literal.
     */
   def readShardRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(spark, storePath))
-      spark.range(0).select(col("id").cast("int").as("__shard"),
-        col("id").cast("int").as("__w"), col("id").as("__bits"))
-    else
-      spark.read.parquet(storePath)
-        .groupBy(col("__shard"), col("__w"))
-        .agg(expr("bit_or(__bits)").as("__bits"))
+    BatchSeqStore.read(spark, storePath)
+      .map(_.groupBy(col("__shard"), col("__w")).agg(expr("bit_or(__bits)").as("__bits")))
+      .getOrElse(spark.range(0).select(col("id").cast("int").as("__shard"),
+        col("id").cast("int").as("__w"), col("id").as("__bits")))
 
   /** Probe a batch against the folded sharded store by JOIN — the
     * streaming read side of [[BloomOps.flagBatchSharded]]: probe
@@ -193,7 +150,7 @@ object BloomStream {
     * partitions (everything listed BEFORE the write) are swept after.
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
-    val before = partitions(spark, storePath)
+    val before = BatchSeqStore.parts(spark, storePath)
     if (before.size <= 1) return
     val n = before.filter(_.startsWith("compact-"))
       .map(_.stripPrefix("compact-").toLong)
@@ -202,17 +159,7 @@ object BloomStream {
     // (Spark refuses a write whose path is also being read); bounded
     // by the filter's (bits)/64 row budget, cluster-resident
     val folded = readShardRows(spark, storePath).localCheckpoint(true)
-    folded
-      .withColumn("batch_seq", lit(f"compact-$n%09d"))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(storePath)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    before.foreach { part =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_seq=$part"), true)
-    }
+    BatchSeqStore.write(folded, storePath, f"compact-$n%09d")
+    BatchSeqStore.sweep(spark, storePath, before)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.TextOps
 
@@ -20,11 +20,11 @@ import graft.functions.TextOps
   * contributions and the read-side SUM is exactly the whole-corpus
   * distinct-doc count per line. Like [[CmsStream]], exactly-once is
   * the PARTITION contract, not algebra: sums would double-count on a
-  * replay, so each batch's contribution lands as a dynamic overwrite
-  * of its own `batch_seq=<key>-<id>` partition and a replay REPLACES
-  * its prior rows. Store maintenance is batch-proportional (one
-  * count row per distinct line hash in the batch — 16 bytes each,
-  * never line text); the read fold is one sum re-aggregation.
+  * replay, so each batch's contribution lands as its own
+  * [[BatchSeqStore]] part and a replay REPLACES its prior rows. Store
+  * maintenance is batch-proportional (one count row per distinct line
+  * hash in the batch — 16 bytes each, never line text); the read fold
+  * is one sum re-aggregation.
   */
 object BoilerplateStream {
 
@@ -34,16 +34,10 @@ object BoilerplateStream {
       textCol: String,
       storePath: String,
       checkpoint: String
-  ): DataStreamWriter[Row] = {
-    val key = EdgeStream.streamKey(checkpoint)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, textCol, storePath, f"$key%s-$batchId%09d")
-      }
-  }
+  ): DataStreamWriter[Row] =
+    BatchSeqStore.sink(docs, checkpoint) { (batch, _, part) =>
+      foldBatch(batch, idCol, textCol, storePath, part)
+    }
 
   private[graft] def foldBatch(
       batch: DataFrame,
@@ -52,16 +46,12 @@ object BoilerplateStream {
       storePath: String,
       part: String
   ): Unit =
-    TextOps.lineRows(batch, idCol, textCol)
-      .select(col(idCol), col("__h"))
-      .groupBy(col("__h"))
-      .agg(countDistinct(col(idCol)).as("__nd"))
-      .withColumn("batch_seq", lit(part))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(storePath)
+    BatchSeqStore.write(
+      TextOps.lineRows(batch, idCol, textCol)
+        .select(col(idCol), col("__h"))
+        .groupBy(col("__h"))
+        .agg(countDistinct(col(idCol)).as("__nd")),
+      storePath, part)
 
   /** The folded per-line distinct-doc counts (empty before the first
     * fold): one sum re-aggregation across per-batch contributions.
@@ -73,14 +63,9 @@ object BoilerplateStream {
       storePath: String,
       except: String = null
   ): DataFrame =
-    if (!exists(spark, storePath))
-      spark.range(0).select(col("id").as("__h"), col("id").as("__nd"))
-    else {
-      val all = spark.read.parquet(storePath)
-      val kept = if (except == null) all
-        else all.filter(col("batch_seq") =!= except)
-      kept.groupBy(col("__h")).agg(sum(col("__nd")).as("__nd"))
-    }
+    BatchSeqStore.read(spark, storePath, except)
+      .map(_.groupBy(col("__h")).agg(sum(col("__nd")).as("__nd")))
+      .getOrElse(spark.range(0).select(col("id").as("__h"), col("id").as("__nd")))
 
   /** Line hashes whose standing distinct-doc count has reached
     * `minDocs` — the removal set a batch scrubs against.
@@ -114,11 +99,4 @@ object BoilerplateStream {
   ): DataFrame =
     TextOps.scrubAgainst(batch, idCol, textCol,
       frequentHashes(batch.sparkSession, storePath, minDocs, except))
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.getPath.getName.startsWith("batch_seq="))
-  }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.CmsOps
 
@@ -15,10 +15,10 @@ import graft.operators.CmsOps
   * Exactly-once is the PARTITION contract, not algebra: unlike the
   * bloom store's bit_or (where a replayed batch re-ORs set bits), a
   * re-summed batch would double-count — so each batch's contribution
-  * lands as a dynamic overwrite of its own `batch_seq=<key>-<id>`
-  * partition, and a replay REPLACES its prior contribution instead of
-  * adding to it. Counts are mergeable across batches by plain
-  * addition, so batch boundaries and arrival order stay invisible.
+  * lands as its own [[BatchSeqStore]] part, and a replay REPLACES its
+  * prior contribution instead of adding to it. Counts are mergeable
+  * across batches by plain addition, so batch boundaries and arrival
+  * order stay invisible.
   * Store maintenance is batch-proportional (≤ min(depth·|batch|,
   * depth·width) rows per batch); the read fold is bounded by
   * [[CmsOps.MaxCells]]·nBatches rows.
@@ -32,17 +32,10 @@ object CmsStream {
       depth: Int,
       storePath: String,
       checkpoint: String
-  ): DataStreamWriter[Row] = {
-    val key = EdgeStream.streamKey(checkpoint)
-    keys.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, keyCol, width, depth, storePath,
-          f"$key%s-$batchId%09d")
-      }
-  }
+  ): DataStreamWriter[Row] =
+    BatchSeqStore.sink(keys, checkpoint) { (batch, _, part) =>
+      foldBatch(batch, keyCol, width, depth, storePath, part)
+    }
 
   private[graft] def foldBatch(
       batch: DataFrame,
@@ -52,25 +45,16 @@ object CmsStream {
       storePath: String,
       part: String
   ): Unit =
-    CmsOps.cmsRows(batch, keyCol, width, depth)
-      .withColumn("batch_seq", lit(part))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(storePath)
+    BatchSeqStore.write(CmsOps.cmsRows(batch, keyCol, width, depth), storePath, part)
 
   /** The folded sketch as sparse cell rows (empty before the first
     * fold): one sum re-aggregation across per-batch contributions.
     */
   def readCellRows(spark: SparkSession, storePath: String): DataFrame =
-    if (!exists(spark, storePath))
-      spark.range(0).select(col("id").cast("int").as("__d"),
-        col("id").cast("int").as("__c"), col("id").as("__count"))
-    else
-      spark.read.parquet(storePath)
-        .groupBy(col("__d"), col("__c"))
-        .agg(sum(col("__count")).as("__count"))
+    BatchSeqStore.read(spark, storePath)
+      .map(_.groupBy(col("__d"), col("__c")).agg(sum(col("__count")).as("__count")))
+      .getOrElse(spark.range(0).select(col("id").cast("int").as("__d"),
+        col("id").cast("int").as("__c"), col("id").as("__count")))
 
   /** The folded sketch dense — ready for [[CmsOps.estimateBatch]]. */
   def readCells(
@@ -80,11 +64,4 @@ object CmsStream {
       depth: Int
   ): Array[Long] =
     CmsOps.cellsArray(readCellRows(spark, storePath), width, depth)
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.getPath.getName.startsWith("batch_seq="))
-  }
 }

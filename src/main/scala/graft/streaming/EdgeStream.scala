@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.GraphOps
 
@@ -24,8 +29,8 @@ import graft.operators.GraphOps
   *
   * Store shape — delta partitions + compacted base. The per-trigger
   * fold writes ONLY the batch's aggregated pair supports under a
-  * `delta/batch_seq=e<epoch>-<key>-<id>` partition (dynamic
-  * overwrite, the [[SubstringStream]]/[[CmsStream]] layout): trigger
+  * `delta/batch_seq=e<epoch>-<key>-<id>` partition (a
+  * [[BatchSeqStore]] part, the epoch prefixed to its name): trigger
   * cost is bounded by the DELTA's pair volume, independent of the
   * standing store's size — at a 100 TB standing table the previous
   * read + full-outer + generation-overwrite shape rewrote the whole
@@ -52,7 +57,7 @@ import graft.operators.GraphOps
   * manifest regains the bucket metadata.
   *
   * Exactly-once: the manifest records (generation, last-applied
-  * batchId, stream key, epoch) and is flipped by an ATOMIC_MOVE;
+  * batchId, stream key, epoch) and is flipped by an atomic rename;
   * [[foldBatch]] skips when the incoming (streamKey, batchId) was
   * already applied. The crash windows compose: a crash BEFORE the
   * manifest write leaves lastApplied at the prior batch and the
@@ -105,37 +110,13 @@ object EdgeStream {
       checkpoint: String,
       compactEvery: Int = DefaultCompactEvery
   ): DataStreamWriter[Row] = {
-    val key = streamKey(checkpoint)
-    facts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, basketCol, itemCol, storePath, batchId, key,
-          compactEvery)
-      }
+    val key = BatchSeqStore.streamKey(checkpoint)
+    BatchSeqStore.sink(facts, checkpoint) { (batch, batchId, _) =>
+      foldBatch(batch, basketCol, itemCol, storePath, batchId, key, compactEvery)
+    }
   }
 
-  /** Batch-sequence identity: a digest of the checkpoint path. The
-    * checkpoint IS the sequence — batchIds are only comparable within
-    * one checkpoint's lifetime, and a restart of the same query reuses
-    * the same checkpoint (so replay detection survives restarts), while
-    * a replaced checkpoint yields a new key (so its restarted batch 0
-    * is recognized as new work, not a replay).
-    */
-  private[graft] def streamKey(checkpoint: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8"))
-    d.take(8).map(b => f"$b%02x").mkString
-  }
-
-  /** Known limit: the manifest is read and flipped through `java.nio`,
-    * so the store works on local paths only. The delta and generation
-    * files go through the session's Hadoop conf, but a store on another
-    * filesystem scheme fails at the manifest.
-    */
-  private def manifest(storePath: String) =
-    java.nio.file.Paths.get(storePath, "CURRENT")
+  private def manifest(storePath: String) = new Path(storePath, "CURRENT")
 
   /** Manifest = "(gen, lastAppliedBatchId, streamKey, epoch)";
     * (-1, -1, null, 0) before the first fold. Tolerates the legacy
@@ -143,10 +124,12 @@ object EdgeStream {
     * everything in the generation table and have no delta partitions
     * to misread).
     */
-  private def readManifest(storePath: String): (Int, Long, String, Long) = {
+  private def readManifest(
+      spark: SparkSession, storePath: String): (Int, Long, String, Long) = {
     val m = manifest(storePath)
-    if (!java.nio.file.Files.exists(m)) (-1, -1L, null, 0L)
-    else java.nio.file.Files.readString(m).trim.split("\\s+") match {
+    val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(m)) return (-1, -1L, null, 0L)
+    manifestText(fs, m).trim.split("\\s+") match {
       case Array(g)          => (g.toInt, -1L, null, 0L)
       case Array(g, b)       => (g.toInt, b.toLong, null, 0L)
       case Array(g, b, k)    => (g.toInt, b.toLong, if (k == "-") null else k, 0L)
@@ -156,24 +139,42 @@ object EdgeStream {
     }
   }
 
-  /** Flip the manifest via unique temp-file + ATOMIC_MOVE: readers see
-    * either the old committed (gen, batchId, key, epoch) or the new
-    * one, never a torn write (a truncated CURRENT would otherwise
-    * poison every later read of the store). The temp name is unique
-    * per writer (createTempFile), so even two misconfigured concurrent
-    * folds against one storePath cannot interleave on a shared temp
-    * file — last flip wins whole, never torn.
+  private def manifestText(fs: FileSystem, m: Path): String = {
+    val in = fs.open(m)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  /** Flip the manifest the way Spark's streaming metadata log commits
+    * (`CheckpointFileManager.createAtomic`: a unique hidden temp file,
+    * renamed over CURRENT on close): readers see either the old
+    * committed (gen, batchId, key, epoch) or the new one, never a torn
+    * write (a truncated CURRENT would otherwise poison every later read
+    * of the store). The temp name is unique per writer, so even two
+    * misconfigured concurrent folds against one storePath cannot
+    * interleave on a shared temp file — last flip wins whole, never
+    * torn. The store directory exists by then: the delta or generation
+    * write that precedes every flip created it.
     */
   private def writeManifest(
-      storePath: String, gen: Int, batchId: Long, key: String,
-      epoch: Long): Unit = {
+      spark: SparkSession, storePath: String, gen: Int, batchId: Long,
+      key: String, epoch: Long): Unit = {
     val m = manifest(storePath)
-    java.nio.file.Files.createDirectories(m.getParent)
-    val tmp = java.nio.file.Files.createTempFile(m.getParent, "CURRENT", ".tmp")
-    java.nio.file.Files.writeString(tmp, s"$gen $batchId $key $epoch")
-    java.nio.file.Files.move(tmp, m,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val conf = spark.sessionState.newHadoopConf()
+    val fm = CheckpointFileManager.create(m, conf)
+    val text = s"$gen $batchId $key $epoch"
+    val out = fm.createAtomic(m, overwriteIfPossible = true)
+    try out.write(text.getBytes(UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+    // Spark's FileSystem fallback (a scheme with no AbstractFileSystem)
+    // returns quietly when its rename cannot replace CURRENT; a lost
+    // flip would let the compaction sweep deltas the manifest still
+    // counts, so fail the fold instead
+    if (fm.isInstanceOf[FileSystemBasedCheckpointFileManager] &&
+        manifestText(m.getFileSystem(conf), m) != text)
+      throw new IllegalStateException(
+        s"EdgeStream: the manifest flip at $m was not applied — the " +
+          "filesystem's rename does not replace an existing file")
   }
 
   private val NumBuckets = 32
@@ -206,38 +207,17 @@ object EdgeStream {
   private def epochPrefix(epoch: Long) = f"e$epoch%09d-"
 
   private def deltaPartition(epoch: Long, key: String, batchId: Long): String =
-    f"${epochPrefix(epoch)}%s${if (key == null) "-" else key}%s-$batchId%09d"
+    epochPrefix(epoch) + BatchSeqStore.part(if (key == null) "-" else key, batchId)
 
-  /** Names of the live `batch_seq=` partitions under the delta dir,
-    * optionally restricted to one epoch's prefix.
-    */
-  private def listDeltaPartitions(
-      spark: SparkSession, storePath: String, epoch: Option[Long]): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(deltaDir(storePath))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val names = fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch_seq="))
-        .map(_.stripPrefix("batch_seq="))
-      epoch match {
-        case Some(e) => names.filter(_.startsWith(epochPrefix(e)))
-        case None    => names
-      }
-    }
-  }
+  /** The live delta parts of one epoch. */
+  private def openDeltas(spark: SparkSession, storePath: String, epoch: Long): Seq[String] =
+    BatchSeqStore.parts(spark, deltaDir(storePath)).filter(_.startsWith(epochPrefix(epoch)))
 
-  /** The open (current-epoch) delta rows, or None when there are no
-    * live delta partitions — so the no-delta read path stays the bare
-    * bucketed table scan with zero joins.
-    */
-  private def readDeltas(
-      spark: SparkSession, storePath: String, epoch: Long): Option[DataFrame] =
-    if (listDeltaPartitions(spark, storePath, Some(epoch)).isEmpty) None
-    else Some(
-      spark.read.parquet(deltaDir(storePath))
-        .filter(col("batch_seq").startsWith(epochPrefix(epoch)))
-        .select(col("x"), col("y"), col("support")))
+  /** The rows of one epoch's delta parts (call only when some exist). */
+  private def deltaRows(spark: SparkSession, storePath: String, epoch: Long): DataFrame =
+    spark.read.parquet(deltaDir(storePath))
+      .filter(col(BatchSeqStore.Col).startsWith(epochPrefix(epoch)))
+      .select(col("x"), col("y"), col("support"))
 
   /** The standing support table as currently committed (empty frame
     * with the store's schema before the first fold): the compacted
@@ -251,27 +231,35 @@ object EdgeStream {
     * enforced at [[foldBatch]].
     */
   def readStore(spark: SparkSession, storePath: String): DataFrame = {
-    val (gen, _, _, epoch) = readManifest(storePath)
-    val base =
-      if (gen < 0)
-        spark.range(0).select(
-          col("id").as("x"), col("id").as("y"), col("id").as("support"))
-      else spark.table(ensureRegistered(spark, storePath, gen))
-    readDeltas(spark, storePath, epoch) match {
-      case None => base
-      case Some(d) =>
-        // shuffle the (small) delta side ONCE, straight into the
-        // base's bucket layout: the fold then aggregates and joins
-        // without a second exchange
-        val ds = d.repartition(NumBuckets, col("x"), col("y"))
-          .groupBy(col("x"), col("y"))
-          .agg(sum(col("support")).as("__ds"))
-        base.withColumnRenamed("support", "__ss")
-          .join(ds, Seq("x", "y"), "full_outer")
-          .select(col("x"), col("y"),
-            (coalesce(col("__ss"), lit(0L)) + coalesce(col("__ds"), lit(0L)))
-              .as("support"))
-    }
+    val (gen, _, _, epoch) = readManifest(spark, storePath)
+    if (openDeltas(spark, storePath, epoch).isEmpty) base(spark, storePath, gen)
+    else merged(spark, storePath, gen, epoch)
+  }
+
+  /** The compacted bucketed base of generation `gen` (empty before the
+    * first compaction).
+    */
+  private def base(spark: SparkSession, storePath: String, gen: Int): DataFrame =
+    if (gen < 0)
+      spark.range(0).select(
+        col("id").as("x"), col("id").as("y"), col("id").as("support"))
+    else spark.table(ensureRegistered(spark, storePath, gen))
+
+  /** The base SUM-merged with `epoch`'s open delta parts. */
+  private def merged(
+      spark: SparkSession, storePath: String, gen: Int, epoch: Long): DataFrame = {
+    // shuffle the (small) delta side ONCE, straight into the base's
+    // bucket layout: the fold then aggregates and joins without a
+    // second exchange
+    val ds = deltaRows(spark, storePath, epoch)
+      .repartition(NumBuckets, col("x"), col("y"))
+      .groupBy(col("x"), col("y"))
+      .agg(sum(col("support")).as("__ds"))
+    base(spark, storePath, gen).withColumnRenamed("support", "__ss")
+      .join(ds, Seq("x", "y"), "full_outer")
+      .select(col("x"), col("y"),
+        (coalesce(col("__ss"), lit(0L)) + coalesce(col("__ds"), lit(0L)))
+          .as("support"))
   }
 
   private[graft] def foldBatch(
@@ -293,7 +281,7 @@ object EdgeStream {
         "integral id would fail the fold's join mid-stream. Map string " +
         "ids through a dictionary (e.g. hash or a dimension join) first.")
     val spark = batch.sparkSession
-    val (gen, lastApplied, recordedKey, epoch) = readManifest(storePath)
+    val (gen, lastApplied, recordedKey, epoch) = readManifest(spark, storePath)
     // degraded-detection warning: without a stream key, "same sequence"
     // is assumed and replay detection is the bare batchId comparison —
     // exactly the silent-drop class the keyed manifest exists to kill
@@ -303,7 +291,7 @@ object EdgeStream {
         s"EdgeStream: fold against $storePath without a streamKey — replay " +
           "detection degrades to the bare batchId comparison (a fresh " +
           "sequence's batch whose id equals the recorded one is silently " +
-          "skipped). Pass EdgeStream.streamKey(checkpoint) to make skips " +
+          "skipped). Pass BatchSeqStore.streamKey(checkpoint) to make skips " +
           "sequence-scoped.")
     val sameSeq = recordedKey == null || streamKey == null ||
       recordedKey == streamKey
@@ -325,7 +313,7 @@ object EdgeStream {
               "recorded); if this batch belonged to a NEW sequence, the " +
               "legacy semantics dropped it — verify the store against the " +
               "source if the checkpoint was replaced")
-          writeManifest(storePath, gen, lastApplied, streamKey, epoch)
+          writeManifest(spark, storePath, gen, lastApplied, streamKey, epoch)
         }
         // a crash between the replayed trigger's manifest write and its
         // compaction leaves the absorb threshold exceeded — retry it
@@ -357,23 +345,16 @@ object EdgeStream {
     val delta = GraphOps.itemEdgeSupports(batch, basketCol, itemCol, pinWidth = false)
       .select(col("x").cast(LongType), col("y").cast(LongType),
         col("support").cast(LongType))
-    delta
-      .withColumn("batch_seq", lit(deltaPartition(epoch, streamKey, batchId)))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(deltaDir(storePath))
-    writeManifest(storePath, gen, batchId,
+    BatchSeqStore.write(delta, deltaDir(storePath), deltaPartition(epoch, streamKey, batchId))
+    writeManifest(spark, storePath, gen, batchId,
       if (streamKey == null) "-" else streamKey, epoch)
     maybeCompact(spark, storePath, compactEvery)
   }
 
   private def maybeCompact(
       spark: SparkSession, storePath: String, compactEvery: Int): Unit = {
-    val (_, _, _, epoch) = readManifest(storePath)
-    if (compactEvery > 0 &&
-        listDeltaPartitions(spark, storePath, Some(epoch)).size >= compactEvery)
+    val (_, _, _, epoch) = readManifest(spark, storePath)
+    if (compactEvery > 0 && openDeltas(spark, storePath, epoch).size >= compactEvery)
       compact(spark, storePath)
   }
 
@@ -389,48 +370,20 @@ object EdgeStream {
     * shuffle. Honors the single-writer contract (scaladoc above).
     */
   def compact(spark: SparkSession, storePath: String): Unit = {
-    val (gen, lastApplied, key, epoch) = readManifest(storePath)
-    val open = listDeltaPartitions(spark, storePath, Some(epoch))
-    if (open.isEmpty) return
-    val base =
-      if (gen < 0)
-        spark.range(0).select(
-          col("id").as("x"), col("id").as("y"), col("id").as("support"))
-      else spark.table(ensureRegistered(spark, storePath, gen))
-    val ds = spark.read.parquet(deltaDir(storePath))
-      .filter(col("batch_seq").startsWith(epochPrefix(epoch)))
-      .repartition(NumBuckets, col("x"), col("y"))
-      .groupBy(col("x"), col("y")).agg(sum(col("support")).as("__ds"))
-    val merged = base.withColumnRenamed("support", "__ss")
-      .join(ds, Seq("x", "y"), "full_outer")
-      .select(col("x"), col("y"),
-        (coalesce(col("__ss"), lit(0L)) + coalesce(col("__ds"), lit(0L)))
-          .cast("long").as("support"))
+    val (gen, lastApplied, key, epoch) = readManifest(spark, storePath)
+    if (openDeltas(spark, storePath, epoch).isEmpty) return
     val next = (gen + 1 + 2) % 2
     graft.sources.BucketedStore.writeBucketedAt(
-      merged, genTable(storePath, next), s"$storePath/gen=$next",
-      bucketCols = Seq("x", "y"), numBuckets = NumBuckets,
-      sortCols = Seq("x", "y"))
-    writeManifest(storePath, next, lastApplied,
+      merged(spark, storePath, gen, epoch), genTable(storePath, next),
+      s"$storePath/gen=$next", bucketCols = Seq("x", "y"),
+      numBuckets = NumBuckets, sortCols = Seq("x", "y"))
+    writeManifest(spark, storePath, next, lastApplied,
       if (key == null) "-" else key, epoch + 1)
     // best-effort sweep of everything not in the NEW epoch (absorbed
     // partitions plus any stragglers from earlier interrupted sweeps);
     // a failure here only leaves invisible garbage for the next sweep
-    val p = new org.apache.hadoop.fs.Path(deltaDir(storePath))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    listDeltaPartitions(spark, storePath, None)
-      .filterNot(_.startsWith(epochPrefix(epoch + 1)))
-      .foreach { part =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_seq=$part"), true)
-      }
-  }
-
-  /** Convenience: run the sink to completion over currently-available
-    * input (test/backfill harness path).
-    */
-  def runAvailableNow(writer: DataStreamWriter[Row]): StreamingQuery = {
-    val q = writer.start()
-    q.awaitTermination()
-    q
+    BatchSeqStore.sweep(spark, deltaDir(storePath),
+      BatchSeqStore.parts(spark, deltaDir(storePath))
+        .filterNot(_.startsWith(epochPrefix(epoch + 1))))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
 import graft.operators.CandleOps
@@ -80,17 +80,9 @@ object StreamingRollup {
     * month of bucket (the reference's `PARTITION BY toYYYYMM`,
     * app/clickhouse_schema.py:162) and by batch sequence number.
     *
-    * Exactly-once without a manifest: each micro-batch lands in its own
-    * `batch_seq=<streamKey>-<batchId>` partition via DYNAMIC partition
-    * overwrite — a replayed batch (crash before the streaming
-    * checkpoint committed, whether before, during, or after the data
-    * write) re-OVERWRITES exactly its own partitions and touches no
-    * other batch's files, so re-delivery cannot double-append (the
+    * Exactly-once without a manifest: each micro-batch lands as its own
+    * [[BatchSeqStore]] part, so re-delivery cannot double-append (the
     * [[EdgeStream]] manifest contract, expressed in the layout itself).
-    * The stream key is a digest of the checkpoint path: batchIds are
-    * only comparable within one checkpoint's lifetime, so a REPLACED
-    * checkpoint (fresh query, ids restarting at 0) gets fresh
-    * partitions instead of clobbering the old sequence's batch 0.
     *
     * `bucket_month` stays the outer partition, so month-range pruning
     * is unaffected; readers see a `batch_seq` bookkeeping column they
@@ -103,16 +95,10 @@ object StreamingRollup {
       path: String,
       checkpoint: String
   ): DataStreamWriter[Row] = {
-    val key = graft.streaming.EdgeStream.streamKey(checkpoint)
-    rollup
-      .withColumn("bucket_month", date_format(col("bucket_ts"), "yyyyMM"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatch(batch, path, key, batchId)
-      }
+    val key = BatchSeqStore.streamKey(checkpoint)
+    BatchSeqStore.sink(
+      rollup.withColumn("bucket_month", date_format(col("bucket_ts"), "yyyyMM")),
+      checkpoint) { (batch, batchId, _) => writeBatch(batch, path, key, batchId) }
   }
 
   /** One micro-batch's landing ([[toParquetSink]]'s foreachBatch body,
@@ -127,22 +113,7 @@ object StreamingRollup {
       key: String,
       batchId: Long
   ): Unit =
-    batch
-      .withColumn("batch_seq", lit(f"$key%s-$batchId%09d"))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket_month", "batch_seq")
-      .parquet(path)
-
-  /** Convenience: run the sink to completion over currently-available
-    * input (test/backfill harness path).
-    */
-  def runAvailableNow(writer: DataStreamWriter[Row]): StreamingQuery = {
-    val q = writer.start()
-    q.awaitTermination()
-    q
-  }
+    BatchSeqStore.write(batch, path, BatchSeqStore.part(key, batchId), "bucket_month")
 
   /** Streaming exact dedup at ingest — the streaming half of the
     * ReplacingMergeTree contract (the reference relies on the table

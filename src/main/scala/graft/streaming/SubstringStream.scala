@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.TextOps
 
@@ -32,13 +32,12 @@ import graft.functions.TextOps
   * ([[EdgeStream]]): set union needs no re-aggregation, so store
   * maintenance is proportional to the batch, never the corpus.
   *
-  * Exactly-once WITHOUT a manifest: both writes are dynamic
-  * partition overwrites of the batch's own `batch_seq=<key>-<id>`
-  * partition (the [[StreamingRollup.toParquetSink]] contract). A
-  * replayed batch recomputes against a standing view that EXCLUDES
-  * its own partition (else a replay would see its own hashes and
-  * flag every span), then overwrites exactly its own two partitions
-  * — bit-identical, idempotent, no torn state in either crash
+  * Exactly-once WITHOUT a manifest: both writes land as the batch's
+  * own [[BatchSeqStore]] part (the [[StreamingRollup.toParquetSink]]
+  * contract). A replayed batch recomputes against a standing view
+  * that EXCLUDES its own partition (else a replay would see its own
+  * hashes and flag every span), then overwrites exactly its own two
+  * partitions — bit-identical, idempotent, no torn state in either crash
   * window. The `key` scopes partitions to one checkpoint's batch
   * sequence, so a replaced checkpoint restarts cleanly next to an
   * existing store.
@@ -71,15 +70,11 @@ object SubstringStream {
       checkpoint: String,
       maxBroadcastHashes: Long = DefaultMaxBroadcastHashes
   ): DataStreamWriter[Row] = {
-    val key = EdgeStream.streamKey(checkpoint)
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, idCol, textCol, k, storePath, spansPath,
-          batchId, key, maxBroadcastHashes)
-      }
+    val key = BatchSeqStore.streamKey(checkpoint)
+    BatchSeqStore.sink(docs, checkpoint) { (batch, batchId, _) =>
+      foldBatch(batch, idCol, textCol, k, storePath, spansPath,
+        batchId, key, maxBroadcastHashes)
+    }
   }
 
   /** The standing distinct-hash set as currently committed (one `__h`
@@ -92,28 +87,16 @@ object SubstringStream {
     * batch_seq).
     */
   def readSpans(spark: SparkSession, spansPath: String): DataFrame = {
-    require(exists(spark, spansPath), s"no spans landed at $spansPath")
-    spark.read.parquet(spansPath)
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.getPath.getName.startsWith("batch_seq="))
+    val spans = BatchSeqStore.read(spark, spansPath)
+    require(spans.nonEmpty, s"no spans landed at $spansPath")
+    spans.get
   }
 
   private def readStoreExcept(
       spark: SparkSession, storePath: String, except: String): DataFrame =
-    if (!exists(spark, storePath))
-      spark.range(0).select(col("id").as("__h"))
-    else {
-      val all = spark.read.parquet(storePath)
-      // partition pruning drops the excluded (replaying) batch's dir
-      val kept = if (except == null) all
-        else all.filter(col("batch_seq") =!= except)
-      kept.select(col("__h"))
-    }
+    BatchSeqStore.read(spark, storePath, except)
+      .map(_.select(col("__h")))
+      .getOrElse(spark.range(0).select(col("id").as("__h")))
 
   private[graft] def foldBatch(
       batch: DataFrame,
@@ -127,7 +110,7 @@ object SubstringStream {
       maxBroadcastHashes: Long = DefaultMaxBroadcastHashes
   ): Unit = {
     val spark = batch.sparkSession
-    val part = f"$key%s-$batchId%09d"
+    val part = BatchSeqStore.part(key, batchId)
     val standing = readStoreExcept(spark, storePath, except = part)
     // one pass of the batch's shingles feeds both outputs
     val shp = TextOps.shinglePositions(batch, idCol, textCol, k)
@@ -144,16 +127,8 @@ object SubstringStream {
     val spans = TextOps.mergeSpans(
       shp.join(maybeBroadcast(present), Seq("__h"), "left_semi")
         .select(col("doc_id"), col("pos")), k)
-    writePartition(spans, spansPath, part)
+    BatchSeqStore.write(spans, spansPath, part)
     val fresh = batchHashes.join(maybeBroadcast(present), Seq("__h"), "left_anti")
-    writePartition(fresh, storePath, part)
+    BatchSeqStore.write(fresh, storePath, part)
   }
-
-  private def writePartition(df: DataFrame, path: String, part: String): Unit =
-    df.withColumn("batch_seq", lit(part))
-      .write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_seq")
-      .parquet(path)
 }

@@ -56,7 +56,8 @@ object StoreLatency {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.sources.Tables
-    import graft.streaming.{BloomStream, BoilerplateStream, CmsStream, EdgeStream, SubstringStream}
+    import graft.streaming.{BatchSeqStore, BloomStream, BoilerplateStream, CmsStream,
+      EdgeStream, SubstringStream}
 
     val work = Files.createTempDirectory("store-latency").toString
     val sfLabel = new java.io.File(storeDir).getName
@@ -110,14 +111,14 @@ object StoreLatency {
     // ---- substring: standing distinct-shingle store --------------------
     val ssStore = s"$work/substr_store"
     val ssSpans = s"$work/substr_spans"
-    val sKey = EdgeStream.streamKey(s"$work/substr_build")
+    val sKey = BatchSeqStore.streamKey(s"$work/substr_build")
     val sK = 6
     (0 until 4).foreach { i => // untimed store build
       SubstringStream.foldBatch(storeDocs.filter(col("doc_id") % 4 === i),
         "doc_id", "text", sK, ssStore, ssSpans, batchId = i.toLong, key = sKey)
     }
     val ssRows = SubstringStream.readStoreHashes(spark, ssStore).count()
-    val ssKey2 = EdgeStream.streamKey(s"$work/substr_ckpt")
+    val ssKey2 = BatchSeqStore.streamKey(s"$work/substr_ckpt")
     val ssWalls = drive(s"$work/substr_ckpt") { (b, id) =>
       SubstringStream.foldBatch(b, "doc_id", "text", sK, ssStore, ssSpans,
         batchId = id, key = ssKey2)
@@ -199,7 +200,7 @@ object StoreLatency {
     (0 until 2).foreach { i =>
       EdgeStream.foldBatch(li.filter(pmod(col("l_orderkey"), lit(2)) === i),
         "l_orderkey", "l_partkey", eStore, i.toLong,
-        EdgeStream.streamKey(s"$work/edge_build"))
+        BatchSeqStore.streamKey(s"$work/edge_build"))
     }
     EdgeStream.compact(spark, eStore) // the standing bucketed base
     val eSupports = EdgeStream.readStore(spark, eStore).count()
@@ -211,7 +212,7 @@ object StoreLatency {
       .as[(Long, Long)].collect()
     val factSlices = factRows.zipWithIndex.groupBy(_._2 % nSlices).toSeq
       .sortBy(_._1).map(_._2.map(_._1).toSeq)
-    val eKey = EdgeStream.streamKey(s"$work/edge_ckpt")
+    val eKey = BatchSeqStore.streamKey(s"$work/edge_ckpt")
     val eWalls = {
       implicit val sq = spark.sqlContext
       val ms = MemoryStream[(Long, Long)]

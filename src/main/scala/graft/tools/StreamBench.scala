@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.CandleOps
-import graft.streaming.{StreamJoin, StreamingRollup}
+import graft.streaming.{BatchSeqStore, StreamJoin, StreamingRollup}
 
 /** Streaming-cascade benchmark: run the full 8-grain streaming fan-out
   * (StreamingRollup.streamAllGrains) over the sf events as a file
@@ -303,7 +303,7 @@ object StreamBench {
       spark.readStream.schema(factsSchema)
         .option("maxFilesPerTrigger", "2").parquet(s"$work/facts"),
       "l_orderkey", "l_partkey", edgeStore, s"$work/edge_ckpt")
-    EdgeStream.runAvailableNow(eq)
+    BatchSeqStore.runAvailableNow(eq)
     val edgeWall = (System.nanoTime() - t5) / 1e9
     val eGot = EdgeStream.readStore(spark, edgeStore)
     val eWant = graft.operators.GraphOps.itemEdgeSupports(
@@ -324,7 +324,7 @@ object StreamBench {
       .select(col("doc_id"), col("text"))
     val ssStore = s"$work/substr_store"
     val ssSpans = s"$work/substr_spans"
-    val sKey = EdgeStream.streamKey(s"$work/substr_ckpt")
+    val sKey = BatchSeqStore.streamKey(s"$work/substr_ckpt")
     val sK = 6
     val nSlices = 4
     def slice(i: Int) = sDocs.filter(col("doc_id") % nSlices === i)

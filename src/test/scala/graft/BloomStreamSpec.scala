@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.BloomOps
-import graft.streaming.BloomStream
+import graft.streaming.{BatchSeqStore, BloomStream}
 
 case class BloomKey(k: String)
 
@@ -30,7 +30,7 @@ class BloomStreamSpec extends SparkSpec {
       source.toDF(), "k", NumWords, K, store, ckpt)
     Seq(all.take(100), all.slice(100, 120), all.drop(120)).foreach { s =>
       source.addData(s: _*)
-      graft.streaming.StreamingRollup.runAvailableNow(writer)
+      graft.streaming.BatchSeqStore.runAvailableNow(writer)
     }
 
     val folded = BloomStream.readWords(spark, store, NumWords)
@@ -78,7 +78,7 @@ class BloomStreamSpec extends SparkSpec {
       source.toDF(), "k", NShards, WordsPerShard, K, store, ckpt)
     Seq(all.take(40), all.slice(40, 170), all.drop(170)).foreach { s =>
       source.addData(s: _*)
-      graft.streaming.StreamingRollup.runAvailableNow(writer)
+      graft.streaming.BatchSeqStore.runAvailableNow(writer)
     }
     def rel(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap

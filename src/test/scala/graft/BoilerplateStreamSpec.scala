@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
-import graft.streaming.BoilerplateStream
+import graft.streaming.{BatchSeqStore, BoilerplateStream}
 
 /** Streaming line-frequency store: the folded counts must equal the
   * whole-corpus batch frequencies for any slicing; a batch scrubbed
@@ -33,7 +33,7 @@ class BoilerplateStreamSpec extends SparkSpec {
     val slices = Seq(all.take(25), all.slice(25, 40), all.drop(40))
     slices.foreach { s =>
       source.addData(s: _*)
-      graft.streaming.StreamingRollup.runAvailableNow(writer)
+      graft.streaming.BatchSeqStore.runAvailableNow(writer)
     }
 
     // folded counts == one-shot distinct-doc counts over the corpus

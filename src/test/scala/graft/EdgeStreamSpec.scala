@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.GraphOps
-import graft.streaming.EdgeStream
+import graft.streaming.{BatchSeqStore, EdgeStream}
 
 case class BasketFact(order_id: Long, part_id: Long)
 
@@ -24,6 +24,16 @@ class EdgeStreamSpec extends SparkSpec {
     }
   }
 
+  /** Overwrite the store's manifest in place, as a crash simulation.
+    * Through the Hadoop local filesystem, so the checksum sidecar the
+    * store's own commit leaves beside CURRENT stays consistent.
+    */
+  private def rewriteManifest(store: String, text: String): Unit = {
+    val out = new org.apache.hadoop.fs.Path(store, "CURRENT")
+    val os = out.getFileSystem(spark.sessionState.newHadoopConf()).create(out, true)
+    try os.write(text.getBytes("UTF-8")) finally os.close()
+  }
+
   test("stream fold == batch supports over the union, across micro-batch slicings") {
     implicit val sqlCtx = spark.sqlContext
     val all = facts(17, 40)
@@ -40,7 +50,7 @@ class EdgeStreamSpec extends SparkSpec {
       all.filter(_.order_id >= 25))
     slices.foreach { s =>
       source.addData(s: _*)
-      EdgeStream.runAvailableNow(writer)
+      BatchSeqStore.runAvailableNow(writer)
     }
     val streamed = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -79,9 +89,8 @@ class EdgeStreamSpec extends SparkSpec {
     // crash BEFORE the manifest write: the replay's dynamic partition
     // overwrite REPLACES the half-written delta (simulate by rolling
     // the manifest back one batch and re-folding)
-    val m = java.nio.file.Paths.get(store, "CURRENT")
-    val committed = java.nio.file.Files.readString(m)
-    java.nio.file.Files.writeString(m,
+    val committed = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "CURRENT"))
+    rewriteManifest(store,
       committed.trim.split("\\s+") match {
         case Array(g, _, k, e) => s"$g 0 $k $e"
       })
@@ -143,15 +152,14 @@ class EdgeStreamSpec extends SparkSpec {
     // partitions are both still present (the sweep only runs after a
     // successful flip) — simulate by snapshotting both, compacting,
     // then restoring them around the now-written generation
-    val m = java.nio.file.Paths.get(store, "CURRENT")
-    val preFlip = java.nio.file.Files.readString(m)
+    val preFlip = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "CURRENT"))
     val deltaDir = java.nio.file.Paths.get(store, "delta")
     val snap = java.nio.file.Files.createTempDirectory("edge-delta-snap")
     org.apache.commons.io.FileUtils.copyDirectory(
       deltaDir.toFile, snap.toFile)
     EdgeStream.compact(spark, store)
     assert(supports == expect)
-    java.nio.file.Files.writeString(m, preFlip) // roll back the flip
+    rewriteManifest(store, preFlip) // roll back the flip
     org.apache.commons.io.FileUtils.copyDirectory(
       snap.toFile, deltaDir.toFile) // restore the not-yet-swept deltas
     EdgeStream.foldBatch(b1, "order_id", "part_id", store, batchId = 2L,
@@ -176,7 +184,7 @@ class EdgeStreamSpec extends SparkSpec {
     val slices = (0 until 5).map(i => all.filter(_.order_id % 5 == i))
     slices.foreach { s =>
       source.addData(s: _*)
-      EdgeStream.runAvailableNow(writer)
+      BatchSeqStore.runAvailableNow(writer)
     }
     val streamed = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -222,8 +230,8 @@ class EdgeStreamSpec extends SparkSpec {
     val b = Seq(BasketFact(1, 10), BasketFact(1, 11)).toDF()
     def supports = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val k1 = EdgeStream.streamKey("/ckpt/one")
-    val k2 = EdgeStream.streamKey("/ckpt/two")
+    val k1 = BatchSeqStore.streamKey("/ckpt/one")
+    val k2 = BatchSeqStore.streamKey("/ckpt/two")
     assert(k1 != k2)
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L, streamKey = k1)
     assert(supports == Map((10L, 11L) -> 1L))
@@ -257,8 +265,8 @@ class EdgeStreamSpec extends SparkSpec {
     val b = Seq(BasketFact(1, 10), BasketFact(1, 11)).toDF()
     def supports = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val k1 = EdgeStream.streamKey("/ckpt/legacy-upgrade")
-    val k2 = EdgeStream.streamKey("/ckpt/intruder")
+    val k1 = BatchSeqStore.streamKey("/ckpt/legacy-upgrade")
+    val k2 = BatchSeqStore.streamKey("/ckpt/intruder")
     // a legacy store: folds recorded WITHOUT a stream key
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L)
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.JdbcStore
-import graft.streaming.StreamingRollup
+import graft.streaming.{BatchSeqStore, StreamingRollup}
 
 /** The JDBC warehouse boundary against embedded Derby: at-least-once
   * appends (redelivery duplicates rows) + read-side last-writer-wins
@@ -85,7 +85,7 @@ class JdbcStoreSpec extends SparkSpec {
       source.toDF(), Seq("symbol"), "t", "price", "15 minutes", "10 minutes")
     // push the watermark past the windows so append mode emits them
     source.addData(Tick("BTC", ts("2024-03-01 12:00:00"), 1.0))
-    StreamingRollup.runAvailableNow(
+    BatchSeqStore.runAvailableNow(
       JdbcStore.toJdbcSink(streamed, url, "stream_rollup", props, ckpt))
 
     val viaJdbc = JdbcStore.readTable(spark, url, "stream_rollup", props)

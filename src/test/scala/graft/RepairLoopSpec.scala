@@ -48,11 +48,10 @@ class RepairLoopSpec extends SparkSpec {
     val damaged = spark.read.parquet(store)
       .filter(!(col("bucket_ts") >= lit(damLo) && col("bucket_ts") < lit(damHi)))
       .localCheckpoint(true) // break lineage before overwriting the same path
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try damaged
+    damaged
       .withColumn(RollupStore.PartitionCol, col(RollupStore.PartitionCol).cast("string"))
-      .write.mode("overwrite").partitionBy(RollupStore.PartitionCol).parquet(store)
-    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(RollupStore.PartitionCol).parquet(store)
     assert(canon(spark.read.parquet(store)).size < pristine.size, "damage not applied")
 
     // G7 detect: the scan must surface gaps covering the injured window

@@ -35,8 +35,8 @@ class RollupStoreSpec extends SparkSpec {
     val garbage = before
       .filter($"bucket_month" === "202401" && dayofmonth($"bucket_ts") <= 15)
       .withColumn("close", lit(0.0))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    garbage.write.mode("overwrite").partitionBy("bucket_month").parquet(path)
+    garbage.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket_month").parquet(path)
     assert(spark.read.parquet(path).filter($"bucket_month" === "202401").count() == 15)
 
     // repair just January; February must stay untouched

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 
 import graft.operators.{BloomOps, CmsOps}
-import graft.streaming.{BloomStream, CmsStream, EdgeStream, SubstringStream}
+import graft.streaming.{BatchSeqStore, BloomStream, CmsStream, EdgeStream, SubstringStream}
 
 /** The local filesystem under a scheme of its own: a path on it
   * resolves only through a Hadoop conf that registers the scheme.
@@ -11,6 +11,16 @@ import graft.streaming.{BloomStream, CmsStream, EdgeStream, SubstringStream}
 class SchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
   override def getScheme: String = "graftfs"
+}
+
+/** [[SchemeLocalFs]] under another scheme, whose rename refuses to
+  * replace an existing file, as HDFS's `FileSystem.rename` does.
+  */
+class NoReplaceLocalFs extends SchemeLocalFs {
+  override def getUri: java.net.URI = java.net.URI.create("graftnr:///")
+  override def getScheme: String = "graftnr"
+  override def rename(src: Path, dst: Path): Boolean =
+    !exists(dst) && super.rename(src, dst)
 }
 
 /** The streaming stores reach their files through the session's Hadoop
@@ -26,6 +36,8 @@ class StoreHadoopConfSpec extends SparkSpec {
     // uncached, so no FileSystem instance created through the session
     // conf can answer a later lookup made without it
     s.conf.set("fs.graftfs.impl.disable.cache", "true")
+    s.conf.set("fs.graftnr.impl", classOf[NoReplaceLocalFs].getName)
+    s.conf.set("fs.graftnr.impl.disable.cache", "true")
     s
   }
 
@@ -76,7 +88,7 @@ class StoreHadoopConfSpec extends SparkSpec {
       (i.toLong, s"common shared words here doc $i ends ${i % 3}"))
     val store = storeDir("substr-scheme")
     val spans = storeDir("substr-spans-scheme")
-    val key = EdgeStream.streamKey("scheme-checkpoint")
+    val key = BatchSeqStore.streamKey("scheme-checkpoint")
     SubstringStream.foldBatch(docs.take(6).toDF("doc_id", "text"), "doc_id", "text", 3,
       store, spans, batchId = 0L, key = key)
     SubstringStream.foldBatch(docs.drop(6).toDF("doc_id", "text"), "doc_id", "text", 3,
@@ -87,5 +99,57 @@ class StoreHadoopConfSpec extends SparkSpec {
       .select("__h").distinct().as[Long].collect().sorted
     assert(landed.toSeq == whole.toSeq)
     assert(SubstringStream.readSpans(session, spans).count() > 0L)
+  }
+
+  /** Two baskets folded as two batches of one sequence, without
+    * auto-compaction; returns the expected supports.
+    */
+  private def foldTwoBaskets(
+      s: org.apache.spark.sql.SparkSession, store: String): Map[(Long, Long), Long] = {
+    import s.implicits._
+    val key = BatchSeqStore.streamKey(s"$store-checkpoint")
+    EdgeStream.foldBatch(Seq((1L, 10L), (1L, 11L)).toDF("order_id", "part_id"),
+      "order_id", "part_id", store, batchId = 0L, streamKey = key, compactEvery = 0)
+    EdgeStream.foldBatch(Seq((2L, 10L), (2L, 11L), (2L, 12L)).toDF("order_id", "part_id"),
+      "order_id", "part_id", store, batchId = 1L, streamKey = key, compactEvery = 0)
+    Map((10L, 11L) -> 2L, (10L, 12L) -> 1L, (11L, 12L) -> 1L)
+  }
+
+  private def edges(s: org.apache.spark.sql.SparkSession, store: String) =
+    EdgeStream.readStore(s, store).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+
+  private def manifestInStore(s: org.apache.spark.sql.SparkSession, store: String) = {
+    val m = new Path(store, "CURRENT")
+    m.getFileSystem(s.sessionState.newHadoopConf()).exists(m)
+  }
+
+  test("edge store folds, compacts and reads back on a session-registered scheme") {
+    val store = storeDir("edge-scheme")
+    val expected = foldTwoBaskets(session, store)
+    assert(edges(session, store) == expected)
+    EdgeStream.compact(session, store)
+    assert(edges(session, store) == expected)
+    assert(manifestInStore(session, store))
+  }
+
+  test("an edge manifest flip the filesystem cannot apply fails the fold") {
+    // a quietly lost flip would leave the manifest a batch behind and
+    // let a compaction sweep deltas it still counts
+    val store = "graftnr://" + java.nio.file.Files.createTempDirectory("edge-noreplace")
+    val e = intercept[IllegalStateException](foldTwoBaskets(session, store))
+    assert(e.getMessage.contains("was not applied"), e.getMessage)
+  }
+
+  test("the edge manifest lands in the store for a file:// store path") {
+    val local = java.nio.file.Files.createTempDirectory("edge-uri").toString
+    val store = "file://" + local
+    val expected = foldTwoBaskets(spark, store)
+    assert(manifestInStore(spark, store))
+    // a URI joined by java.nio is a relative path: file:/tmp/... under
+    // the working directory
+    assert(!new java.io.File(System.getProperty("user.dir"), "file:" + local).exists(),
+      "manifest written under the working directory")
+    assert(edges(spark, store) == expected)
   }
 }

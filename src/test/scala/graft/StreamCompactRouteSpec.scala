@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RollupRouter
 
 import graft.operators.{CandleOps, RollupStore}
-import graft.streaming.StreamingRollup
+import graft.streaming.{BatchSeqStore, StreamingRollup}
 
 /** The full lifecycle of a STREAMING-written rollup store: exactly-once
   * micro-batch landing → layout-aware compaction → RollupRouter
@@ -68,13 +68,13 @@ class StreamCompactRouteSpec extends SparkSpec {
       source.toDF(), Seq("symbol"), "t", "price", "15 minutes", "10 minutes", withCarriers)
     val (b1, rest) = ticks.partition(_.t.getTime < ts("2024-03-31 23:00:00").getTime)
     source.addData(b1)
-    StreamingRollup.runAvailableNow(
+    BatchSeqStore.runAvailableNow(
       StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt"))
     source.addData(rest)
-    StreamingRollup.runAvailableNow(
+    BatchSeqStore.runAvailableNow(
       StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt"))
     source.addData(Tick("BTC", ts("2024-04-01 12:00:00"), 1.0))
-    StreamingRollup.runAvailableNow(
+    BatchSeqStore.runAvailableNow(
       StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt"))
     s"$dir/rollup"
   }
@@ -101,7 +101,7 @@ class StreamCompactRouteSpec extends SparkSpec {
     assert(after.sameElements(before), "compaction must be a pure file-layout change")
 
     // the NEXT micro-batch lands cleanly beside the compacted partition
-    val key = graft.streaming.EdgeStream.streamKey(s"$dir/ckpt")
+    val key = graft.streaming.BatchSeqStore.streamKey(s"$dir/ckpt")
     val nxt = Seq(("BTC", ts("2024-03-31 21:00:00"), 1.0, 2.0, 0.5, 1.5, 10.0, 3L))
       .toDF("symbol", "bucket_ts", "open", "high", "low", "close", "volume", "trades")
       .withColumn("bucket_month", date_format($"bucket_ts", "yyyyMM"))
@@ -127,7 +127,7 @@ class StreamCompactRouteSpec extends SparkSpec {
       .filter(col("bucket_month").cast("string") === "202403")
       .select("symbol", "bucket_ts", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
-    val key = graft.streaming.EdgeStream.streamKey(s"$dir/ckpt")
+    val key = graft.streaming.BatchSeqStore.streamKey(s"$dir/ckpt")
 
     // commit a fresh micro-batch into March in the exact window between
     // the compactor's victim listing and its fold read — the race the

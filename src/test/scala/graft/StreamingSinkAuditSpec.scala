@@ -14,13 +14,17 @@ import graft.streaming._
   *
   * The engine's sinks fall into three mechanisms:
   *
-  *   1. CUSTOM foreachBatch sinks with their own replay guard:
-  *      [[StreamingRollup.toParquetSink]] (per-(bucket_month,
-  *      batch_seq) dynamic partition overwrite — StreamingSpec asserts
-  *      both crash windows) and [[EdgeStream.toSupportStore]]
-  *      (sequence-scoped manifest — EdgeStreamSpec asserts
-  *      skip/fold/fail-fast). Re-asserted here in one line each so this
-  *      spec is the complete sink census.
+  *   1. CUSTOM foreachBatch sinks landing through [[BatchSeqStore]],
+  *      whose per-batch part a replay overwrites:
+  *      [[StreamingRollup.toParquetSink]] (parts under `bucket_month`
+  *      — StreamingSpec asserts both crash windows),
+  *      [[CmsStream.toCmsStore]], [[BloomStream.toBloomStore]],
+  *      [[BloomStream.toShardedStore]], [[BoilerplateStream.toLineStore]]
+  *      and [[SubstringStream.toShingleStore]] (store and spans), plus
+  *      [[EdgeStream.toSupportStore]], which adds a sequence-scoped
+  *      manifest (EdgeStreamSpec asserts skip/fold/fail-fast).
+  *      Re-asserted here per sink — the same part written twice equals
+  *      it written once — so this spec is the complete sink census.
   *   2. STATEFUL TRANSFORMS emitting through Spark's FileStreamSink
   *      ([[CorpusStream.cleanIngest]]/[[CorpusStream.cdcIngest]],
   *      [[NearDupStream.candidatePairs]], [[ToxicityStream.toxicity]],
@@ -193,7 +197,7 @@ class StreamingSinkAuditSpec extends SparkSpec {
     // StreamingRollup.writeBatch — same (key, batchId) twice == once
     // (full crash-window coverage lives in StreamingSpec)
     val dir = java.nio.file.Files.createTempDirectory("audit_rollup").toString
-    val key = EdgeStream.streamKey(s"$dir/ckpt")
+    val key = BatchSeqStore.streamKey(s"$dir/ckpt")
     val b = Seq(("BTC", ts("2024-03-01 08:00:00"), 1.0, 2.0, 0.5, 1.5, 10.0, 3L))
       .toDF("symbol", "bucket_ts", "open", "high", "low", "close", "volume", "trades")
       .withColumn("bucket_month", date_format(col("bucket_ts"), "yyyyMM"))
@@ -210,6 +214,47 @@ class StreamingSinkAuditSpec extends SparkSpec {
     assert(EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ==
       Map((10L, 11L) -> 1L))
+  }
+
+  test("per-batch store sinks: the same part written twice equals it written once") {
+    // every landed row with its part, as a sorted whole-row render
+    def landed(path: String): Seq[String] = {
+      val df = spark.read.parquet(path)
+      df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toString).sorted.toSeq
+    }
+    def twiceIsOnce(name: String, paths: String*)(fold: => Unit): Unit = {
+      fold
+      val once = paths.map(landed)
+      assert(once.forall(_.nonEmpty), s"$name: fixture landed no rows")
+      fold
+      assert(paths.map(landed) == once, s"$name: a replayed part changed the store")
+    }
+    def dir(name: String) = java.nio.file.Files.createTempDirectory(s"audit_$name").toString
+    val part = BatchSeqStore.part(BatchSeqStore.streamKey("audit-ckpt"), 0L)
+    val keys = Seq("a", "b", "a", "c", "b", "a").toDF("k")
+    val docs = Seq(
+      (1L, "shared header line\nalpha beta gamma delta epsilon"),
+      (2L, "shared header line\nalpha beta gamma delta zeta"),
+      (3L, "shared header line\neta theta iota kappa")).toDF("doc_id", "text")
+
+    val cms = dir("cms")
+    twiceIsOnce("CmsStream", cms)(CmsStream.foldBatch(keys, "k", 64, 3, cms, part))
+    val bloom = dir("bloom")
+    twiceIsOnce("BloomStream", bloom)(BloomStream.foldBatch(keys, "k", 16, 3, bloom, part))
+    val sharded = dir("bloom_sharded")
+    twiceIsOnce("BloomStream sharded", sharded)(
+      BloomStream.foldBatchSharded(keys, "k", 4, 8, 3, sharded, part))
+    val lines = dir("boilerplate")
+    twiceIsOnce("BoilerplateStream", lines)(
+      BoilerplateStream.foldBatch(docs, "doc_id", "text", lines, part))
+    // spans need an earlier batch to match against
+    val (shingles, spans) = (dir("substring"), dir("substring_spans"))
+    def substringFold(batch: org.apache.spark.sql.DataFrame, batchId: Long) =
+      SubstringStream.foldBatch(batch, "doc_id", "text", 3, shingles, spans,
+        batchId, BatchSeqStore.streamKey("audit-ckpt"))
+    substringFold(docs.filter(col("doc_id") === 1L), 0L)
+    twiceIsOnce("SubstringStream store and spans", shingles, spans)(
+      substringFold(docs.filter(col("doc_id") =!= 1L), 1L))
   }
 
   test("AlertStream: a listener restart re-reports a still-failing query (at-least-once alerting)") {

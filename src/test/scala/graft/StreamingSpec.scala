@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.CandleOps
-import graft.streaming.StreamingRollup
+import graft.streaming.{BatchSeqStore, StreamingRollup}
 
 case class Tick(symbol: String, t: Timestamp, price: Double)
 
@@ -173,7 +173,7 @@ class StreamingSpec extends SparkSpec {
       val writers = StreamingRollup.streamAllGrains(
         stream, Seq("symbol"), "t", "price", "10 minutes", dir,
         grains = Seq(graft.model.Timeframe.parse("15m"), graft.model.Timeframe.parse("1h")))
-      writers.values.foreach(w => StreamingRollup.runAvailableNow(w))
+      writers.values.foreach(w => BatchSeqStore.runAvailableNow(w))
     }
 
     for (label <- Seq("15m", "1h")) {
@@ -199,11 +199,11 @@ class StreamingSpec extends SparkSpec {
     source.addData(ticks)
     source.addData(Tick("BTC", ts("2024-03-01 12:00:00"), 1.0))
     val writer = StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt")
-    StreamingRollup.runAvailableNow(writer)
+    BatchSeqStore.runAvailableNow(writer)
     // a straggler arrives hours late — the closed window ignores it
     val late = Tick("BTC", ts("2024-03-01 08:03:30"), 9999.0)
     source.addData(late)
-    StreamingRollup.runAvailableNow(
+    BatchSeqStore.runAvailableNow(
       StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt"))
     val streamedHigh = spark.read.parquet(s"$dir/rollup")
       .filter($"symbol" === "BTC" && $"bucket_ts" === ts("2024-03-01 08:00:00"))
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     source.addData(ticks)
     source.addData(Tick("BTC", ts("2024-03-01 12:00:00"), 1.0))
     val writer = StreamingRollup.toParquetSink(streamed, s"$dir/rollup", s"$dir/ckpt")
-    StreamingRollup.runAvailableNow(writer)
+    BatchSeqStore.runAvailableNow(writer)
 
     val stored = spark.read.parquet(s"$dir/rollup")
     assert(stored.filter($"bucket_month" === "202403").count() >= 8)
@@ -244,7 +244,7 @@ class StreamingSpec extends SparkSpec {
     // overwrite, so a replay re-lands exactly its own files
     val dir = java.nio.file.Files.createTempDirectory("graft_eo").toString
     val path = s"$dir/rollup"
-    val key = graft.streaming.EdgeStream.streamKey(s"$dir/ckpt")
+    val key = graft.streaming.BatchSeqStore.streamKey(s"$dir/ckpt")
     def month(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("bucket_month", date_format($"bucket_ts", "yyyyMM"))
     val b0 = month(Seq(
@@ -272,7 +272,7 @@ class StreamingSpec extends SparkSpec {
 
     // a REPLACED checkpoint restarts batchIds at 0: its batch 0 lands
     // in fresh partitions instead of clobbering the old sequence's
-    val key2 = graft.streaming.EdgeStream.streamKey(s"$dir/ckpt_new")
+    val key2 = graft.streaming.BatchSeqStore.streamKey(s"$dir/ckpt_new")
     graft.streaming.StreamingRollup.writeBatch(b1, path, key2, 0L)
     assert(spark.read.parquet(path).count() == 4)
     assert(spark.read.parquet(path).select("batch_seq").distinct().count() == 3)

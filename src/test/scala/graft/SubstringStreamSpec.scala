@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
-import graft.streaming.{EdgeStream, SubstringStream}
+import graft.streaming.{BatchSeqStore, SubstringStream}
 
 case class Doc(doc_id: Long, text: String)
 
@@ -52,7 +52,7 @@ class SubstringStreamSpec extends SparkSpec {
     val slices = Seq(all.take(20), all.slice(20, 45), all.drop(45))
     slices.foreach { s =>
       source.addData(s: _*)
-      graft.streaming.StreamingRollup.runAvailableNow(writer)
+      graft.streaming.BatchSeqStore.runAvailableNow(writer)
     }
 
     // batch truth: each slice's spans against the UNION OF EARLIER
@@ -84,7 +84,7 @@ class SubstringStreamSpec extends SparkSpec {
     val store = java.nio.file.Files.createTempDirectory("substr-store2").toString
     val spansOut = java.nio.file.Files.createTempDirectory("substr-spans2").toString
     val all = mkDocs(11, 30)
-    val key = EdgeStream.streamKey("some-checkpoint")
+    val key = BatchSeqStore.streamKey("some-checkpoint")
     SubstringStream.foldBatch(all.take(15).toDF(), "doc_id", "text", K,
       store, spansOut, batchId = 0L, key = key)
     SubstringStream.foldBatch(all.drop(15).toDF(), "doc_id", "text", K,
