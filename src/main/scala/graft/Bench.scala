@@ -24,56 +24,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/session warmup outside the timed loop (codegen, parquet
-    // footer caches, shuffle infra, JIT of the md5/shingle/dot-product
-    // hot loops) so the first query to touch each code path isn't
-    // charged 5-25 s of spin-up. Warmup runs at sf0.001 — same code
-    // paths, ~1% of the data.
-    val warmDir = "/root/testdata/sf0.001"
-    // The timed action hashes EVERY output column into one aggregate
-    // (not count()): under count() Catalyst legitimately eliminates
-    // row-neutral work — q_substring_scrub's unique-keyed left span
-    // join benched flat at every SF because the join it ships never
-    // ran — so the artifact measured a pruned twin of the committed
-    // plan. A full-column xxhash64 keeps every column (no pruning) and
-    // every operator feeding them live, and stays a 1-row driver
-    // result. Map-typed columns (hash-on-map is disallowed) ride
-    // through to_json first.
-    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fields.exists(f => containsMap(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
-      case _ => false
-    }
-    def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-      import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
-      val cols = df.schema.fields.map { f =>
-        val c = col("`" + f.name + "`")
-        if (containsMap(f.dataType)) to_json(c) else c
-      }
-      if (cols.isEmpty) { df.count(); () }
-      else {
-        df.select(xxhash64(cols.toIndexedSeq: _*).as("__h"))
-          .agg(expr("bit_xor(__h)")).head()
-        ()
-      }
-    }
-    Seq("q_ohlcv_rollup_15m", "q_dedup_groups", "q_knn_kmeans_ivf",
-      "q_simhash_neardup", "q_winnow_neardup", "q_copurchase").foreach { q =>
-      try consume(SparkEntry.queries(q)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
+    Session.warmUp(spark)
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else SparkEntry.queries.filter(kv => args.contains(kv._1)).toSeq.sortBy(_._1)
@@ -96,7 +50,7 @@ object Bench {
     }
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { consume(fn(spark, sfDir)) }
+      try { Session.consume(fn(spark, sfDir)) }
       catch {
         case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -38,8 +38,8 @@ object GraphOps {
     // small inputs (q_item_edges_incremental 0.82 -> 1.20 s when the
     // delta was pinned, round-15 measured), so AQE sizes every caller
     // that doesn't opt in; the corpus-scale call sites ([[itemEdges]],
-    // Derived's standing-store derivations, EdgeLab/StreamBench's
-    // full-corpus legs) pass pinWidth = true explicitly.
+    // Derived's standing-store derivations, StreamBench's full-corpus
+    // legs) pass pinWidth = true explicitly.
     val projected = facts.select(col(basketCol), col(itemCol))
     val spread =
       if (pinWidth) graft.api.Par.spread(projected, Seq(col(basketCol)))

@@ -667,8 +667,8 @@ object MicrostructureOps {
     // instead of per-row Decimal allocations. The decimal form made
     // this stage GC-BOUND once it ran cores-wide: round-15 measured
     // 4-16 s erratic walls for the decimal aggregate vs a stable ~1 s
-    // for the long equivalent on identical pair volume (CorrMatrixLab,
-    // min-observed at every width), and it explains the query's
+    // for the long equivalent on identical pair volume (round-15 pair
+    // stage timings, min-observed at every width), and it explains the query's
     // historical cross-round spread (1.97-7.6 s for an unchanged plan).
     val n = count(lit(1))
     val E = graft.functions.ExactSum
@@ -895,7 +895,7 @@ object MicrostructureOps {
 
   /** Exact corrMatrix co-moment arithmetic over candidate pairs only.
     *
-    * Scale shape (reworked round 9, measured in tools/CorrLab): the
+    * Scale shape (reworked and measured in round 9): the
     * first form joined every candidate pair to both full row-level
     * move series — at sf1's 5.36M surviving pairs × 63-bucket series
     * that is ~3.4e8 rows through two shuffles and a 3.4e8-row hash

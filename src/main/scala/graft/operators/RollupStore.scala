@@ -158,7 +158,6 @@ object RollupStore {
     * overwrite exactly those partitions.
     */
   def repairRange(
-      spark: SparkSession,
       base: DataFrame,
       keys: Seq[String],
       tsCol: String,

@@ -100,7 +100,7 @@ object Derived {
     * (x, y), the standing side is read in place (zero exchange, zero
     * sort — FoldPlanSpec pins it) and only the delta shuffles to the
     * bucket layout. Write cost is one parquet encode over the
-    * checkpoint (sf1 measured ~5 s vs ~3 s, tools/EdgeLab); it buys
+    * checkpoint (sf1 measured ~5 s vs ~3 s in round 8); it buys
     * delta-scaling folds at any standing size plus cross-session reuse
     * that checkpoint blocks cannot offer. Memoized per (session, dir);
     * the derivation reuses [[itemEdgeSupports]]'s checkpoint when that

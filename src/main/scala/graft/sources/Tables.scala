@@ -39,8 +39,9 @@ import org.apache.spark.sql.types.StructType
 object Tables {
 
   /** The session confs every session this repo builds carries: Bench,
-    * Verify, the tests, the tools and the benchmark all build theirs
-    * with `SparkConf.setAll(ReaderConfs)`. `ensure` is the fallback for
+    * Verify, the tests and the tools build theirs through
+    * [[graft.Session.local]], and the benchmark with
+    * `SparkConf.setAll(ReaderConfs)`. `ensure` is the fallback for
     * externally-built sessions (the driver constructs its own and calls
     * `SparkEntry.queries` directly). Check-then-set: a session already
     * carrying the right values is never mutated, so repeated reads are

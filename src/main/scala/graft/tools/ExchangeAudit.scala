@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev generator for ExchangeBudgetSpec's per-query shuffle pins:
   * plans every SparkEntry query against a scale dir under the SAME
-  * session shape as the test JVM (local[4], 4 shuffle partitions) and
+  * session as the test JVM (`graft.Session.local` on 4 cores) and
   * prints `name count` per query — paste the output into the spec's
   * budget map when a plan change is deliberate.
   *
@@ -22,14 +20,7 @@ object ExchangeAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-exchange-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
-      .getOrCreate()
+    val spark = graft.Session.local("graft-exchange-audit", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val n =

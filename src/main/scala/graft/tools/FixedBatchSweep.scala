@@ -1,7 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Session
+import graft.Session.consume
 
 /** Fixed-batch proportionality harness (dev tooling): every committed
   * incremental operator is swept with a CONSTANT batch against
@@ -16,7 +19,8 @@ import org.apache.spark.sql.functions._
   * tables, bucketed support stores, streaming parquet stores) is
   * built UNTIMED; the timed region is exactly the per-batch work: the
   * probe/fold/scrub of the fixed batch against that state, consumed
-  * through the Bench full-column-hash action (no count() pruning).
+  * through Bench's full-column-hash action, [[graft.Session.consume]]
+  * (no count() pruning).
   *
   * Usage: runMain graft.tools.FixedBatchSweep <storeDir> [batchDir]
   * (batchDir defaults to /tmp/sf1 — the SAME batch at every store
@@ -25,30 +29,12 @@ import org.apache.spark.sql.functions._
   */
 object FixedBatchSweep {
 
-  private def consume(df: DataFrame): Unit = {
-    val cols = df.schema.fields.map(f => col("`" + f.name + "`"))
-    if (cols.isEmpty) { df.count(); () }
-    else {
-      df.select(xxhash64(cols.toIndexedSeq: _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).head()
-      ()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val storeDir = args.headOption.getOrElse("/tmp/sf1")
     val batchDir = if (args.length > 1) args(1) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val passes = 3
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-fixed-batch-sweep")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
-      .getOrCreate()
+    val spark = Session.local("graft-fixed-batch-sweep", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources.Tables
     import graft.functions.TextOps

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Second-ENGINE oracle leg (dev tooling): re-execute every
   * `SparkEntry.oracleSql` through Spark SQL itself and diff the
@@ -67,15 +67,8 @@ object OracleCrossCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-oracle-crosscheck")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Session.local("graft-oracle-crosscheck", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.sources.Tables
     Seq(

@@ -2,20 +2,21 @@ package graft.tools
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 import scala.collection.mutable
 
-/** Round-15 optimization profiler: run named SparkEntry queries under
-  * the EXACT Bench session shape and consume action, and print a
-  * per-stage wall/task-metric breakdown (duration, task time, shuffle
-  * read/write bytes, records, spill) so optimization targets the stage
-  * that actually burns the time (guide §1.1: empirical loop without
-  * the UI, which Bench runs disabled).
+/** Optimization profiler: run named SparkEntry queries under the
+  * EXACT Bench session shape, warm-up and consume action
+  * ([[graft.Session]]), and print a per-stage wall/task-metric
+  * breakdown (duration, task time, shuffle read/write bytes, records,
+  * spill) so optimization targets the stage that actually burns the
+  * time, without the UI, which Bench runs disabled.
   *
   * Also writes each query's `.explain("formatted")` to
-  * `plans/r15/<query>_<tag>.txt` when a tag is given — the round's
-  * plan-evidence deliverable.
+  * `plans/<round>/<query>_<tag>.txt` when a tag is given, where
+  * `<round>` is the GRAFT_PLANS_ROUND environment variable (default
+  * `r16`) — the round's plan-evidence deliverable.
   *
   * Each PROFILE line also carries `compiles=`: the classes Janino
   * compiled during the warm pass (CodegenMetrics). A warm pass should
@@ -70,44 +71,12 @@ object ProfileQuery {
     val planTag = args.collectFirst { case a if a.startsWith("--plans=") => a.drop(8) }
     val names = args.filterNot(_.startsWith("--"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(new org.apache.spark.SparkConf().setAll(graft.sources.Tables.ReaderConfs))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local("graft-profile-query", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def containsMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => containsMap(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => containsMap(a.elementType)
-      case _ => false
-    }
-    def consume(df: org.apache.spark.sql.DataFrame): Unit = {
-      import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
-      val cols = df.schema.fields.map { f =>
-        val c = col("`" + f.name + "`")
-        if (containsMap(f.dataType)) to_json(c) else c
-      }
-      if (cols.isEmpty) { df.count(); () }
-      else {
-        df.select(xxhash64(cols.toIndexedSeq: _*).as("__h"))
-          .agg(expr("bit_xor(__h)")).head()
-        ()
-      }
-    }
-
-    // Same warmup as Bench so first-profiled queries aren't charged JIT.
-    val warmDir = "/root/testdata/sf0.001"
-    Seq("q_ohlcv_rollup_15m", "q_dedup_groups", "q_knn_kmeans_ivf",
-      "q_simhash_neardup", "q_winnow_neardup", "q_copurchase").foreach { q =>
-      try consume(graft.SparkEntry.queries(q)(spark, warmDir))
-      catch { case _: Throwable => () }
-    }
+    // same warm-up and action as Bench, so first-profiled queries
+    // aren't charged JIT and the profile is of what Bench times
+    graft.Session.warmUp(spark)
 
     val listener = new StageListener
     spark.sparkContext.addSparkListener(listener)
@@ -119,7 +88,7 @@ object ProfileQuery {
           // cold pass builds caches/JIT; profile the warm pass (what
           // Bench's min-of-k reports)
           try {
-            consume(fn(spark, sfDir))
+            graft.Session.consume(fn(spark, sfDir))
             planTag.foreach { tag =>
               val df = fn(spark, sfDir)
               val txt = df.queryExecution.explainString(
@@ -132,11 +101,12 @@ object ProfileQuery {
             listener.rows.synchronized(listener.rows.clear())
             val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()
-            consume(fn(spark, sfDir))
+            graft.Session.consume(fn(spark, sfDir))
             val wall = (System.nanoTime() - t0) / 1e9
             val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-            // listener bus is async; give it a beat to drain
-            Thread.sleep(300)
+            // the listener bus is async: read the rows only after
+            // every queued stage event has been delivered
+            GraftBridge.drain(spark.sparkContext)
             val rows = listener.rows.synchronized(listener.rows.toVector).sortBy(-_.taskMs)
             println(f"PROFILE $name wall=$wall%.2f s, ${rows.length} stages, " +
               f"jobsTaskTime=${rows.map(_.taskMs).sum / 1e3}%.2f s, compiles=$compiles")

@@ -20,4 +20,9 @@ object GraftBridge {
     case c: classic.SparkSession => Some(c.sessionUUID)
     case _                       => None
   }
+
+  /** Block until the `private[spark]` listener bus has delivered every
+    * queued event, so a listener's counters are complete when read.
+    */
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

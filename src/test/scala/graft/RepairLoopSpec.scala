@@ -66,7 +66,7 @@ class RepairLoopSpec extends SparkSpec {
     // R2 repair: recompute the damaged window's months from source truth
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
     fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC")) // session is UTC-pinned
-    RollupStore.repairRange(spark, events, keys, "ts", "value", grain, store,
+    RollupStore.repairRange(events, keys, "ts", "value", grain, store,
       fmt.format(damLo), fmt.format(damHi))
 
     // R3 verify: bit-identical to the never-damaged store, and the gap

@@ -40,7 +40,7 @@ class RollupStoreSpec extends SparkSpec {
     assert(spark.read.parquet(path).filter($"bucket_month" === "202401").count() == 15)
 
     // repair just January; February must stay untouched
-    RollupStore.repairRange(spark, base, Seq("symbol"), "t", "price", "1 day",
+    RollupStore.repairRange(base, Seq("symbol"), "t", "price", "1 day",
       path, "2024-01-05 00:00:00", "2024-01-20 00:00:00")
     val after = spark.read.parquet(path)
     assert(after.count() == total)

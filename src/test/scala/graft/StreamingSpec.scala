@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
     // (the reference's quality-watchdog path: G2 detect -> R2 repair)
     val truth = (ticks :+ late).toDF()
     graft.operators.RollupStore.repairRange(
-      spark, truth, Seq("symbol"), "t", "price", "15 minutes",
+      truth, Seq("symbol"), "t", "price", "15 minutes",
       s"$dir/rollup_repaired", "2024-03-01 08:00:00", "2024-03-01 09:00:00")
     val repairedHigh = spark.read.parquet(s"$dir/rollup_repaired")
       .filter($"symbol" === "BTC" && $"bucket_ts" === ts("2024-03-01 08:00:00"))

@@ -2,8 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 
 import graft.sources.Tables
 
@@ -36,11 +36,11 @@ class TablesSchemaSpec extends SparkSpec {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    TestBus.drain(spark.sparkContext)
+    GraftBridge.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      TestBus.drain(spark.sparkContext)
+      GraftBridge.drain(spark.sparkContext)
       jobs.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }
