@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   * Optional CLI args are query names: `runMain graft.Bench q_sma
   * q_knn_topk` runs just those two (dev iteration aid; the driver
   * passes none and gets the full suite). Subset runs persist to
-  * BENCH_SUBSET.json, never the full-suite BENCH_FULL.json.
+  * BENCH_SUBSET.json, never the full-suite BENCH_FULL.json. An
+  * unknown name fails the run before any query starts, listing every
+  * unknown name.
   *
   * Timing discipline: queries over 0.3 s are run SPARK_GRAFT_BENCH_K
   * (default 3) times and report their MINIMUM — the artifact carries a
@@ -25,12 +27,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val selected =
+      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else SparkEntry.lookup(args).toSeq.sortBy(_._1)
     val spark = Session.local("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Session.warmUp(spark)
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
-      else SparkEntry.queries.filter(kv => args.contains(kv._1)).toSeq.sortBy(_._1)
     var errors = List.empty[(String, String)]
     var skips = List.empty[(String, String)]
     // a scale guard firing AS DESIGNED (graft.api.Guards.Marker in the

@@ -64,12 +64,14 @@ object Session {
     * footer caches, shuffle infra, JIT of the md5/shingle/dot-product
     * hot loops), so the first query to touch each code path isn't
     * charged 5-25 s of spin-up. It runs at sf0.001 — same code paths,
-    * ~1% of the data — and ignores a query that fails there.
+    * ~1% of the data — and ignores a query that fails there. A fatal
+    * error (out of memory, an interrupt) still propagates, so a timed
+    * loop never runs in a damaged JVM.
     */
   def warmUp(spark: SparkSession): Unit =
     Seq("q_ohlcv_rollup_15m", "q_dedup_groups", "q_knn_kmeans_ivf",
       "q_simhash_neardup", "q_winnow_neardup", "q_copurchase").foreach { q =>
       try consume(SparkEntry.queries(q)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
 }

@@ -5,18 +5,18 @@ import java.nio.file.{Files, Paths}
   *
   * Optional args after (sfDir, outDir) are query names: run just those
   * (dev iteration aid; the driver passes none and gets the full suite).
+  * An unknown name fails the run, listing every unknown name.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
+    val selected = if (only.isEmpty) SparkEntry.queries else SparkEntry.lookup(only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Session.local("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

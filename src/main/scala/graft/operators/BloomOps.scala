@@ -108,18 +108,36 @@ object BloomOps {
     require(numWords > 0 && (numWords & (numWords - 1)) == 0 &&
       numWords <= MaxWords,
       s"numWords=$numWords must be a power of two <= $MaxWords")
-    require(k >= 1 && k <= 16, s"k=$k outside [1, 16]")
-    val m = numWords.toLong * 64L
-    standing
-      .select(h1Of(col(keyCol), m).as("__h1"), h2Of(col(keyCol), m).as("__h2"))
-      .select(col("__h1"), col("__h2"),
-        explode(sequence(lit(0L), lit((k - 1).toLong))).as("__i"))
-      .select((col("__h1") + col("__i") * col("__h2"))
-        .bitwiseAND(lit(m - 1L)).as("__p"))
-      .select(shr(col("__p"), lit(6)).cast(IntegerType).as("__w"),
-        shl(lit(1L), col("__p").bitwiseAND(lit(63L)).cast(IntegerType))
-          .as("__mask"))
+    probeRows(standing, keyCol, Nil, numWords.toLong * 64L, k)
       .groupBy(col("__w")).agg(expr("bit_or(__mask)").as("__bits"))
+  }
+
+  /** The k probes of every key as (word `__w`, bit `__mask`) rows:
+    * h1/h2 of the key, probe i at (h1 + i·h2) mod m, word p >> 6, bit
+    * p & 63. `carry` pairs a column with the name it has in the first
+    * projection; each carried column rides along through every
+    * projection (nothing for the dense filter, the shard id for the
+    * sharded build, the key and shard id for the sharded probe).
+    */
+  private def probeRows(
+      keys: DataFrame,
+      keyCol: String,
+      carry: Seq[(Column, String)],
+      m: Long,
+      k: Int
+  ): DataFrame = {
+    require(k >= 1 && k <= 16, s"k=$k outside [1, 16]")
+    val kept = carry.map { case (_, name) => col(name) }
+    keys
+      .select(carry.map(_._1) ++
+        Seq(h1Of(col(keyCol), m).as("__h1"), h2Of(col(keyCol), m).as("__h2")): _*)
+      .select(kept ++ Seq(col("__h1"), col("__h2"),
+        explode(sequence(lit(0L), lit((k - 1).toLong))).as("__i")): _*)
+      .select(kept :+ (col("__h1") + col("__i") * col("__h2"))
+        .bitwiseAND(lit(m - 1L)).as("__p"): _*)
+      .select(kept ++ Seq(shr(col("__p"), lit(6)).cast(IntegerType).as("__w"),
+        shl(lit(1L), col("__p").bitwiseAND(lit(63L)).cast(IntegerType))
+          .as("__mask")): _*)
   }
 
   /** Dense word array from sparse word rows — ≤ [[MaxWords]] longs of
@@ -265,20 +283,9 @@ object BloomOps {
     require(nShards >= 1, s"nShards=$nShards must be positive")
     require(wordsPerShard > 0 && (wordsPerShard & (wordsPerShard - 1)) == 0,
       s"wordsPerShard=$wordsPerShard must be a power of two")
-    require(k >= 1 && k <= 16, s"k=$k outside [1, 16]")
-    val m = wordsPerShard.toLong * 64L
-    standing
-      .select(shardOf(col(keyCol), nShards).as("__shard"),
-        h1Of(col(keyCol), m).as("__h1"), h2Of(col(keyCol), m).as("__h2"))
-      .select(col("__shard"), col("__h1"), col("__h2"),
-        explode(sequence(lit(0L), lit((k - 1).toLong))).as("__i"))
-      .select(col("__shard"),
-        (col("__h1") + col("__i") * col("__h2"))
-          .bitwiseAND(lit(m - 1L)).as("__p"))
-      .select(col("__shard"),
-        shr(col("__p"), lit(6)).cast(IntegerType).as("__w"),
-        shl(lit(1L), col("__p").bitwiseAND(lit(63L)).cast(IntegerType))
-          .as("__mask"))
+    probeRows(standing, keyCol,
+        Seq(shardOf(col(keyCol), nShards).as("__shard") -> "__shard"),
+        wordsPerShard.toLong * 64L, k)
       .groupBy(col("__shard"), col("__w"))
       .agg(expr("bit_or(__mask)").as("__bits"))
   }
@@ -300,20 +307,9 @@ object BloomOps {
       wordsPerShard: Int,
       k: Int
   ): DataFrame = {
-    require(k >= 1 && k <= 16, s"k=$k outside [1, 16]")
-    val m = wordsPerShard.toLong * 64L
-    val probes = batch.select(col(keyCol)).distinct()
-      .select(col(keyCol), shardOf(col(keyCol), nShards).as("__shard"),
-        h1Of(col(keyCol), m).as("__h1"), h2Of(col(keyCol), m).as("__h2"))
-      .select(col(keyCol), col("__shard"), col("__h1"), col("__h2"),
-        explode(sequence(lit(0L), lit((k - 1).toLong))).as("__i"))
-      .select(col(keyCol), col("__shard"),
-        (col("__h1") + col("__i") * col("__h2"))
-          .bitwiseAND(lit(m - 1L)).as("__p"))
-      .select(col(keyCol), col("__shard"),
-        shr(col("__p"), lit(6)).cast(IntegerType).as("__w"),
-        shl(lit(1L), col("__p").bitwiseAND(lit(63L)).cast(IntegerType))
-          .as("__mask"))
+    val probes = probeRows(batch.select(col(keyCol)).distinct(), keyCol,
+      Seq(col(keyCol) -> keyCol, shardOf(col(keyCol), nShards).as("__shard") -> "__shard"),
+      wordsPerShard.toLong * 64L, k)
     val verdict = probes
       .join(shardRows, Seq("__shard", "__w"), "left")
       .withColumn("__hit",

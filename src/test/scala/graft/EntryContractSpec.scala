@@ -1,11 +1,17 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.Q
+
 /** Driver-contract invariants for SparkEntry that the compiler cannot
-  * enforce: Scala Map literals silently drop duplicate keys (a
-  * duplicated query name shadows the earlier definition — this bit us
-  * once), and every oracle must refer to a defined query.
+  * enforce: a query name is defined once across the family modules (a
+  * map built from two records with one name keeps only one of them;
+  * a duplicated Map-literal key shadowed a query once), every oracle
+  * refers to a defined query, and a name handed to a main is a query.
   */
 class EntryContractSpec extends AnyFunSuite {
 
@@ -27,16 +33,30 @@ class EntryContractSpec extends AnyFunSuite {
   }
 
   test("no query or oracle name is defined twice in the source (shadowing)") {
-    val src = scala.io.Source.fromFile("src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val text = try src.mkString finally src.close()
-    val defs = "\"(q[a-z0-9_]+)\" ->".r.findAllMatchIn(text).map(_.group(1)).toSeq
-    val over = defs.groupBy(identity).view.mapValues(_.size).filter(_._2 > 2)
-    assert(over.isEmpty,
-      s"names defined more than twice (query + oracle = 2 is the max): ${over.toMap}")
-    // and each name bound at most once per map: total defs must equal
-    // queries-map size + oracle-map size
-    assert(defs.size == SparkEntry.queries.size + SparkEntry.oracleSql.size,
-      s"${defs.size} source bindings vs ${SparkEntry.queries.size} queries + " +
-        s"${SparkEntry.oracleSql.size} oracles — a duplicate key is shadowing an entry")
+    // a record holds a query and its oracle, so one definition per name
+    // across every family module; comments are skipped, so a name only
+    // mentioned in prose does not count
+    val defs = SourceCode.sources("src/main/scala/graft/queries").flatMap { p =>
+      "\\bQ\\(\"(q[a-z0-9_]+)\"".r
+        .findAllMatchIn(SourceCode.code(Files.readString(p))).map(_.group(1))
+    }
+    val twice = defs.groupBy(identity).view.mapValues(_.size).filter(_._2 > 1)
+    assert(twice.isEmpty, s"names defined more than once: ${twice.toMap}")
+    assert(defs.size == SparkEntry.queries.size,
+      s"${defs.size} records in the query modules vs ${SparkEntry.queries.size} queries")
+  }
+
+  test("the assembler rejects two records with the same name") {
+    val run: (SparkSession, String) => DataFrame = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException](SparkEntry.assemble(Seq(
+      Q("q_a", run, None), Q("q_b", run, None), Q("q_a", run, Some("SELECT 1")))))
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"), e.getMessage)
+  }
+
+  test("a name lookup fails listing every unknown name") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.lookup(Seq("q_sma", "q_nope", "q_smaa")))
+    assert(e.getMessage.endsWith("unknown query names: q_nope, q_smaa"), e.getMessage)
+    assert(SparkEntry.lookup(Seq("q_sma", "q_rsi")).keySet == Set("q_sma", "q_rsi"))
   }
 }
