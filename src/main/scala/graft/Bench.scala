@@ -54,7 +54,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { Session.consume(fn(spark, sfDir)) }
       catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(200)
           if (designedGuard(e)) skips ::= (name, msg)

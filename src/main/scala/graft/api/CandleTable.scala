@@ -47,40 +47,28 @@ final class CandleTable private (
     * argMin(open,start), max(high), min(low), argMax(close,start),
     * sum(volume), sum(trades).
     */
-  def rollup(timeframe: String): DataFrame = {
-    val tf = Timeframe.parse(timeframe)
-    val groupKeys = keys.filterNot(_ == "interval").map(col) :+
-      graft.functions.TimeBucket.time_bucket(col(tsCol), tf.sparkInterval).as("bucket_ts")
-    df.groupBy(groupKeys: _*)
-      .agg(
-        min_by(col("open"), col(tsCol)).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col(tsCol)).as("close"),
-        CandleOps.moneySum(col("volume")).as("volume"),
-        sum(col("trades").cast("long")).as("trades"))
-  }
+  def rollup(timeframe: String): DataFrame = candles(timeframe).drop("vol_cents")
 
   /** [[rollup]] with the volume as EXACT long cents (each candle's
     * volume quantized per row via [[graft.functions.Cents]] before
-    * summation — the [[CandleOps.ohlcvRollupCents]] discipline: no
-    * rehydrated double is ever re-quantized, lossless at any scale).
-    * The cent-exact volume consumers (OBV, MFI, Kyle λ, Amihud, VPIN,
-    * volume profile) dispatch on the `vol_cents` column automatically.
+    * summation: no rehydrated double is ever re-quantized, lossless at
+    * any scale). The cent-exact volume consumers (OBV, MFI, Kyle λ,
+    * Amihud, VPIN, volume profile) dispatch on the `vol_cents` column
+    * automatically.
     */
-  def rollupCents(timeframe: String): DataFrame = {
-    val tf = Timeframe.parse(timeframe)
-    val cents = graft.functions.Cents.cents(col("volume"))
-    val groupKeys = keys.filterNot(_ == "interval").map(col) :+
-      graft.functions.TimeBucket.time_bucket(col(tsCol), tf.sparkInterval).as("bucket_ts")
-    df.groupBy(groupKeys: _*)
-      .agg(
-        min_by(col("open"), col(tsCol)).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col(tsCol)).as("close"),
-        sum(cents).as("vol_cents"),
-        sum(col("trades").cast("long")).as("trades"))
+  def rollupCents(timeframe: String): DataFrame = candles(timeframe).drop("volume")
+
+  /** The one candle aggregate behind [[rollup]] and [[rollupCents]],
+    * carrying both volume forms; each drops the one it does not
+    * publish, and column pruning removes that aggregate from the plan.
+    */
+  private def candles(timeframe: String): DataFrame = {
+    val ts = col(tsCol)
+    CandleOps.bucketed(df, rkeys, ts, Timeframe.parse(timeframe).sparkInterval,
+      CandleOps.ohlc(col("open"), ts, col("high"), col("low"), col("close"), ts) ++ Seq(
+        CandleOps.moneySum(col("volume")).as("volume"),
+        sum(graft.functions.Cents.cents(col("volume"))).as("vol_cents"),
+        sum(col("trades").cast("long")).as("trades")))
   }
 
   /** G2 — grid buckets with no candle, per key. */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * when applied to a REHYDRATED sum (a cents total finished to double
   * and re-quantized) past ~1e13 dollars — so quantize per row before
   * aggregation, never after (see
-  * [[graft.operators.CandleOps.ohlcvRollupCents]]).
+  * [[graft.operators.CandleOps.ohlcvRollup]]).
   *
   * MIGRATION NOTE (round 9 format break): this quantization REPLACED
   * the earlier `CAST(double AS DECIMAL(18,2))` in every cent path, and

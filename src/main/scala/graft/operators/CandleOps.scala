@@ -56,6 +56,11 @@ object CandleOps {
   private[operators] def withLags(df: DataFrame, c: String, n: Int, wOrd: WindowSpec): DataFrame =
     df.select(col("*") +: (1 until n).map(j => lag(col(c), j).over(wOrd).as(lagName(c, j))): _*)
 
+  /** Price column `c` in whole cents, `round(c * 100)` as a long — the
+    * indicators' exact-integer price form.
+    */
+  private[operators] def cts(c: String): Column = round(col(c) * 100).cast(LongType)
+
   /** `c` and its staged lags 1 until `n` — the x_j inputs of [[emaNumDen]]. */
   private[operators] def lagged(c: String, n: Int): Seq[Column] =
     col(c) +: (1 until n).map(j => col(lagName(c, j)))
@@ -102,15 +107,56 @@ object CandleOps {
   // app/clickhouse_schema.py:167-206, bucket expr :82-91).
   // ---------------------------------------------------------------------
 
-  /** Tumbling-window OHLCV rollup: argMin(open)/max/min/argMax(close)/
-    * sum(volume)/count. `window(ts, grain)` keeps the bucket expression
-    * inside whole-stage codegen and Catalyst plans a single partial+final
-    * hash aggregate (map-side combine → one shuffle on the group keys).
+  /** The candle, defined once: open at the earliest `openTs`, the
+    * highest `high`, the lowest `low`, close at the latest `closeTs` —
+    * the reference MV's argMin(open)/max(high)/min(low)/argMax(close)
+    * (app/clickhouse_schema.py:179-185). Every OHLCV aggregate, batch
+    * and streaming, appends its own trades, volume and carrier columns
+    * to this list. Over ticks all four read one value at one timestamp
+    * (the two-argument form); over candles or a carrier rollup they read
+    * the candle's own columns and carrier timestamps.
+    */
+  private[graft] def ohlc(
+      open: Column, openTs: Column,
+      high: Column, low: Column,
+      close: Column, closeTs: Column
+  ): Seq[Column] = Seq(
+    min_by(open, openTs).as("open"),
+    max(high).as("high"),
+    min(low).as("low"),
+    max_by(close, closeTs).as("close"))
+
+  /** [[ohlc]] of the ticks `v` at `ts`. */
+  private[graft] def ohlc(v: Column, ts: Column): Seq[Column] = ohlc(v, ts, v, v, v, ts)
+
+  /** The tick rollup's aggregates, batch ([[ohlcvRollup]]) and
+    * streaming (`StreamingRollup.streamingOhlcv`) alike: [[ohlc]],
+    * `trades`, then either the double `volume` or the re-aggregable
+    * carriers `open_ts`/`close_ts`/`vol_cents`.
+    */
+  private[graft] def ohlcvAggs(v: Column, ts: Column, withCarriers: Boolean): Seq[Column] =
+    ohlc(v, ts) ++ (count(lit(1)).as("trades") +: (
+      if (withCarriers)
+        Seq(
+          min(ts).as("open_ts"),
+          max(ts).as("close_ts"),
+          sum(graft.functions.Cents.cents(v)).as("vol_cents"))
+      else Seq(moneySum(v).as("volume"))))
+
+  /** Tumbling-window OHLCV rollup: [[ohlc]], count and sum(volume) per
+    * key and `TimeBucket.time_bucket(ts, grain)` bucket. The bucket
+    * expression stays inside whole-stage codegen and Catalyst plans a
+    * single partial+final hash aggregate (map-side combine → one
+    * shuffle on the group keys).
     *
     * With `withCarriers=true` the output keeps `open_ts`/`close_ts`, the
     * argmin/argmax carriers that make coarser re-aggregation associative
     * (the ClickHouse `-State` trick, SURVEY.md §1.3), plus exact long
-    * `vol_cents` for further summation.
+    * `vol_cents` for further summation. Dropping the two carrier
+    * timestamps gives the cent-exact candle (volume as per-row
+    * quantized long cents, never a rehydrated double re-quantized —
+    * see [[graft.functions.Cents]]) that the cent-exact volume
+    * consumers read; column pruning removes the two unused aggregates.
     */
   def ohlcvRollup(
       df: DataFrame,
@@ -119,62 +165,24 @@ object CandleOps {
       valueCol: String,
       grain: String,
       withCarriers: Boolean = false
-  ): DataFrame = {
-    val ts = col(tsCol)
-    val v = col(valueCol)
-    val grouped = df.groupBy(
-      keys.map(col) :+ graft.functions.TimeBucket.time_bucket(ts, grain).as("bucket_ts"): _*
-    )
-    val base = Seq(
-      min_by(v, ts).as("open"),
-      max(v).as("high"),
-      min(v).as("low"),
-      max_by(v, ts).as("close"),
-      count(lit(1)).as("trades")
-    )
-    val extra =
-      if (withCarriers)
-        Seq(
-          min(ts).as("open_ts"),
-          max(ts).as("close_ts"),
-          sum(graft.functions.Cents.cents(v)).as("vol_cents")
-        )
-      else Seq(moneySum(v).as("volume"))
-    grouped.agg((base ++ extra).head, (base ++ extra).tail: _*)
-  }
+  ): DataFrame =
+    bucketed(df, keys, col(tsCol), grain, ohlcvAggs(col(valueCol), col(tsCol), withCarriers))
 
-  /** [[ohlcvRollup]] with the volume published as EXACT long cents
-    * (per-row pure-IEEE `floor(value*100+0.5)`, summed as longs)
-    * instead of a rehydrated double — the input shape for cent-exact
-    * volume consumers (OBV, MFI, Kyle λ, Amihud, VPIN, volume
-    * profile). Quantizing a REHYDRATED double back to cents is
-    * genuinely lossy once the sum passes ~1e13 dollars (double ulp ×
-    * 100 > 0.5 cent) — per-row quantization before aggregation has no
-    * such failure mode at any scale (see [[graft.functions.Cents]]).
+  /** `aggs` per key and `TimeBucket.time_bucket(ts, grain)` bucket,
+    * named `bucket_ts` — the batch twin of `StreamingRollup.windowed`.
     */
-  def ohlcvRollupCents(
+  private[graft] def bucketed(
       df: DataFrame,
       keys: Seq[String],
-      tsCol: String,
-      valueCol: String,
-      grain: String
-  ): DataFrame = {
-    val ts = col(tsCol)
-    val v = col(valueCol)
-    val cents = graft.functions.Cents.cents(v)
-    df.groupBy(
-      keys.map(col) :+ graft.functions.TimeBucket.time_bucket(ts, grain).as("bucket_ts"): _*
-    ).agg(
-      min_by(v, ts).as("open"),
-      max(v).as("high"),
-      min(v).as("low"),
-      max_by(v, ts).as("close"),
-      count(lit(1)).as("trades"),
-      sum(cents).as("vol_cents"))
-  }
+      ts: Column,
+      grain: String,
+      aggs: Seq[Column]
+  ): DataFrame =
+    df.groupBy(keys.map(col) :+ graft.functions.TimeBucket.time_bucket(ts, grain).as("bucket_ts"): _*)
+      .agg(aggs.head, aggs.tail: _*)
 
   /** Exact long cent volume off a rollup column. A column NAMED
-    * `vol_cents` (the [[ohlcvRollupCents]] contract — either requested
+    * `vol_cents` (the carrier rollup's exact cents — either requested
     * directly or present alongside a missing `volumeCol`) is consumed
     * as already-exact cents; anything else is quantized per row via
     * [[graft.functions.Cents]]. Dispatch is on the contract NAME, not
@@ -203,23 +211,14 @@ object CandleOps {
       keys: Seq[String],
       bucketCol: String,
       grain: String
-  ): DataFrame = {
-    val grouped = rollup.groupBy(
-      keys.map(col) :+ graft.functions.TimeBucket.time_bucket(col(bucketCol), grain).as("bucket_ts"): _*
-    )
-    grouped
-      .agg(
-        min_by(col("open"), col("open_ts")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col("close_ts")).as("close"),
+  ): DataFrame =
+    bucketed(rollup, keys, col(bucketCol), grain,
+      ohlc(col("open"), col("open_ts"), col("high"), col("low"), col("close"), col("close_ts")) ++ Seq(
         count(lit(1)).as("buckets"),
         sum(col("trades")).as("trades"),
         min(col("open_ts")).as("open_ts"),
         max(col("close_ts")).as("close_ts"),
-        sum(col("vol_cents")).as("vol_cents")
-      )
-  }
+        sum(col("vol_cents")).as("vol_cents")))
 
   /** Finish a carrier rollup to its user-facing shape (drop carriers,
     * exact cents → double) — the analog of ClickHouse `-Merge`
@@ -661,7 +660,6 @@ object CandleOps {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
     val ws = wOrd.rowsBetween(-(smoothN - 1), Window.currentRow)
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
     val withBounds = spreadByKeys(rollup, keys)
       .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+
         max(cts("high")).over(w).as("__hi") :+ min(cts("low")).over(w).as("__lo")): _*)
@@ -715,7 +713,6 @@ object CandleOps {
   private def trueRange(
       spread: DataFrame, keys: Seq[String], bucketCol: String, wOrd: WindowSpec,
       nLags: Int = 2): DataFrame = {
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
     val staged = spread.select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("__c") :+
       cts("high").as("__h") :+ cts("low").as("__l")): _*)
     val pc = col(lagName("__c", 1))
@@ -787,7 +784,6 @@ object CandleOps {
     require(nWindow > 1, s"nWindow=$nWindow must exceed 1")
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
     val w = wOrd.rowsBetween(-(nWindow - 1), Window.currentRow)
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
     val (close, upper, lower) = (col("close_cents"), col("upper_cents"), col("lower_cents"))
     spreadByKeys(rollup, keys)
       .select((keys.map(col) :+ col(bucketCol) :+ cts("close").as("close_cents") :+
@@ -843,7 +839,6 @@ object CandleOps {
       bucketCol: String
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
     val ph = col("prev_high_cents")
     val pl = col("prev_low_cents")
     val pc = col("prev_close_cents")
@@ -1195,7 +1190,6 @@ object CandleOps {
       bucketCol: String
   ): DataFrame = {
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col(bucketCol))
-    def cts(c: String) = round(col(c) * 100).cast(LongType)
     val (o, h, l, c) =
       (col("open_cents"), col("high_cents"), col("low_cents"), col("close_cents"))
     val body = abs(c - o)

@@ -37,7 +37,7 @@ object MicrostructureOps {
 
 
   private val dec = DecimalType(38, 0)
-  private def cts(c: String) = round(col(c) * 100).cast(LongType)
+  import CandleOps.cts
 
   /** Williams %R: where the close sits inside the trailing
     * `nWindow`-bar high/low envelope, scaled to [-100, 0].

@@ -56,8 +56,9 @@ object RollupStore {
       .parquet(path)
 
   /** Carrier build: like [[build]] but keeps the argmin/argmax carrier
-    * timestamps and exact decimal volume — the re-aggregable form the
-    * cascade (A6) and the RollupRouter optimizer rule consume.
+    * timestamps and the exact long `vol_cents` volume — the
+    * re-aggregable form the cascade (A6) and the RollupRouter optimizer
+    * rule consume.
     *
     * When the base frame is a plain file scan (the production shape),
     * the build also drops a route manifest into the rollup dir, so a

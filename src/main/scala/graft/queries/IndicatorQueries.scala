@@ -360,9 +360,12 @@ object IndicatorQueries {
   private def userCandles(s: SparkSession, dir: String, grain: String): DataFrame =
     CandleOps.ohlcvRollup(Tables.events(s, dir), Seq("user_id"), "ts", "value", grain)
 
-  /** [[userCandles]] with exact cent volumes. */
+  /** [[userCandles]] with exact cent volumes: the carrier rollup
+    * without its two carrier timestamps.
+    */
   private def userCandlesCents(s: SparkSession, dir: String, grain: String): DataFrame =
-    CandleOps.ohlcvRollupCents(Tables.events(s, dir), Seq("user_id"), "ts", "value", grain)
+    CandleOps.ohlcvRollup(Tables.events(s, dir), Seq("user_id"), "ts", "value", grain,
+      withCarriers = true).drop("open_ts", "close_ts")
 
   val all: Seq[Q] = Seq(
     // ----- Window-frame analytics: moving average over rollups --------

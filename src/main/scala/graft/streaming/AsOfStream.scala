@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Neither a windowed aggregate nor a stream-stream equi/interval join
   * can express "closest qualifying right, else null": the interval
   * join ([[StreamJoin]]) emits EVERY right row in the band and drops
-  * matchless lefts. So this is `flatMapGroupsWithState` (the
-  * [[CandleAssembler]] pattern): per-key buffers of pending lefts and
-  * candidate rights, with event-time-timeout sealing.
+  * matchless lefts. So this is `flatMapGroupsWithState`: per-key
+  * buffers of pending lefts and candidate rights, with
+  * event-time-timeout sealing.
   *
   * Correctness contract (stream ≡ batch, spec-asserted): a left seals
   * only once the watermark guarantees its match set is complete —

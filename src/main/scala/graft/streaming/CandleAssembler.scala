@@ -3,91 +3,52 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions._
+
+import graft.operators.CandleOps
 
 /** Engine-side candle construction from raw trades — the stage the
   * reference outsources to the exchange (`candle_closed_only=True`
-  * hands it pre-built 1m candles, app/data_collector.py:151). Built
-  * with `flatMapGroupsWithState`: per (symbol, bucket) mutable OHLCV+
-  * VWAP state, candles emitted exactly once when the event-time
-  * watermark passes the bucket end (plus grace) — semantics a plain
-  * windowed aggregation can't express once you need arbitrary state
-  * (VWAP numerator, first/last tiebreaks by trade id, emit-on-close).
+  * hands it pre-built 1m candles, app/data_collector.py:151). A
+  * watermarked tumbling-window aggregation per (symbol, bucket): the
+  * shared candle ([[CandleOps.ohlc]]: open at the earliest trade, close
+  * at the latest), `sum(qty)` volume and `sum(price * qty) / sum(qty)`
+  * VWAP, falling back to the close when the volume is 0. Append mode
+  * emits each candle exactly once, when the event-time watermark passes
+  * the bucket end. Trades with equal timestamps tie in aggregation
+  * order.
   *
-  * State size: one small struct per open (symbol, bucket) — bounded by
-  * watermark horizon x symbol count, independent of trade volume.
+  * State size: one partial aggregate per open (symbol, bucket) —
+  * bounded by watermark horizon x symbol count, independent of trade
+  * volume.
   */
 object CandleAssembler {
 
   case class Trade(symbol: String, ts: Timestamp, price: Double, qty: Double)
-
-  case class BucketKey(symbol: String, bucketStartMs: Long)
-
-  case class CandleState(
-      open: Double, openTsMs: Long,
-      high: Double, low: Double,
-      close: Double, closeTsMs: Long,
-      volume: Double, notional: Double, trades: Long)
 
   case class AssembledCandle(
       symbol: String, bucket_ts: Timestamp,
       open: Double, high: Double, low: Double, close: Double,
       volume: Double, vwap: Double, trades: Long)
 
-  /** @param grainMs    bucket width (e.g. 60000 for 1m candles)
-    * @param graceMs    extra event-time to wait after bucket end before
-    *                   sealing (late-trade tolerance inside watermark)
-    */
+  /** @param grainMs bucket width (e.g. 60000 for 1m candles) */
   def assemble(
       trades: Dataset[Trade],
       grainMs: Long,
-      watermark: String,
-      graceMs: Long = 0L
+      watermark: String
   ): Dataset[AssembledCandle] = {
-    implicit val keyEnc = Encoders.product[BucketKey]
-    implicit val stateEnc = Encoders.product[CandleState]
-    implicit val outEnc = Encoders.product[AssembledCandle]
-    implicit val tradeEnc = Encoders.product[Trade]
-
-    def update(
-        key: BucketKey,
-        rows: Iterator[Trade],
-        state: GroupState[CandleState]
-    ): Iterator[AssembledCandle] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator.single(AssembledCandle(
-          key.symbol, new Timestamp(key.bucketStartMs),
-          s.open, s.high, s.low, s.close,
-          s.volume, if (s.volume > 0) s.notional / s.volume else s.close,
-          s.trades))
-      } else {
-        var s = state.getOption.getOrElse(
-          CandleState(0, Long.MaxValue, Double.MinValue, Double.MaxValue,
-            0, Long.MinValue, 0, 0, 0))
-        rows.foreach { t =>
-          val ms = t.ts.getTime
-          if (ms < s.openTsMs) s = s.copy(open = t.price, openTsMs = ms)
-          if (ms > s.closeTsMs) s = s.copy(close = t.price, closeTsMs = ms)
-          s = s.copy(
-            high = math.max(s.high, t.price),
-            low = math.min(s.low, t.price),
-            volume = s.volume + t.qty,
-            notional = s.notional + t.price * t.qty,
-            trades = s.trades + 1)
-        }
-        state.update(s)
-        // seal when the watermark passes bucket end (+ grace)
-        state.setTimeoutTimestamp(key.bucketStartMs + grainMs + graceMs)
-        Iterator.empty
-      }
-    }
-
-    trades
-      .withWatermark("ts", watermark)
-      .groupByKey(t => BucketKey(t.symbol, t.ts.getTime - math.floorMod(t.ts.getTime, grainMs)))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    val (price, qty, volume) = (col("price"), col("qty"), col("volume"))
+    StreamingRollup.windowed(trades.toDF(), Seq("symbol"), "ts",
+        s"$grainMs milliseconds", watermark,
+        CandleOps.ohlc(price, col("ts")) ++ Seq(
+          sum(qty).as("volume"),
+          sum(price * qty).as("notional"),
+          count(lit(1)).as("trades")))
+      .select(
+        col("symbol"), col("bucket_ts"),
+        col("open"), col("high"), col("low"), col("close"), volume,
+        when(volume > 0, col("notional") / volume).otherwise(col("close")).as("vwap"),
+        col("trades"))
+      .as(Encoders.product[AssembledCandle])
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * 405-426 reads exchange JSON and feeds the candle pipeline). Here the
   * transport is Structured Streaming's Kafka source and the decode is a
   * declarative `from_json` projection, so the SAME [[CandleAssembler]]
-  * state machine runs behind either a broker or any test source that
+  * aggregation runs behind either a broker or any test source that
   * produces the wire schema.
   *
   * Split on purpose:
@@ -85,8 +85,7 @@ object KafkaWire {
   def assembledCandles(
       wire: DataFrame,
       grainMs: Long,
-      watermark: String,
-      graceMs: Long = 0L
+      watermark: String
   ): Dataset[CandleAssembler.AssembledCandle] =
-    CandleAssembler.assemble(trades(wire), grainMs, watermark, graceMs)
+    CandleAssembler.assemble(trades(wire), grainMs, watermark)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
@@ -31,9 +31,10 @@ import graft.operators.CandleOps
 object StreamingRollup {
 
   /** Watermarked tumbling OHLCV aggregation over a streaming frame.
-    * Identical aggregate expressions to the batch path (CandleOps
-    * .ohlcvRollup) — the equivalence the tests assert. State size is
-    * bounded by (#keys × windows inside watermark), not by history.
+    * The batch path's aggregate list (`CandleOps.ohlcvAggs`, shared
+    * with `CandleOps.ohlcvRollup`) — the equivalence the tests assert.
+    * State size is bounded by (#keys × windows inside watermark), not
+    * by history.
     *
     * With `withCarriers=true` the stream emits the SAME re-aggregable
     * carrier shape as `CandleOps.ohlcvRollup(withCarriers = true)`
@@ -51,30 +52,29 @@ object StreamingRollup {
       grain: String,
       watermark: String,
       withCarriers: Boolean = false
-  ): DataFrame = {
-    val ts = col(tsCol)
-    val v = col(valueCol)
-    val base = Seq(
-      min_by(v, ts).as("open"),
-      max(v).as("high"),
-      min(v).as("low"),
-      max_by(v, ts).as("close"),
-      count(lit(1)).as("trades"))
-    val extra =
-      if (withCarriers)
-        Seq(
-          min(ts).as("open_ts"),
-          max(ts).as("close_ts"),
-          sum(graft.functions.Cents.cents(v)).as("vol_cents"))
-      else Seq(CandleOps.moneySum(v).as("volume"))
-    val aggs = base ++ extra
+  ): DataFrame =
+    windowed(stream, keys, tsCol, grain, watermark,
+      CandleOps.ohlcvAggs(col(valueCol), col(tsCol), withCarriers))
+
+  /** `aggs` per key and tumbling event-time window of `grain` over a
+    * stream watermarked on `tsCol`, with the window start as
+    * `bucket_ts`. In append mode each window is emitted exactly once,
+    * when the watermark passes its end.
+    */
+  private[streaming] def windowed(
+      stream: DataFrame,
+      keys: Seq[String],
+      tsCol: String,
+      grain: String,
+      watermark: String,
+      aggs: Seq[Column]
+  ): DataFrame =
     stream
       .withWatermark(tsCol, watermark)
-      .groupBy(keys.map(col) :+ window(ts, grain).as("__w"): _*)
+      .groupBy(keys.map(col) :+ window(col(tsCol), grain).as("__w"): _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("bucket_ts", col("__w.start"))
       .drop("__w")
-  }
 
   /** Exactly-once sink into a parquet rollup directory, partitioned by
     * month of bucket (the reference's `PARTITION BY toYYYYMM`,

@@ -70,4 +70,26 @@ class CandleAssemblerSpec extends SparkSpec {
       assert(c.trades == 2 && c.high == 200.0)
     } finally q.stop()
   }
+
+  test("a bucket whose trades all have qty 0 publishes volume 0 and vwap = close") {
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[Trade]
+    val candles = CandleAssembler.assemble(
+      source.toDS(), grainMs = 60000L, watermark = "30 seconds")
+    val q = candles.writeStream.outputMode("append")
+      .format("memory").queryName("assembled_zero_qty").start()
+    try {
+      source.addData(
+        Trade("BTC", ts("2024-03-01 08:00:05"), 100.0, 0.0),
+        Trade("BTC", ts("2024-03-01 08:00:40"), 102.0, 0.0))
+      q.processAllAvailable()
+      source.addData(Trade("BTC", ts("2024-03-01 08:10:00"), 1.0, 1.0)) // seal
+      q.processAllAvailable()
+      val c = spark.table("assembled_zero_qty")
+        .filter($"bucket_ts" === ts("2024-03-01 08:00:00"))
+        .as[CandleAssembler.AssembledCandle].head()
+      assert(c.trades == 2 && c.open == 100.0 && c.close == 102.0)
+      assert(c.volume == 0.0 && c.vwap == 102.0)
+    } finally q.stop()
+  }
 }

@@ -89,6 +89,14 @@ class CandleOpsSpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
+  test("the candle's argmin open is defined once in main code") {
+    // RollupRouting's Catalyst rewrite maps a matched MinBy onto the
+    // rollup's carriers; it reads the candle, it does not define one
+    val defs = SourceCode.census("""\bmin_by\(|\bMinBy\(""", "src/main/scala")
+      .filter { case (f, _) => !f.endsWith("org/apache/spark/sql/graft/RollupRouting.scala") }
+    assert(defs == Map("src/main/scala/graft/operators/CandleOps.scala" -> 1))
+  }
+
   test("P3 candleChecks rejects exactly the CHECK-violating rows") {
     val good = candle("BTC-USDT", "2024-03-01 08:00:00", 10, 12, 9, 11, 100)
     val badOrder = candle("BTC-USDT", "2024-03-01 08:01:00", 10, 9, 11, 11, 100) // high<open, low>open

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions.{array, col, lit, map, struct}
 
 /** The run harness exists once: every session in `src/` is built by
@@ -9,16 +7,7 @@ import org.apache.spark.sql.functions.{array, col, lit, map, struct}
   * is defined once, in [[Session.consume]].
   */
 class SessionSpec extends SparkSpec {
-  import SourceCode.{code, sources}
-
-  /** Occurrences of `needle` in the code (not the comments) of every
-    * Scala file under `roots`, by file; files without one are left out.
-    */
-  private def census(needle: String, roots: String*): Map[String, Int] =
-    roots.flatMap(sources).flatMap { p =>
-      val n = needle.r.findAllIn(code(Files.readString(p))).size
-      if (n > 0) Some(p.toString -> n) else None
-    }.toMap
+  import SourceCode.{census, code}
 
   test("sessions are built and queries consumed only through graft.Session") {
     // split so this file's own literal is not a builder call

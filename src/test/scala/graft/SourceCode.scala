@@ -51,6 +51,16 @@ object SourceCode {
     out.toString
   }
 
+  /** Occurrences of the regex `needle` in the code (not the comments)
+    * of every Scala file under `roots`, by file; files without one are
+    * left out.
+    */
+  def census(needle: String, roots: String*): Map[String, Int] =
+    roots.flatMap(sources).flatMap { p =>
+      val n = needle.r.findAllIn(code(Files.readString(p))).size
+      if (n > 0) Some(p.toString -> n) else None
+    }.toMap
+
   /** Every Scala file under `root`. */
   def sources(root: String): Seq[Path] = {
     val s = Files.walk(Paths.get(root))
