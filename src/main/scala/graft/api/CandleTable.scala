@@ -76,13 +76,6 @@ final class CandleTable private (
     GapOps.missingBuckets(df, keys.filterNot(_ == "interval"), tsCol,
       Timeframe.parse(timeframe).sparkInterval)
 
-  /** G3 — contiguous runs of present buckets, per key. */
-  def gapRanges(timeframe: String): DataFrame = {
-    val tf = Timeframe.parse(timeframe)
-    GapOps.islandRanges(df, keys.filterNot(_ == "interval"), tsCol,
-      tf.sparkInterval, tf.seconds)
-  }
-
   /** G4 — staleness per key against an anchor "now". */
   def freshness(anchor: org.apache.spark.sql.Column, staleAfter: String = "2m"): DataFrame =
     GapOps.freshnessLag(df, keys.filterNot(_ == "interval"), tsCol, anchor,

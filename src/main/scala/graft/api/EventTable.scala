@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.operators.{EventOps, QualityReport, SessionOps, SketchStore}
+import graft.operators.{EventOps, QualityReport, SessionOps}
 
 /** Fluent facade over the event-analytics family — the product-
   * analytics axis of the engine, mirroring [[CandleTable]] (market
@@ -56,18 +56,9 @@ final case class EventTable(
   def sigmaOutliers(valueCol: String, k: Int): DataFrame =
     EventOps.sigmaOutliers(df, typeCol, valueCol, k)
 
-  /** Rolling per-user k-sigma monitor over the trailing `windowRows`. */
-  def rollingOutliers(valueCol: String, windowRows: Int, k: Int): DataFrame =
-    EventOps.rollingSigmaOutliers(df, userCol, tsCol, idCol, valueCol,
-      windowRows, k)
-
   /** Robust median/MAD outliers of `valueCol` per event type. */
   def madOutliers(valueCol: String, k: Double): DataFrame =
     EventOps.madOutliers(df, typeCol, valueCol, k)
-
-  /** Inter-arrival gap histogram per event type (exact log2 buckets). */
-  def interArrival(): DataFrame =
-    EventOps.interArrivalHistogram(df, typeCol, tsCol, idCol)
 
   /** First-order Markov transition matrix over user journeys. */
   def transitions(): DataFrame =
@@ -111,20 +102,6 @@ final case class EventTable(
   /** Inactivity-gap sessions per user. */
   def sessions(gap: String, valueCol: String): DataFrame =
     SessionOps.sessionSummaries(df, Seq(userCol), tsCol, valueCol, gap)
-
-  /** Per-session funnel levels: sessionize, then run the chain keyed
-    * on (user, session). Composite keys reuse the sessionizer's
-    * exchange — one shuffle end to end.
-    */
-  def sessionFunnelLevels(
-      gapSeconds: Long, steps: Seq[String], windowUs: Long): DataFrame =
-    EventOps.funnelLevelsByKey(
-      SessionOps.assignSessions(df, Seq(userCol), tsCol, gapSeconds),
-      Seq(userCol, "session_n"), typeCol, tsCol, steps, windowUs)
-
-  /** Daily mergeable HLL distinct-user sketches (the sketch store). */
-  def dailyUserSketches(lgK: Int = 12): DataFrame =
-    SketchStore.dailySketches(df, Seq(typeCol), tsCol, userCol, lgK)
 
   /** CUPED variance-reduced A/B readout: `covariateType` event counts
     * adjust the `metricType` cent-value metric per arm.

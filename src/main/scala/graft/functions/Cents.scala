@@ -52,10 +52,6 @@ object Cents {
   def cents(c: Column): Column =
     floor(c * lit(100) + lit(0.5)).cast(LongType)
 
-  /** Oracle-side twin of [[cents]], as a SQL fragment. */
-  def centsSql(x: String): String =
-    s"CAST(floor($x * 100 + 0.5) AS BIGINT)"
-
   /** Exact long cent total finished to a double: `sum(cents)/100`.
     * Long sum → double cast → one IEEE division; DuckDB's
     * `CAST(sum(cents) AS DOUBLE) / 100` (HUGEINT-accumulated) lands on
@@ -70,8 +66,4 @@ object Cents {
     * division at the end.
     */
   def moneySum(c: Column): Column = centsToMoney(sum(cents(c)))
-
-  /** Oracle-side twin of [[moneySum]]. */
-  def moneySumSql(x: String): String =
-    s"CAST(sum(${centsSql(x)}) AS DOUBLE) / 100"
 }

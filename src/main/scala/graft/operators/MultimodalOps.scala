@@ -691,9 +691,6 @@ object MultimodalOps {
   def imageNearDupCapReport(hashes: DataFrame, bucketCap: Long = 10000L): DataFrame =
     graft.functions.TextOps.fp64CapReport(hashes, "media_id", "dhash", bucketCap)
 
-  def audioNearDupCapReport(hashes: DataFrame, bucketCap: Long = 10000L): DataFrame =
-    graft.functions.TextOps.fp64CapReport(hashes, "media_id", "ahash", bucketCap)
-
   def videoNearDupCapReport(frameHashes: DataFrame, bucketCap: Long = 10000L): DataFrame =
     graft.operators.CapReport.of(
       frameHashes.select(col("media_id"), col("dhash")).distinct(),

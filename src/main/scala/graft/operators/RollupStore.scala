@@ -238,198 +238,42 @@ object RollupStore {
     * partition into ~`targetRowsPerFile`-row files. Idempotent and
     * partition-scoped (dynamic overwrite leaves other months alone).
     *
-    * LAYOUT-AWARE: a store written by the exactly-once streaming sink
+    * A store written by the exactly-once streaming sink
     * ([[graft.streaming.StreamingRollup.toParquetSink]]) is partitioned
-    * two levels deep — `bucket_month=M/batch_seq=<key>-<id>` — and a
-    * month-level rewrite of only SOME months would leave leaf files at
-    * two different partition depths under one root, making every
-    * subsequent `spark.read.parquet(path)` fail with
-    * conflicting-partition-column errors. When `batch_seq` dirs are
-    * detected, each requested month is instead folded into a single
-    * synthetic `batch_seq=compacted-<n>` partition, preserving the
-    * two-level layout (and the sink's replay contract: a live stream's
-    * next micro-batch lands in its own fresh `batch_seq` partition,
-    * disjoint from the compacted one).
-    *
-    * CONCURRENCY CONTRACT: at most ONE compactor per store root at a
-    * time (concurrent micro-batch WRITERS are fine — see the victim
-    * pinning in [[compactBatchSeqMonths]]). Two concurrent compactors
-    * on one store can interleave recovery with each other's staging
-    * writes; the orphan sweep's [[OrphanTmpMinAgeMs]] age gate keeps
-    * even that violation from deleting a live staging dir, but the
-    * fold itself offers no cross-process mutual exclusion — schedule
-    * compaction from a single maintenance job, as you would OPTIMIZE.
+    * two levels deep — `bucket_month=M/batch_seq=<key>-<id>` — and
+    * compacts WHOLE through [[BatchSeqStore.compact]] with an identity
+    * fold: every live part of every month folds into one compacted
+    * part per month, preserving the two-level layout (a month-level
+    * rewrite would leave leaf files at two partition depths under one
+    * root), committed by the store's one manifest; `months` scopes
+    * only the month-partitioned form. A live stream's next micro-batch
+    * lands in its own fresh part beside the compacted one, and a batch
+    * committed while the compaction runs is neither folded nor swept.
+    * One compactor per store root at a time — schedule compaction from
+    * a single maintenance job, as you would OPTIMIZE.
     */
   def compactPartitions(
       spark: SparkSession,
       path: String,
       months: Seq[String],
       targetRowsPerFile: Long = 1000000L
-  ): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val twoLevel = months.exists { m =>
-      val md = new org.apache.hadoop.fs.Path(root, s"$PartitionCol=$m")
-      fs.exists(md) && BatchSeqStore.partsOf(fs.listStatus(md)).nonEmpty
+  ): Unit =
+    if (BatchSeqStore.parts(spark, path).nonEmpty) {
+      def files(rows: DataFrame) =
+        rows.repartition(math.max(1, math.ceil(rows.count().toDouble / targetRowsPerFile).toInt))
+      BatchSeqStore.compact(spark, path, spark.read.parquet(path).schema, files, PartitionCol)
+    } else {
+      val df = spark.read.parquet(path)
+        .filter(col(PartitionCol).isin(months: _*))
+      // partition values may read back type-inferred (int), not string
+      val counts = df.groupBy(col(PartitionCol)).count()
+        .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+      val nFiles = math.max(1,
+        math.ceil(counts.values.sum.toDouble / targetRowsPerFile).toInt)
+      df.repartition(nFiles, col(PartitionCol))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(PartitionCol).parquet(path)
     }
-    if (twoLevel) { compactBatchSeqMonths(spark, fs, root, months, targetRowsPerFile); return }
-    val df = spark.read.parquet(path)
-      .filter(col(PartitionCol).isin(months: _*))
-    // partition values may read back type-inferred (int), not string
-    val counts = df.groupBy(col(PartitionCol)).count()
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val nFiles = math.max(1,
-      math.ceil(counts.values.sum.toDouble / targetRowsPerFile).toInt)
-    df.repartition(nFiles, col(PartitionCol))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(PartitionCol).parquet(path)
-  }
-
-  /** Streaming-sink layout compaction: fold each month's
-    * `batch_seq=*` partitions into one `batch_seq=compacted-<n>`.
-    *
-    * Crash-safe via a write-ahead intent marker per month:
-    *   1. list this month's current `batch_seq` dirs (the victims);
-    *   2. write the folded rows to a hidden `.compact_tmp_<n>` dir
-    *     (dot-prefixed — Spark's file listing never reads it as data);
-    *   3. persist the victim list to a hidden `._compact_pending_<n>`
-    *     marker;
-    *   4. rename tmp → `batch_seq=compacted-<n>` — the COMMIT point;
-    *   5. delete the victims, then the marker.
-    * Recovery (run at the top of every compaction): a leftover marker
-    * whose destination exists (crash in 4-5) finishes the deletes; one
-    * whose destination is missing (crash in 2-4) discards tmp + marker
-    * — the original partitions were never touched. Either way the next
-    * call observes exactly-once rows. A micro-batch landing CONCURRENTLY
-    * with compaction is never a victim (step 2 reads exactly the dirs
-    * listed in step 1 — not a fresh root listing — so a later commit is
-    * neither folded nor deleted) and survives in its own partition.
-    * Recovery also reclaims orphan `.compact_tmp_*` dirs left by a
-    * crash between steps 2 and 3 (no marker → disk would leak).
-    */
-  /** Test seam: invoked once per month between the victim listing
-    * (step 1) and the fold read (step 2) — the window in which a
-    * concurrent micro-batch can commit. Specs use it to prove such a
-    * batch is neither folded nor deleted; production leaves it a no-op.
-    */
-  private[graft] var onAfterVictimList: String => Unit = _ => ()
-
-  private def compactBatchSeqMonths(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      months: Seq[String],
-      targetRowsPerFile: Long
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    months.foreach { m =>
-      val monthDir = new Path(root, s"$PartitionCol=$m")
-      if (fs.exists(monthDir)) {
-        recoverPendingCompaction(fs, monthDir)
-        val parts = BatchSeqStore.partsOf(fs.listStatus(monthDir))
-        val victims = parts.map(BatchSeqStore.dir(monthDir, _))
-        val alreadyFolded = parts.length == 1 && parts.head.startsWith("compacted-")
-        if (victims.nonEmpty && !alreadyFolded) {
-          onAfterVictimList(m)
-          val gen = parts.flatMap { nm =>
-            if (nm.startsWith("compacted-"))
-              scala.util.Try(nm.stripPrefix("compacted-").toLong).toOption
-            else None
-          }.foldLeft(0L)(math.max) + 1
-          // read EXACTLY the victim dirs (basePath keeps both partition
-          // columns resolvable) — re-reading the root here would race a
-          // concurrent micro-batch: one committed between the victim
-          // listing above and the read's file-index snapshot would be
-          // folded into `compacted-<gen>` yet survive as its own
-          // partition (duplicate rows). Pinning the paths makes the
-          // folded output contain the victims' rows and nothing else.
-          val rows = spark.read
-            .option("basePath", root.toString)
-            .parquet(victims.map(_.toString): _*)
-            .drop(PartitionCol, BatchSeqStore.Col)
-          val n = rows.count()
-          val nFiles = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
-          val tmp = new Path(monthDir, s".compact_tmp_$gen")
-          rows.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
-          val marker = new Path(monthDir, s"._compact_pending_$gen")
-          val out = fs.create(marker, true)
-          try out.write(victims.map(_.getName).mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-          val dest = BatchSeqStore.dir(monthDir, s"compacted-$gen")
-          if (!fs.rename(tmp, dest))
-            throw new java.io.IOException(s"compaction commit rename failed: $tmp -> $dest")
-          victims.foreach(p => fs.delete(p, true))
-          fs.delete(marker, false)
-        }
-      }
-    }
-  }
-
-  /** Finish or roll back a compaction that crashed mid-swap (see
-    * [[compactBatchSeqMonths]] step list). Idempotent.
-    */
-  private def recoverPendingCompaction(
-      fs: org.apache.hadoop.fs.FileSystem,
-      monthDir: org.apache.hadoop.fs.Path
-  ): Unit = {
-    import org.apache.hadoop.fs.Path
-    fs.listStatus(monthDir)
-      .filter(_.getPath.getName.startsWith("._compact_pending_"))
-      .foreach { st =>
-        val gen = st.getPath.getName.stripPrefix("._compact_pending_")
-        val dest = BatchSeqStore.dir(monthDir, s"compacted-$gen")
-        if (fs.exists(dest)) {
-          // committed: finish deleting the victims it replaced
-          val in = fs.open(st.getPath)
-          val victims =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            finally in.close()
-          victims.filter(_.nonEmpty).foreach { name =>
-            val p = new Path(monthDir, name)
-            if (p.getName != dest.getName) fs.delete(p, true)
-          }
-        } else {
-          // never committed: originals intact, discard the staging dir
-          fs.delete(new Path(monthDir, s".compact_tmp_$gen"), true)
-        }
-        fs.delete(st.getPath, false)
-      }
-    // a crash between the tmp write (step 2) and the marker write
-    // (step 3) leaves a `.compact_tmp_<gen>` with NO marker — hidden
-    // from reads but leaking disk forever. Markers were all consumed
-    // above, so any surviving tmp dir is such an orphan: reclaim it.
-    // AGE-GATED: compaction assumes one compactor per store (see
-    // [[compactPartitions]]), but deletion is the one step whose
-    // blast radius under a violated assumption is another call's
-    // in-flight staging dir (its step-2→3 window), so the sweep only
-    // reclaims tmp dirs whose last modification is older than
-    // [[OrphanTmpMinAgeMs]] — a genuinely crashed orphan is by
-    // definition not being written anymore, while a live staging dir
-    // is at most minutes old.
-    // age = newest mtime anywhere under the tmp dir, not the dir's
-    // own (a long write parks files in deep _temporary subdirs
-    // without touching the top-level dir, which would look stale
-    // while still very much in flight)
-    val now = System.currentTimeMillis()
-    def newestMtime(p: Path): Long = {
-      var newest = fs.getFileStatus(p).getModificationTime
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
-      newest
-    }
-    fs.listStatus(monthDir)
-      .filter { st =>
-        st.isDirectory && st.getPath.getName.startsWith(".compact_tmp_") &&
-          now - newestMtime(st.getPath) > OrphanTmpMinAgeMs
-      }
-      .foreach(st => fs.delete(st.getPath, true))
-  }
-
-  /** Minimum age before a marker-less `.compact_tmp_*` staging dir is
-    * treated as a crash orphan and reclaimed (test seam: specs lower
-    * it to exercise the sweep without a 15-minute fixture wait).
-    */
-  private[graft] var OrphanTmpMinAgeMs: Long = 15L * 60 * 1000
 
   /** R3 — verification: per key, distinct buckets observed in the
     * stored rollup within [rangeStart, rangeEnd) vs the expected count

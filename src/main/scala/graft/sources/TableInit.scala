@@ -58,8 +58,4 @@ object TableInit {
            USING parquet PARTITIONED BY (bucket_month)""")
     }
   }
-
-  def tableNames(db: String, timeframe: Timeframe,
-      grains: Seq[Timeframe] = Timeframe.RollupGrains): Seq[String] =
-    s"`$db`.candles_raw_${timeframe.label}" +: grains.map(g => s"`$db`.candles_${g.label}")
 }

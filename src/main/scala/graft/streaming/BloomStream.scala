@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.operators.BloomOps
 
@@ -13,21 +14,23 @@ import graft.operators.BloomOps
   * exactly the filter the batch operator builds from the whole key
   * set at once.
   *
-  * The OR algebra does the exactly-once work: bit_or is idempotent,
-  * commutative, and associative, so the folded filter is independent
-  * of batch boundaries, arrival order, AND replays — a re-delivered
-  * batch re-ORs bits that are already set. The store still writes
-  * each batch's contribution as its own [[BatchSeqStore]] part so a
-  * torn write never leaves a partial partition visible next to a
-  * committed one, but unlike the edge store's generation fold or the
-  * substring store's anti-join, correctness here needs NO manifest,
-  * NO standing-store read in the fold, and NO exclusion view: the
-  * fold is a pure function of the batch. Store maintenance is
-  * batch-proportional (≤ min(k·|batch|, numWords) rows per batch);
-  * the read-side fold is ≤ numWords·nBatches rows, both bounded by
-  * the filter's [[BloomOps.MaxWords]] cap.
+  * The OR algebra makes the folded filter independent of batch
+  * boundaries and arrival order, and a re-delivered batch re-ORs bits
+  * that are already set. Each batch's contribution still lands as its
+  * own [[BatchSeqStore]] part behind the store's replay guard, like
+  * every other store, so a torn write never leaves a partial part
+  * visible next to a committed one; the fold is a pure function of the
+  * batch, with no standing-store read. Store maintenance is
+  * batch-proportional (≤ min(k·|batch|, numWords) rows per batch); the
+  * read-side fold is ≤ numWords·nParts rows, both bounded by the
+  * filter's [[BloomOps.MaxWords]] cap. The sharded store compacts its
+  * parts with the same bit_or ([[compact]]).
   */
 object BloomStream {
+
+  private val WordSchema = StructType(Seq(
+    StructField("__w", IntegerType), StructField("__bits", LongType)))
+  private val ShardSchema = StructType(StructField("__shard", IntegerType) +: WordSchema.fields)
 
   def toBloomStore(
       keys: DataFrame,
@@ -49,14 +52,15 @@ object BloomStream {
       storePath: String,
       part: String
   ): Unit =
-    BatchSeqStore.write(BloomOps.bloomWordRows(batch, keyCol, numWords, k), storePath, part)
+    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+      BatchSeqStore.write(BloomOps.bloomWordRows(batch, keyCol, numWords, k), storePath, part)
 
   /** The folded filter as sparse word rows (empty before the first
     * fold): one bit_or re-aggregation across the per-batch
     * contributions.
     */
   def readWordRows(spark: SparkSession, storePath: String): DataFrame =
-    BatchSeqStore.read(spark, storePath)
+    BatchSeqStore.read(spark, storePath, WordSchema)
       .map(_.groupBy(col("__w")).agg(expr("bit_or(__bits)").as("__bits")))
       .getOrElse(spark.range(0).select(col("id").cast("int").as("__w"),
         col("id").as("__bits")))
@@ -109,16 +113,16 @@ object BloomStream {
       storePath: String,
       part: String
   ): Unit =
-    BatchSeqStore.write(
-      BloomOps.bloomShardRows(batch, keyCol, nShards, wordsPerShard, k), storePath, part)
+    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+      BatchSeqStore.write(
+        BloomOps.bloomShardRows(batch, keyCol, nShards, wordsPerShard, k), storePath, part)
 
   /** The folded sharded filter as a cluster-resident relation (empty
     * before the first fold): one bit_or re-aggregation across the
     * per-batch contributions — never collected, never a plan literal.
     */
   def readShardRows(spark: SparkSession, storePath: String): DataFrame =
-    BatchSeqStore.read(spark, storePath)
-      .map(_.groupBy(col("__shard"), col("__w")).agg(expr("bit_or(__bits)").as("__bits")))
+    BatchSeqStore.read(spark, storePath, ShardSchema).map(orShards)
       .getOrElse(spark.range(0).select(col("id").cast("int").as("__shard"),
         col("id").cast("int").as("__w"), col("id").as("__bits")))
 
@@ -141,25 +145,13 @@ object BloomStream {
       readShardRows(batch.sparkSession, storePath),
       nShards, wordsPerShard, k)
 
-  /** Compact the per-batch shard-row partitions into one folded
-    * partition, bounding the read side's fold at (filter bits)/64
-    * rows. Crash-safe purely by the OR algebra: the compacted
-    * partition's bits are the OR of its inputs, so a crash between
-    * the write and the sweep double-ORs — bit-identical. Repeated
-    * compactions land on increasing `compact-N` names; the absorbed
-    * partitions (everything listed BEFORE the write) are swept after.
+  private def orShards(rows: DataFrame): DataFrame =
+    rows.groupBy(col("__shard"), col("__w")).agg(expr("bit_or(__bits)").as("__bits"))
+
+  /** Compact the sharded store's parts into one, bounding the read
+    * side's fold at (filter bits)/64 rows: [[BatchSeqStore.compact]]
+    * with the read side's bit_or.
     */
-  def compact(spark: SparkSession, storePath: String): Unit = {
-    val before = BatchSeqStore.parts(spark, storePath)
-    if (before.size <= 1) return
-    val n = before.filter(_.startsWith("compact-"))
-      .map(_.stripPrefix("compact-").toLong)
-      .foldLeft(-1L)(math.max) + 1L
-    // materialize the fold BEFORE writing into the same directory
-    // (Spark refuses a write whose path is also being read); bounded
-    // by the filter's (bits)/64 row budget, cluster-resident
-    val folded = readShardRows(spark, storePath).localCheckpoint(true)
-    BatchSeqStore.write(folded, storePath, f"compact-$n%09d")
-    BatchSeqStore.sweep(spark, storePath, before)
-  }
+  def compact(spark: SparkSession, storePath: String): Unit =
+    BatchSeqStore.compact(spark, storePath, ShardSchema, orShards)
 }

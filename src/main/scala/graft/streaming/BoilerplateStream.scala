@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextOps
 
@@ -21,12 +22,16 @@ import graft.functions.TextOps
   * distinct-doc count per line. Like [[CmsStream]], exactly-once is
   * the PARTITION contract, not algebra: sums would double-count on a
   * replay, so each batch's contribution lands as its own
-  * [[BatchSeqStore]] part and a replay REPLACES its prior rows. Store
-  * maintenance is batch-proportional (one count row per distinct line
-  * hash in the batch — 16 bytes each, never line text); the read fold
-  * is one sum re-aggregation.
+  * [[BatchSeqStore]] part behind the store's replay guard, and a
+  * replay REPLACES its prior rows. Store maintenance is
+  * batch-proportional (one count row per distinct line hash in the
+  * batch — 16 bytes each, never line text); the read fold is one sum
+  * re-aggregation.
   */
 object BoilerplateStream {
+
+  private val Schema = StructType(Seq(
+    StructField("__h", LongType), StructField("__nd", LongType)))
 
   def toLineStore(
       docs: DataFrame,
@@ -46,12 +51,13 @@ object BoilerplateStream {
       storePath: String,
       part: String
   ): Unit =
-    BatchSeqStore.write(
-      TextOps.lineRows(batch, idCol, textCol)
-        .select(col(idCol), col("__h"))
-        .groupBy(col("__h"))
-        .agg(countDistinct(col(idCol)).as("__nd")),
-      storePath, part)
+    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+      BatchSeqStore.write(
+        TextOps.lineRows(batch, idCol, textCol)
+          .select(col(idCol), col("__h"))
+          .groupBy(col("__h"))
+          .agg(countDistinct(col(idCol)).as("__nd")),
+        storePath, part)
 
   /** The folded per-line distinct-doc counts (empty before the first
     * fold): one sum re-aggregation across per-batch contributions.
@@ -63,7 +69,7 @@ object BoilerplateStream {
       storePath: String,
       except: String = null
   ): DataFrame =
-    BatchSeqStore.read(spark, storePath, except)
+    BatchSeqStore.read(spark, storePath, Schema, except)
       .map(_.groupBy(col("__h")).agg(sum(col("__nd")).as("__nd")))
       .getOrElse(spark.range(0).select(col("id").as("__h"), col("id").as("__nd")))
 

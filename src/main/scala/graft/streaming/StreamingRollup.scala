@@ -40,9 +40,9 @@ object StreamingRollup {
     * carrier shape as `CandleOps.ohlcvRollup(withCarriers = true)`
     * (`open_ts`/`close_ts` argmin/argmax carriers + exact long
     * `vol_cents` instead of a double `volume`) — so a store landed by
-    * [[toParquetSink]] can, after [[graft.operators.RollupStore
-    * .compactPartitions]], be registered with the RollupRouter and
-    * serve routed aggregates exactly like a batch-built carrier store.
+    * [[toParquetSink]] and compacted can be registered with the
+    * RollupRouter and serve routed aggregates exactly like a
+    * batch-built carrier store.
     */
   def streamingOhlcv(
       stream: DataFrame,
@@ -80,15 +80,17 @@ object StreamingRollup {
     * month of bucket (the reference's `PARTITION BY toYYYYMM`,
     * app/clickhouse_schema.py:162) and by batch sequence number.
     *
-    * Exactly-once without a manifest: each micro-batch lands as its own
-    * [[BatchSeqStore]] part, so re-delivery cannot double-append (the
-    * [[EdgeStream]] manifest contract, expressed in the layout itself).
+    * Exactly-once through the layout: each micro-batch lands as its
+    * own [[BatchSeqStore]] part behind the store's replay guard, so
+    * re-delivery cannot double-append, not even after a compaction
+    * absorbed the batch.
     *
     * `bucket_month` stays the outer partition, so month-range pruning
     * is unaffected; readers see a `batch_seq` bookkeeping column they
-    * can ignore, and [[graft.operators.RollupStore.compactPartitions]]
-    * folds the per-batch dirs away on the maintenance cadence (the
-    * same OPTIMIZE FINAL analog the store already runs).
+    * can ignore. Compaction ([[graft.operators.RollupStore
+    * .compactPartitions]], the store's OPTIMIZE FINAL analog) folds
+    * the per-batch parts into one through [[BatchSeqStore.compact]]
+    * on the maintenance cadence.
     */
   def toParquetSink(
       rollup: DataFrame,
@@ -105,15 +107,19 @@ object StreamingRollup {
     * separated so the crash-window replay semantics are directly
     * spec-testable): dynamic partition overwrite into this batch's own
     * `(bucket_month, batch_seq)` partitions — idempotent under replay,
-    * invisible to every other batch's partitions.
+    * invisible to every other batch's partitions; skipped when a
+    * compaction already absorbed the batch.
     */
   private[graft] def writeBatch(
       batch: DataFrame,
       path: String,
       key: String,
       batchId: Long
-  ): Unit =
-    BatchSeqStore.write(batch, path, BatchSeqStore.part(key, batchId), "bucket_month")
+  ): Unit = {
+    val part = BatchSeqStore.part(key, batchId)
+    if (BatchSeqStore.admits(batch.sparkSession, path, part))
+      BatchSeqStore.write(batch, path, part, "bucket_month")
+  }
 
   /** Streaming exact dedup at ingest — the streaming half of the
     * ReplacingMergeTree contract (the reference relies on the table

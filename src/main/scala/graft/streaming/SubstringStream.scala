@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{
+  ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import graft.functions.TextOps
 
@@ -25,20 +27,22 @@ import graft.functions.TextOps
   *
   * Store shape — APPEND-ONLY, batch-proportional: because the state
   * is a distinct-hash SET, the fold appends only the hashes absent
-  * from the standing store (per-batch partitions are DISJOINT by
+  * from the standing store (per-batch parts are DISJOINT by
   * construction, so the store's union is the distinct set and no
-  * generation rewrite ever happens). That is strictly cheaper than
-  * the edge store's read+full-outer+overwrite generations
-  * ([[EdgeStream]]): set union needs no re-aggregation, so store
-  * maintenance is proportional to the batch, never the corpus.
+  * re-aggregation ever happens on the fold path). Once the store
+  * holds [[BatchSeqStore.CompactEvery]] parts, the fold compacts them
+  * into one distinct set ([[BatchSeqStore.compact]]), so the standing
+  * scan reads a bounded number of parts.
   *
-  * Exactly-once WITHOUT a manifest: both writes land as the batch's
-  * own [[BatchSeqStore]] part (the [[StreamingRollup.toParquetSink]]
-  * contract). A replayed batch recomputes against a standing view
-  * that EXCLUDES its own partition (else a replay would see its own
-  * hashes and flag every span), then overwrites exactly its own two
-  * partitions — bit-identical, idempotent, no torn state in either crash
-  * window. The `key` scopes partitions to one checkpoint's batch
+  * Exactly-once through the [[BatchSeqStore]] part contract: both
+  * writes land as the batch's own part. A replayed batch recomputes
+  * against a standing view that EXCLUDES its own part (else a replay
+  * would see its own hashes and flag every span), then overwrites
+  * exactly its own two parts — bit-identical, idempotent, no torn
+  * state in either crash window. A replay of a batch that compaction
+  * already absorbed into the hash store is skipped by the store's
+  * replay guard: its hashes no longer sit in a part the view could
+  * exclude. The `key` scopes parts to one checkpoint's batch
   * sequence, so a replaced checkpoint restarts cleanly next to an
   * existing store.
   *
@@ -59,6 +63,10 @@ object SubstringStream {
     * joins degrade to shuffles instead of risking the driver.
     */
   val DefaultMaxBroadcastHashes = 5000000L
+
+  private val HashSchema = StructType(Seq(StructField("__h", LongType)))
+  private val SpanSchema = StructType(
+    Seq("doc_id", "span_start", "span_end", "n_tokens").map(StructField(_, LongType)))
 
   def toShingleStore(
       docs: DataFrame,
@@ -87,14 +95,14 @@ object SubstringStream {
     * batch_seq).
     */
   def readSpans(spark: SparkSession, spansPath: String): DataFrame = {
-    val spans = BatchSeqStore.read(spark, spansPath)
+    val spans = BatchSeqStore.read(spark, spansPath, SpanSchema)
     require(spans.nonEmpty, s"no spans landed at $spansPath")
     spans.get
   }
 
   private def readStoreExcept(
       spark: SparkSession, storePath: String, except: String): DataFrame =
-    BatchSeqStore.read(spark, storePath, except)
+    BatchSeqStore.read(spark, storePath, HashSchema, except)
       .map(_.select(col("__h")))
       .getOrElse(spark.range(0).select(col("id").as("__h")))
 
@@ -111,6 +119,10 @@ object SubstringStream {
   ): Unit = {
     val spark = batch.sparkSession
     val part = BatchSeqStore.part(key, batchId)
+    if (!BatchSeqStore.admits(spark, storePath, part)) return
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType)
+        .contains(batch.schema(idCol).dataType),
+      s"SubstringStream: id column '$idCol' must be integral; spans land it as long")
     val standing = readStoreExcept(spark, storePath, except = part)
     // one pass of the batch's shingles feeds both outputs
     val shp = TextOps.shinglePositions(batch, idCol, textCol, k)
@@ -126,9 +138,17 @@ object SubstringStream {
       .localCheckpoint(true)
     val spans = TextOps.mergeSpans(
       shp.join(maybeBroadcast(present), Seq("__h"), "left_semi")
-        .select(col("doc_id"), col("pos")), k)
+        .select(col("doc_id").cast(LongType).as("doc_id"), col("pos")), k)
     BatchSeqStore.write(spans, spansPath, part)
     val fresh = batchHashes.join(maybeBroadcast(present), Seq("__h"), "left_anti")
     BatchSeqStore.write(fresh, storePath, part)
+    BatchSeqStore.compactWhenDue(spark, storePath)(compact(spark, storePath))
   }
+
+  /** Fold the hash store's parts into one distinct set
+    * ([[BatchSeqStore.compact]]); the fold runs it every
+    * [[BatchSeqStore.CompactEvery]] parts.
+    */
+  def compact(spark: SparkSession, storePath: String): Unit =
+    BatchSeqStore.compact(spark, storePath, HashSchema, _.distinct())
 }

@@ -29,13 +29,14 @@ import org.apache.spark.sql.functions._
   *  - bloom: pure-function-of-batch fold + the probe side
   *    (readWords folds numWords·nBatches rows)
   *  - cms: pure fold + cell-read probe
-  *  - edge: generation fold (read + full-outer + overwrite — the one
-  *    family whose fold is store-proportional BY CONTRACT; measured
-  *    to show it, not to excuse it)
+  *  - edge: delta fold (the batch's pair supports only) + the
+  *    consumer read and one compaction, timed outside the trigger path
   *
   * Usage: runMain graft.tools.StoreLatency <storeSfDir> <batchSfDir> [slices]
-  * Prints one STORE_LATENCY JSON line per family; assemble per-store
-  * runs into STREAM_STORE_LATENCY_r{N}.json.
+  * Prints one STORE_LATENCY JSON line per family, with the live part
+  * count its store holds after the timed triggers (bounded by
+  * BatchSeqStore.CompactEvery for the stores that compact from their
+  * fold); assemble per-store runs into STREAM_STORE_LATENCY_r{N}.json.
   */
 object StoreLatency {
   def main(args: Array[String]): Unit = {
@@ -95,9 +96,10 @@ object StoreLatency {
       walls.toSeq
     }
 
-    def emit(family: String, walls: Seq[Double], extra: String = ""): Unit = {
+    def emit(family: String, store: String, walls: Seq[Double], extra: String = ""): Unit = {
       val ws = walls.map(w => f"$w%.3f").mkString("[", ",", "]")
-      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${walls.size},"trigger_walls_sec":$ws$extra}""")
+      val parts = BatchSeqStore.parts(spark, store).size
+      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${walls.size},"parts":$parts,"trigger_walls_sec":$ws$extra}""")
     }
 
     // ---- substring: standing distinct-shingle store --------------------
@@ -115,7 +117,7 @@ object StoreLatency {
       SubstringStream.foldBatch(b, "doc_id", "text", sK, ssStore, ssSpans,
         batchId = id, key = ssKey2)
     }
-    emit("substring_fold", ssWalls, s""","store_hashes":$ssRows""")
+    emit("substring_fold", ssStore, ssWalls, s""","store_hashes":$ssRows""")
 
     // ---- boilerplate: standing line-count store + per-batch scrub ------
     val blStore = s"$work/boiler_store"
@@ -131,7 +133,7 @@ object StoreLatency {
         minDocs = 50L, except = f"lat-$id%09d").count()
       ()
     }
-    emit("boilerplate_fold_scrub", blWalls)
+    emit("boilerplate_fold_scrub", blStore, blWalls)
 
     // ---- bloom: standing SHARDED filter + per-batch fold + join probe --
     // (r15: the literal path — readWords collect + flagBatch plan
@@ -152,7 +154,7 @@ object StoreLatency {
         bKeysStore.filter(pmod(xxhash64(col("text_hash")), lit(4)) === i),
         "text_hash", bShards, bWordsPerShard, bK, bStore, f"build-$i%09d")
     }
-    BloomStream.compact(spark, bStore) // the standing store, one partition
+    BloomStream.compact(spark, bStore) // the standing store, one part
     val bloomWalls = drive(s"$work/bloom_ckpt") { (b, id) =>
       val keys = b.select(md5(col("text").cast("binary")).as("text_hash"))
       BloomStream.foldBatchSharded(keys, "text_hash", bShards,
@@ -162,7 +164,7 @@ object StoreLatency {
         .filter(col("bloom_hit")).count()
       ()
     }
-    emit("bloom_fold_probe", bloomWalls,
+    emit("bloom_fold_probe", bStore, bloomWalls,
       s""","num_shards":$bShards,"words_per_shard":$bWordsPerShard""")
 
     // ---- cms: standing sketch + per-batch fold + cell read -------------
@@ -181,11 +183,11 @@ object StoreLatency {
         .groupBy(col("__d")).agg(count(lit(1))).count()
       ()
     }
-    emit("cms_fold_read", cmsWalls)
+    emit("cms_fold_read", cStore, cmsWalls)
 
-    // ---- edge: delta-partition store (r15: per-trigger fold is the
-    // batch's aggregated pair supports only; the store-proportional
-    // merge moved into the periodic compaction, measured separately) --
+    // ---- edge: delta-part store (the per-trigger fold is the batch's
+    // aggregated pair supports only; the store-proportional merge is
+    // the periodic compaction, measured separately) --------------------
     val eStore = s"$work/edge_store"
     val li = Tables.lineitem(spark, storeDir)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -194,7 +196,7 @@ object StoreLatency {
         "l_orderkey", "l_partkey", eStore, i.toLong,
         BatchSeqStore.streamKey(s"$work/edge_build"))
     }
-    EdgeStream.compact(spark, eStore) // the standing bucketed base
+    EdgeStream.compact(spark, eStore) // the standing store, one part
     val eSupports = EdgeStream.readStore(spark, eStore).count()
     // the constant fact batch: batchDir lineitems under disjoint orders
     val orderOffset = 1000000000L
@@ -215,7 +217,7 @@ object StoreLatency {
         .foreachBatch { (b: DataFrame, id: Long) =>
           val t0 = System.nanoTime()
           // a NEW stream against an existing store must start at batch
-          // 0 (the manifest's new-key acceptance rule)
+          // 0 (the replay guard's new-key rule)
           EdgeStream.foldBatch(b, "l_orderkey", "l_partkey", eStore, id, eKey)
           walls += (System.nanoTime() - t0) / 1e9
           ()
@@ -225,17 +227,17 @@ object StoreLatency {
       q.stop()
       walls.toSeq
     }
-    // the amortized store-proportional costs, measured honestly but
-    // OUTSIDE the trigger path: the read-side base+delta merge a
-    // consumer pays per query, and one compaction absorbing the open
-    // deltas (paid once per compactEvery triggers)
+    // the amortized store-proportional costs, measured OUTSIDE the
+    // trigger path: the read-side SUM over the parts a consumer pays
+    // per query, and one compaction absorbing the open deltas (paid
+    // once per compactEvery triggers)
     val tRead = System.nanoTime()
     EdgeStream.readStore(spark, eStore).count()
     val readMergeWall = (System.nanoTime() - tRead) / 1e9
     val tComp = System.nanoTime()
     EdgeStream.compact(spark, eStore)
     val compactWall = (System.nanoTime() - tComp) / 1e9
-    emit("edge_delta_fold", eWalls,
+    emit("edge_delta_fold", eStore, eWalls,
       s""","store_supports":$eSupports,"batch_facts":${factRows.length}""" +
         f""","read_merge_wall_sec":$readMergeWall%.3f""" +
         f""","compact_wall_sec":$compactWall%.3f""")

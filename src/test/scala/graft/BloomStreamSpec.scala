@@ -11,8 +11,7 @@ case class BloomKey(k: String)
 /** Streaming bloom store: the read-side bit_or fold across per-batch
   * contributions must equal the batch operator's filter over the
   * whole key set — for ANY batch slicing — and a replayed batch must
-  * be bit-idempotent purely by the OR algebra (no manifest, no
-  * standing read in the fold).
+  * be bit-idempotent (no standing read in the fold).
   */
 class BloomStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -115,13 +114,13 @@ class BloomStreamSpec extends SparkSpec {
     assert(rel == before, "compaction changed the folded sharded filter")
     def parts = new java.io.File(store).listFiles()
       .map(_.getName).filter(_.startsWith("batch_seq=")).toSeq
-    assert(parts == Seq("batch_seq=compact-000000000"), parts.mkString(","))
+    assert(parts == Seq("batch_seq=compacted-1"), parts.mkString(","))
     // a post-compaction fold + second compaction still folds exactly
-    // (the compact-N partition is itself an input to the next compact)
+    // (the compacted part is itself an input to the next compaction)
     BloomStream.foldBatchSharded(aDF, "k", NShards, WordsPerShard, K, store, "t-000000002")
     BloomStream.compact(spark, store)
     assert(rel == before, "second compaction cycle changed the filter")
-    assert(parts == Seq("batch_seq=compact-000000001"), parts.mkString(","))
+    assert(parts == Seq("batch_seq=compacted-2"), parts.mkString(","))
     // zero false negatives against the whole ingested set
     val flagged = BloomStream.probeBatch(
       keys.toDF(), "k", store, NShards, WordsPerShard, K)

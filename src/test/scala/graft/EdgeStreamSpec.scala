@@ -11,7 +11,7 @@ case class BasketFact(order_id: Long, part_id: Long)
 /** Streaming edge-store maintenance: folding micro-batches of basket
   * facts converges to the batch support derivation over everything
   * ingested, regardless of how the baskets are sliced into batches,
-  * and the two-generation store survives an interleaved re-fold.
+  * and the store survives replays and crashes around its compaction.
   */
 class EdgeStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -24,14 +24,17 @@ class EdgeStreamSpec extends SparkSpec {
     }
   }
 
-  /** Overwrite the store's manifest in place, as a crash simulation.
-    * Through the Hadoop local filesystem, so the checksum sidecar the
-    * store's own commit leaves beside CURRENT stays consistent.
-    */
-  private def rewriteManifest(store: String, text: String): Unit = {
-    val out = new org.apache.hadoop.fs.Path(store, "CURRENT")
-    val os = out.getFileSystem(spark.sessionState.newHadoopConf()).create(out, true)
-    try os.write(text.getBytes("UTF-8")) finally os.close()
+  /** The part directories directly under the store. */
+  private def partDirs(store: String): Seq[String] =
+    Option(new java.io.File(store).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("batch_seq=")).sorted
+
+  /** Run `body` with the compaction seam throwing at `step`. */
+  private def crashAt(step: String)(body: => Unit): Unit = {
+    BatchSeqStore.onCompactStep = s =>
+      if (s == step) throw new IllegalStateException(s"crash at $step")
+    try intercept[IllegalStateException](body)
+    finally BatchSeqStore.onCompactStep = _ => ()
   }
 
   test("stream fold == batch supports over the union, across micro-batch slicings") {
@@ -72,35 +75,27 @@ class EdgeStreamSpec extends SparkSpec {
     val after2 = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(after2 == Map((10L, 11L) -> 2L))
-    // per-trigger writes are delta partitions — the store-proportional
-    // generation rewrite is gone from the trigger path (no base until
-    // a compaction absorbs the deltas)
-    val deltaParts = new java.io.File(s"$store/delta").listFiles()
-      .map(_.getName).filter(_.startsWith("batch_seq=")).sorted
-    assert(deltaParts.length == 2, deltaParts.mkString(","))
-    assert(!new java.io.File(s"$store/gen=0").exists() &&
-      !new java.io.File(s"$store/gen=1").exists())
-    // a replayed batchId (crash after manifest write, before the
-    // checkpoint commit) is a no-op — no double-count
+    // per-trigger writes are delta parts — no store-proportional
+    // rewrite on the trigger path (nothing compacted yet)
+    assert(partDirs(store).length == 2, partDirs(store).mkString(","))
+    assert(!partDirs(store).exists(_.contains("compacted-")))
+    // a replayed batchId (crash after the write, before the
+    // checkpoint commit) replaces its own part — no double-count
     EdgeStream.foldBatch(b2, "order_id", "part_id", store, batchId = 1L)
     val after2b = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(after2b == after2)
-    // crash BEFORE the manifest write: the replay's dynamic partition
-    // overwrite REPLACES the half-written delta (simulate by rolling
-    // the manifest back one batch and re-folding)
-    val committed = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "CURRENT"))
-    rewriteManifest(store,
-      committed.trim.split("\\s+") match {
-        case Array(g, _, k, e) => s"$g 0 $k $e"
-      })
+    // a torn write of batch 1 (wrong rows in its part) is REPLACED by
+    // the replay's dynamic partition overwrite
+    BatchSeqStore.write(Seq((10L, 11L, 5L)).toDF("x", "y", "support"), store,
+      BatchSeqStore.part("-", 1L))
     EdgeStream.foldBatch(b2, "order_id", "part_id", store, batchId = 1L)
     val after2c = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(after2c == after2, "pre-manifest-crash replay double-counted")
+    assert(after2c == after2, "a replay over a torn part double-counted")
   }
 
-  test("compaction absorbs deltas into the bucketed base: totals exact, epoch sweeps, base reads in place") {
+  test("compaction absorbs deltas into one compacted part: totals exact, victims swept, idempotent") {
     val store = java.nio.file.Files.createTempDirectory("edge-store7").toString
     val all = facts(23, 30)
     val slices = Seq(all.filter(_.order_id < 10), all.filter(f => f.order_id >= 10 && f.order_id < 20),
@@ -114,30 +109,36 @@ class EdgeStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(supports == expect)
     EdgeStream.compact(spark, store)
-    // exact totals survive the absorb; absorbed partitions are swept
+    // exact totals survive the absorb; absorbed parts are swept
     assert(supports == expect)
-    val leftover = Option(new java.io.File(s"$store/delta").listFiles())
-      .map(_.map(_.getName).filter(_.startsWith("batch_seq=")).toSeq)
-      .getOrElse(Seq.empty)
-    assert(leftover.isEmpty, s"absorbed deltas not swept: $leftover")
-    // compaction is idempotent: a retry with no open deltas is a no-op
+    assert(partDirs(store) == Seq("batch_seq=compacted-1"), partDirs(store).mkString(","))
+    // compaction is idempotent: a retry with nothing to absorb is a no-op
     EdgeStream.compact(spark, store)
     assert(supports == expect)
-    // post-compaction fold lands in the NEW epoch and merges on read
+    assert(partDirs(store) == Seq("batch_seq=compacted-1"))
+    // a post-compaction fold lands beside the compacted part and merges
+    // on read
     val extra = Seq(BasketFact(900, 10), BasketFact(900, 11)).toDF()
     EdgeStream.foldBatch(extra, "order_id", "part_id", store, batchId = 3L)
     val bumped = supports
     assert(bumped((10L, 11L)) == expect.getOrElse((10L, 11L), 0L) + 1L)
-    // the read-side merge reads the bucketed base IN PLACE: one
-    // exchange total (the open-delta fold), bucket metadata on the scan
-    val plan = EdgeStream.readStore(spark, store)
-      .queryExecution.executedPlan.toString
-    assert(graft.tools.ExchangeAudit.shuffleExchanges(plan) == 1,
-      s"base side must not reshuffle:\n$plan")
-    assert(plan.contains("SelectedBucketsCount"), s"base scan not bucketed:\n$plan")
+    // the read never reshuffles the compacted part: only the open
+    // delta's rows reach a shuffle
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    org.apache.spark.sql.GraftBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      EdgeStream.readStore(spark, store).collect()
+      org.apache.spark.sql.GraftBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(shuffled.get < expect.size, s"${shuffled.get} rows shuffled for a store of ${expect.size}")
   }
 
-  test("crash mid-compaction: a retry before the flip re-merges; after the flip, stale epochs are invisible") {
+  test("crash mid-compaction: before the commit a retry re-merges; after it, absorbed parts are invisible and their replays skip") {
     val store = java.nio.file.Files.createTempDirectory("edge-store8").toString
     val b1 = Seq(BasketFact(1, 10), BasketFact(1, 11)).toDF()
     val b2 = Seq(BasketFact(2, 10), BasketFact(2, 11)).toDF()
@@ -145,32 +146,34 @@ class EdgeStreamSpec extends SparkSpec {
     EdgeStream.foldBatch(b2, "order_id", "part_id", store, batchId = 1L)
     def supports = EdgeStream.readStore(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val expect = Map((10L, 11L) -> 2L)
-    assert(supports == expect)
-    // crash AFTER the merged base was written but BEFORE the manifest
-    // flip: in that window the old manifest and the old epoch's delta
-    // partitions are both still present (the sweep only runs after a
-    // successful flip) — simulate by snapshotting both, compacting,
-    // then restoring them around the now-written generation
-    val preFlip = java.nio.file.Files.readString(java.nio.file.Paths.get(store, "CURRENT"))
-    val deltaDir = java.nio.file.Paths.get(store, "delta")
-    val snap = java.nio.file.Files.createTempDirectory("edge-delta-snap")
-    org.apache.commons.io.FileUtils.copyDirectory(
-      deltaDir.toFile, snap.toFile)
-    EdgeStream.compact(spark, store)
-    assert(supports == expect)
-    rewriteManifest(store, preFlip) // roll back the flip
-    org.apache.commons.io.FileUtils.copyDirectory(
-      snap.toFile, deltaDir.toFile) // restore the not-yet-swept deltas
-    EdgeStream.foldBatch(b1, "order_id", "part_id", store, batchId = 2L,
-      streamKey = null, compactEvery = 16)
-    // the rolled-back epoch still counts its (re-written) deltas, and
-    // the dead half-written generation is invisible
+    assert(supports == Map((10L, 11L) -> 2L))
+    // crash AFTER the merged rows were staged but BEFORE the manifest
+    // commit: the staging is invisible, the parts stay authoritative
+    crashAt("staged")(EdgeStream.compact(spark, store))
+    assert(supports == Map((10L, 11L) -> 2L))
+    EdgeStream.foldBatch(b1, "order_id", "part_id", store, batchId = 2L)
     assert(supports == Map((10L, 11L) -> 3L))
-    // the retry's compact overwrites the dead generation from
-    // unchanged inputs — totals stay exact
+    // crash AFTER the commit, before the staged part is renamed: the
+    // absorbed parts are invisible, the staged rows count once, and
+    // the replay of the absorbed batch 2 is skipped
+    crashAt("committed")(EdgeStream.compact(spark, store))
+    assert(supports == Map((10L, 11L) -> 3L))
+    EdgeStream.foldBatch(b1, "order_id", "part_id", store, batchId = 2L)
+    assert(supports == Map((10L, 11L) -> 3L), "replay of an absorbed batch double-counted")
+    // the next compaction finishes the interrupted one first: totals
+    // exact, victims swept
     EdgeStream.compact(spark, store)
     assert(supports == Map((10L, 11L) -> 3L))
+    assert(partDirs(store) == Seq("batch_seq=compacted-1"), partDirs(store).mkString(","))
+    // crash after the rename, before the sweep: same reads, healed by
+    // the next compaction
+    EdgeStream.foldBatch(b2, "order_id", "part_id", store, batchId = 3L)
+    crashAt("renamed")(EdgeStream.compact(spark, store))
+    assert(supports == Map((10L, 11L) -> 4L))
+    assert(partDirs(store).size == 3, partDirs(store).mkString(","))
+    EdgeStream.compact(spark, store)
+    assert(supports == Map((10L, 11L) -> 4L))
+    assert(partDirs(store) == Seq("batch_seq=compacted-2"), partDirs(store).mkString(","))
   }
 
   test("auto-compaction at compactEvery keeps stream == batch and bounds the open-delta set") {
@@ -191,38 +194,11 @@ class EdgeStreamSpec extends SparkSpec {
     val batch = GraphOps.itemEdgeSupports(all.toDF(), "order_id", "part_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(streamed == batch)
-    // with compactEvery=2 the open-delta set never exceeds 1 after a
-    // trigger that compacted; 5 slices → at most 1 open partition left
-    val open = Option(new java.io.File(s"$store/delta").listFiles())
-      .map(_.map(_.getName).count(_.startsWith("batch_seq="))).getOrElse(0)
-    assert(open <= 1, s"open deltas not bounded: $open")
-    assert(new java.io.File(s"$store/gen=0").exists() ||
-      new java.io.File(s"$store/gen=1").exists())
-  }
-
-  test("fresh-session recovery: a dropped catalog entry re-registers with bucket metadata intact") {
-    val store = java.nio.file.Files.createTempDirectory("edge-store4").toString
-    val b = Seq(BasketFact(1, 10), BasketFact(1, 11), BasketFact(2, 10), BasketFact(2, 11)).toDF()
-    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L)
-    EdgeStream.compact(spark, store) // materialize the bucketed base
-    val before = EdgeStream.readStore(spark, store)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // simulate a fresh session: the files + manifest survive, the
-    // session-scoped catalog entry does not
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_edge_stream_"))
-      .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    val after = EdgeStream.readStore(spark, store)
-    assert(after.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap == before)
-    // and the recovered table still carries the bucket spec: a join on
-    // (x, y) reads the store without an exchange
-    val delta = Seq((10L, 11L, 1L)).toDF("x", "y", "__ds")
-    val plan = after.withColumnRenamed("support", "__ss")
-      .join(delta, Seq("x", "y"), "full_outer")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount") &&
-      graft.tools.ExchangeAudit.shuffleExchanges(plan) == 1,
-      s"recovered store lost its bucket metadata:\n$plan")
+    // with compactEvery=2 every second part triggers a compaction; 5
+    // slices leave the one compacted part
+    val parts = BatchSeqStore.parts(spark, store)
+    assert(parts.size <= 1 && parts.forall(_.startsWith("compacted-")),
+      s"open deltas not bounded: $parts")
   }
 
   test("batch-sequence guard: replay skips, fresh sequence at 0 folds, anomalies fail fast") {
@@ -232,20 +208,26 @@ class EdgeStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val k1 = BatchSeqStore.streamKey("/ckpt/one")
     val k2 = BatchSeqStore.streamKey("/ckpt/two")
+    val k3 = BatchSeqStore.streamKey("/ckpt/three")
     assert(k1 != k2)
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L, streamKey = k1)
     assert(supports == Map((10L, 11L) -> 1L))
-    // same sequence, same id: the crash-after-flip replay — skipped
+    // same sequence, same id: the crash-after-write replay — it
+    // replaces its own part
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L, streamKey = k1)
     assert(supports == Map((10L, 11L) -> 1L))
     // a FRESH sequence (replaced checkpoint, ids restarting at 0) must
-    // NOT be mistaken for that replay: its batch 0 folds — the silent
-    // data-loss case a bare batchId==lastApplied guard had
+    // NOT be mistaken for that replay: its batch 0 folds
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L, streamKey = k2)
     assert(supports == Map((10L, 11L) -> 2L))
-    // same sequence arriving with a LOWER id than already applied:
-    // checkpoint/store histories disagree — refuse, don't guess
     EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L, streamKey = k2)
+    // once compaction absorbed the batches, a replay of the last one
+    // is skipped instead of landing a second time
+    EdgeStream.compact(spark, store)
+    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L, streamKey = k2)
+    assert(supports == Map((10L, 11L) -> 3L))
+    // same sequence arriving with a LOWER id than already absorbed:
+    // checkpoint/store histories disagree — refuse, don't guess
     val e1 = intercept[IllegalStateException] {
       EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L, streamKey = k2)
     }
@@ -253,42 +235,11 @@ class EdgeStreamSpec extends SparkSpec {
     // an unknown sequence arriving MID-stream (its batches 0..n-1 were
     // never folded here): refuse
     val e2 = intercept[IllegalStateException] {
-      EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 5L, streamKey = k1)
+      EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 5L, streamKey = k3)
     }
     assert(e2.getMessage.contains("unrecognized stream"))
     // and none of the refusals touched the store
     assert(supports == Map((10L, 11L) -> 3L))
-  }
-
-  test("legacy keyless manifest: the first keyed fold adopts the key, even on the skip path") {
-    val store = java.nio.file.Files.createTempDirectory("edge-store6").toString
-    val b = Seq(BasketFact(1, 10), BasketFact(1, 11)).toDF()
-    def supports = EdgeStream.readStore(spark, store)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val k1 = BatchSeqStore.streamKey("/ckpt/legacy-upgrade")
-    val k2 = BatchSeqStore.streamKey("/ckpt/intruder")
-    // a legacy store: folds recorded WITHOUT a stream key
-    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 0L)
-    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L)
-    assert(supports == Map((10L, 11L) -> 2L))
-    // first keyed fold lands on the SKIP path (batchId == recorded):
-    // legacy skip semantics apply once, but the manifest must leave the
-    // keyless form NOW — not only on the next folding write
-    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L, streamKey = k1)
-    assert(supports == Map((10L, 11L) -> 2L))
-    val manifest = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(store, "CURRENT")).trim
-    assert(manifest.split("\\s+")(2) == k1, s"manifest not adopted: '$manifest'")
-    // proof the adoption has teeth: a DIFFERENT sequence arriving
-    // mid-stream now fails fast — under the keyless manifest it would
-    // have silently folded (sameSeq defaulted true)
-    val e = intercept[IllegalStateException] {
-      EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 7L, streamKey = k2)
-    }
-    assert(e.getMessage.contains("unrecognized stream"))
-    // ... and a replay of the adopted sequence still skips
-    EdgeStream.foldBatch(b, "order_id", "part_id", store, batchId = 1L, streamKey = k1)
-    assert(supports == Map((10L, 11L) -> 2L))
   }
 
   test("non-integral item ids are rejected at the fold boundary, not mid-stream") {

@@ -101,17 +101,19 @@ class StoreHadoopConfSpec extends SparkSpec {
     assert(SubstringStream.readSpans(session, spans).count() > 0L)
   }
 
-  /** Two baskets folded as two batches of one sequence, without
-    * auto-compaction; returns the expected supports.
+  /** Two baskets folded as two batches of one sequence, compacting
+    * every `compactEvery` parts (never by default); returns the
+    * expected supports.
     */
   private def foldTwoBaskets(
-      s: org.apache.spark.sql.SparkSession, store: String): Map[(Long, Long), Long] = {
+      s: org.apache.spark.sql.SparkSession, store: String,
+      compactEvery: Int = 0): Map[(Long, Long), Long] = {
     import s.implicits._
     val key = BatchSeqStore.streamKey(s"$store-checkpoint")
     EdgeStream.foldBatch(Seq((1L, 10L), (1L, 11L)).toDF("order_id", "part_id"),
-      "order_id", "part_id", store, batchId = 0L, streamKey = key, compactEvery = 0)
+      "order_id", "part_id", store, batchId = 0L, streamKey = key, compactEvery = compactEvery)
     EdgeStream.foldBatch(Seq((2L, 10L), (2L, 11L), (2L, 12L)).toDF("order_id", "part_id"),
-      "order_id", "part_id", store, batchId = 1L, streamKey = key, compactEvery = 0)
+      "order_id", "part_id", store, batchId = 1L, streamKey = key, compactEvery = compactEvery)
     Map((10L, 11L) -> 2L, (10L, 12L) -> 1L, (11L, 12L) -> 1L)
   }
 
@@ -120,7 +122,7 @@ class StoreHadoopConfSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
   private def manifestInStore(s: org.apache.spark.sql.SparkSession, store: String) = {
-    val m = new Path(store, "CURRENT")
+    val m = new Path(store, "_manifest")
     m.getFileSystem(s.sessionState.newHadoopConf()).exists(m)
   }
 
@@ -134,17 +136,18 @@ class StoreHadoopConfSpec extends SparkSpec {
   }
 
   test("an edge manifest flip the filesystem cannot apply fails the fold") {
-    // a quietly lost flip would leave the manifest a batch behind and
-    // let a compaction sweep deltas it still counts
+    // a quietly lost flip would leave the manifest a compaction behind
+    // and let the sweep delete parts it still counts; compacting after
+    // every fold, the second fold's compaction replaces the manifest
     val store = "graftnr://" + java.nio.file.Files.createTempDirectory("edge-noreplace")
-    val e = intercept[IllegalStateException](foldTwoBaskets(session, store))
+    val e = intercept[IllegalStateException](foldTwoBaskets(session, store, compactEvery = 1))
     assert(e.getMessage.contains("was not applied"), e.getMessage)
   }
 
   test("the edge manifest lands in the store for a file:// store path") {
     val local = java.nio.file.Files.createTempDirectory("edge-uri").toString
     val store = "file://" + local
-    val expected = foldTwoBaskets(spark, store)
+    val expected = foldTwoBaskets(spark, store, compactEvery = 1)
     assert(manifestInStore(spark, store))
     // a URI joined by java.nio is a relative path: file:/tmp/... under
     // the working directory

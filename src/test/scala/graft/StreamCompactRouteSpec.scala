@@ -18,7 +18,8 @@ import graft.streaming.{BatchSeqStore, StreamingRollup}
   * compactor that rewrote `partitionBy(bucket_month)` only would leave
   * leaf files at two partition depths under one root and break every
   * subsequent read of the store. compactPartitions must instead fold
-  * each month into a synthetic `batch_seq=compacted-<n>` partition.
+  * the store into one synthetic `batch_seq=compacted-<n>` partition
+  * per month, through the one BatchSeqStore compaction.
   */
 class StreamCompactRouteSpec extends SparkSpec {
   import spark.implicits._
@@ -89,12 +90,12 @@ class StreamCompactRouteSpec extends SparkSpec {
     assert(before.nonEmpty)
     assert(seqDirs(spark, path, "202403").size >= 2, "fixture must span multiple micro-batches")
 
-    // compact ONLY March — April stays per-batch: mixed compaction
-    // states must coexist under one root (the regression this guards)
+    // a batch-seq store compacts whole: every month folds into the
+    // one compacted part, committed by the store's one manifest
     RollupStore.compactPartitions(spark, path, Seq("202403"))
 
     assert(seqDirs(spark, path, "202403") == Seq("batch_seq=compacted-1"))
-    assert(seqDirs(spark, path, "202404").forall(!_.startsWith("batch_seq=compacted")))
+    assert(seqDirs(spark, path, "202404") == Seq("batch_seq=compacted-1"))
     val after = spark.read.parquet(path)
       .select("symbol", "bucket_ts", "open", "high", "low", "close", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
@@ -112,7 +113,7 @@ class StreamCompactRouteSpec extends SparkSpec {
     // idempotent: re-compacting folds the new batch in, rows unchanged
     RollupStore.compactPartitions(spark, path, Seq("202403", "202404"))
     assert(seqDirs(spark, path, "202403") == Seq("batch_seq=compacted-2"))
-    assert(seqDirs(spark, path, "202404") == Seq("batch_seq=compacted-1"))
+    assert(seqDirs(spark, path, "202404") == Seq("batch_seq=compacted-2"))
     assert(spark.read.parquet(path).count() == before.length + 1)
     // already-folded months are a no-op (no new generation)
     RollupStore.compactPartitions(spark, path, Seq("202403", "202404"))
@@ -134,8 +135,8 @@ class StreamCompactRouteSpec extends SparkSpec {
     // victim-pinned read exists to close (a root re-list here would
     // fold these rows into compacted-<n> AND leave their partition
     // alive: duplicates)
-    RollupStore.onAfterVictimList = { m =>
-      if (m == "202403") {
+    BatchSeqStore.onCompactStep = { step =>
+      if (step == "listed") {
         val late = Seq(("BTC", ts("2024-03-31 20:00:00"), 9.0, 9.0, 9.0, 9.0, 42.0, 7L))
           .toDF("symbol", "bucket_ts", "open", "high", "low", "close", "volume", "trades")
           .withColumn("bucket_month", date_format($"bucket_ts", "yyyyMM"))
@@ -143,7 +144,7 @@ class StreamCompactRouteSpec extends SparkSpec {
       }
     }
     try RollupStore.compactPartitions(spark, path, Seq("202403"))
-    finally RollupStore.onAfterVictimList = _ => ()
+    finally BatchSeqStore.onCompactStep = _ => ()
 
     // the late batch survives in its own partition, exactly once
     val dirs = seqDirs(spark, path, "202403")
@@ -161,37 +162,29 @@ class StreamCompactRouteSpec extends SparkSpec {
       "folded output must contain the victims' rows and nothing else")
   }
 
-  test("an orphan .compact_tmp_ dir (crash before the intent marker) is reclaimed by recovery") {
+  test("an orphan .compact_tmp_ dir (crash before the commit) is reclaimed by recovery") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sorphan").toString
     val path = landStream(dir, withCarriers = false)
     val truth = spark.read.parquet(path)
       .select("symbol", "bucket_ts", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
 
-    // crash window between the tmp write (step 2) and the marker write
-    // (step 3): a staged fold exists, no marker points at it
-    val monthDir = new org.apache.hadoop.fs.Path(path, "bucket_month=202403")
-    val fs = monthDir.getFileSystem(spark.sessionState.newHadoopConf())
-    spark.read.parquet(path)
-      .filter(col("bucket_month").cast("string") === "202403")
-      .drop("bucket_month", "batch_seq")
-      .coalesce(1).write.parquet(s"$path/bucket_month=202403/.compact_tmp_99")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(monthDir, ".compact_tmp_99")))
+    // crash between the staged write and the manifest commit: a staged
+    // fold exists, no manifest names it
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    BatchSeqStore.onCompactStep = step =>
+      if (step == "staged") throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](RollupStore.compactPartitions(spark, path, Seq("202403")))
+    finally BatchSeqStore.onCompactStep = _ => ()
+    assert(fs.exists(new org.apache.hadoop.fs.Path(root, ".compact_tmp_1")))
+    // the staging is invisible to readers
+    assert(spark.read.parquet(path).count() == truth.length)
 
-    // at the default age gate this dir is FRESH — recovery must leave
-    // it alone (it could be another compactor's live staging dir)
+    // the next compaction reclaims it before it stages its own fold
     RollupStore.compactPartitions(spark, path, Seq("202403"))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(monthDir, ".compact_tmp_99")),
-      "a freshly-written staging dir must never be reclaimed")
-
-    // aged past the gate, it is a genuine crash orphan: reclaimed
-    val saved = RollupStore.OrphanTmpMinAgeMs
-    try {
-      RollupStore.OrphanTmpMinAgeMs = -1L
-      RollupStore.compactPartitions(spark, path, Seq("202403"))
-    } finally RollupStore.OrphanTmpMinAgeMs = saved
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(monthDir, ".compact_tmp_99")),
-      "recovery must reclaim aged marker-less staging dirs")
+    assert(!fs.listStatus(root).exists(_.getPath.getName.startsWith(".compact_tmp_")),
+      "recovery must reclaim staging dirs no manifest commits")
     val healed = spark.read.parquet(path)
       .select("symbol", "bucket_ts", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
@@ -204,30 +197,43 @@ class StreamCompactRouteSpec extends SparkSpec {
     val truth = spark.read.parquet(path)
       .select("symbol", "bucket_ts", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
+    val schema = spark.read.parquet(path).schema
+    def committedRows() = BatchSeqStore.read(spark, path, schema).get
+      .select("symbol", "bucket_ts", "volume", "trades")
+      .orderBy("symbol", "bucket_ts").collect()
 
-    // simulate the crash window between commit-rename and victim
-    // deletion: fold March by hand into compacted-7, leave the original
-    // batch dirs in place, and persist the intent marker
-    val monthDir = new org.apache.hadoop.fs.Path(path, "bucket_month=202403")
-    val fs = monthDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val victims = fs.listStatus(monthDir).filter(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_seq=")).map(_.getPath)
-    val march = spark.read.parquet(path)
-      .filter(col("bucket_month").cast("string") === "202403")
-      .drop("bucket_month", "batch_seq")
-    march.coalesce(1).write.parquet(s"$path/bucket_month=202403/batch_seq=compacted-7")
-    val marker = new org.apache.hadoop.fs.Path(monthDir, "._compact_pending_7")
-    val out = fs.create(marker, true)
-    try out.write(victims.map(_.getName).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    def crashAt(step: String): Unit = {
+      BatchSeqStore.onCompactStep = s =>
+        if (s == step) throw new IllegalStateException("crash")
+      try intercept[IllegalStateException](RollupStore.compactPartitions(spark, path, Seq("202403")))
+      finally BatchSeqStore.onCompactStep = _ => ()
+    }
+
+    // crash in the window between the commit and the rename: reads
+    // through the manifest see the committed rows exactly once
+    crashAt("committed")
+    assert(committedRows().sameElements(truth), "read inside the committed window")
+
+    // a batch lands, then a compaction crashes between the rename and
+    // the victim sweep
+    val nxt = Seq(("BTC", ts("2024-03-31 21:00:00"), 1.0, 2.0, 0.5, 1.5, 10.0, 3L))
+      .toDF("symbol", "bucket_ts", "open", "high", "low", "close", "volume", "trades")
+      .withColumn("bucket_month", date_format($"bucket_ts", "yyyyMM"))
+    StreamingRollup.writeBatch(nxt, path, BatchSeqStore.streamKey(s"$dir/ckpt"), 99L)
+    val truth2 = (truth.map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2), r.getLong(3))) :+
+      (("BTC", ts("2024-03-31 21:00:00"), 10.0, 3L))).sortBy(r => (r._1, r._2.getTime)).toSeq
+    def rows(a: Array[org.apache.spark.sql.Row]) =
+      a.map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2), r.getLong(3))).toSeq
+    crashAt("renamed")
+    assert(rows(committedRows()) == truth2, "read inside the renamed window")
 
     // next maintenance call must heal: victims deleted, rows exact-once
     RollupStore.compactPartitions(spark, path, Seq("202403"))
-    assert(!fs.exists(marker))
+    assert(seqDirs(spark, path, "202403") == Seq("batch_seq=compacted-2"))
     val healed = spark.read.parquet(path)
       .select("symbol", "bucket_ts", "volume", "trades")
       .orderBy("symbol", "bucket_ts").collect()
-    assert(healed.sameElements(truth), "recovery must restore exactly-once rows")
+    assert(rows(healed) == truth2, "recovery must restore exactly-once rows")
   }
 
   test("stream -> compact -> register -> routed query bit-identical to batch rollup") {

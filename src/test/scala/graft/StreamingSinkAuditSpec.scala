@@ -20,9 +20,10 @@ import graft.streaming._
   *      — StreamingSpec asserts both crash windows),
   *      [[CmsStream.toCmsStore]], [[BloomStream.toBloomStore]],
   *      [[BloomStream.toShardedStore]], [[BoilerplateStream.toLineStore]]
-  *      and [[SubstringStream.toShingleStore]] (store and spans), plus
-  *      [[EdgeStream.toSupportStore]], which adds a sequence-scoped
-  *      manifest (EdgeStreamSpec asserts skip/fold/fail-fast).
+  *      [[SubstringStream.toShingleStore]] (store and spans) and
+  *      [[EdgeStream.toSupportStore]], all behind the store's replay
+  *      guard (EdgeStreamSpec asserts skip/fold/fail-fast,
+  *      BatchSeqStoreSpec every crash point of every store).
   *      Re-asserted here per sink — the same part written twice equals
   *      it written once — so this spec is the complete sink census.
   *   2. STATEFUL TRANSFORMS emitting through Spark's FileStreamSink
@@ -206,7 +207,7 @@ class StreamingSinkAuditSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/rollup").count() == 1)
 
     // EdgeStream.foldBatch — same (streamKey, batchId) twice == once
-    // (sequence/adoption coverage lives in EdgeStreamSpec)
+    // (sequence-guard coverage lives in EdgeStreamSpec)
     val store = java.nio.file.Files.createTempDirectory("audit_edge").toString
     val facts = Seq((1L, 10L), (1L, 11L)).toDF("order_id", "part_id")
     EdgeStream.foldBatch(facts, "order_id", "part_id", store, batchId = 0L, streamKey = key)
