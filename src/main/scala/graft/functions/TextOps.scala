@@ -257,7 +257,10 @@ object TextOps {
     * resolution paths should feed CC this linear form and leave the
     * pair form to callers whose PRODUCT is the pair list
     * (q_doc_minhash_pairs). Window over the same key the hot-bucket
-    * cap already partitions by — no extra exchange.
+    * cap already partitions by — no extra exchange. An edge repeats
+    * once per band its two docs share a bucket in: connected
+    * components ignores repeats, so a distinct's shuffle would buy
+    * nothing.
     *
     * This is the end-to-end form from text — what a CC-resolution
     * caller (dedup groups / keeper election) should feed instead of
@@ -289,7 +292,6 @@ object TextOps {
       .withColumn("__m", min(col(idCol)).over(w))
       .filter(col(idCol) =!= col("__m"))
       .select(col("__m").as("doc_a"), col(idCol).as("doc_b"))
-      .distinct()
   }
 
   /** Cross-join form over pre-banded keys (see [[minhashBanded]]). */

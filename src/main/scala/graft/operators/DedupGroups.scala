@@ -1,32 +1,50 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components over near-duplicate candidate pairs — the
   * final step of every dedup pipeline: pairs (from MinHash/SimHash/
   * winnowing/cosine) form a graph; each connected component is one
   * duplicate group; the minimum id in the component is the keeper.
   *
-  * Implemented as iterative min-label propagation over DataFrames
-  * (small-star style): every node repeatedly adopts the smallest label
-  * among itself and its neighbors until a fixpoint. Each iteration is
-  * one join + one aggregate; convergence needs at most the graph
-  * diameter rounds (near-dup graphs are shallow — chains longer than a
-  * handful of docs are rare), and the loop exits early when an
-  * iteration changes nothing. Deterministic: labels are ids, min is
-  * order-free.
+  * Two solvers, one answer. A graph small enough to broadcast is
+  * small enough to solve where the broadcast would be built: up to
+  * `spark.sql.autoBroadcastJoinThreshold` / 16 directed edges (two
+  * longs each) are collected and solved on the driver by union-find,
+  * min id as each component's root, and come back as a local
+  * relation. A near-dup graph of a few hundred edges then costs one
+  * collect instead of a cache, two checkpoints and a probe — each a
+  * Spark job of driver time. A larger graph (or a threshold of -1,
+  * which turns broadcasting off) runs iterative min-label propagation
+  * over DataFrames (small-star style): every node repeatedly adopts
+  * the smallest label among itself and its neighbors until a
+  * fixpoint, each iteration one join + one aggregate, with pointer
+  * doubling so a long chain converges in O(log diameter) rounds; the
+  * loop exits early when an iteration changes nothing. Both are
+  * deterministic: labels are ids, min is order-free.
   */
 object DedupGroups {
 
+  /** Bytes a directed edge (two longs) counts against the broadcast
+    * threshold when choosing the solver.
+    */
+  private val EdgeBytes = 16L
+
+  private val Schema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("group_id", LongType)))
+
   /** @param pairs columns (doc_a, doc_b) — undirected candidate edges
+    * @param maxIterations round limit of the distributed propagation
+    *        only; the driver solve is exact at any depth
     * @return (doc_id, group_id) for every doc appearing in any pair;
     *         group_id = min doc_id of its connected component
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 10): DataFrame = {
-    // (Tried: AQE off for the loop — 1.5-2x SLOWER. The adaptive
-    // coalescing of each round's tiny shuffles down to 1-2 partitions
-    // is worth far more than the re-planning overhead it costs.)
     // Both edge directions come from ONE pass over the pair lineage
     // (explode, not self-union — the union form executed the upstream
     // pair generation twice before the cache could fill), and edges
@@ -47,7 +65,90 @@ object DedupGroups {
         struct(col("__b").as("src"), col("__a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .cache()
+    // The size probe reads the same cache the propagation loop reads,
+    // so a graph past the bound has its pair lineage computed once.
+    val spark = pairs.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val small =
+      if (threshold < 0) None
+      else {
+        val bound = math.min(threshold / EdgeBytes, Int.MaxValue - 1L).toInt
+        Some(edges.limit(bound + 1).collect()).filter(_.length <= bound)
+      }
+    small match {
+      case Some(seen) =>
+        edges.unpersist()
+        solveOnDriver(spark, seen)
+      case None =>
+        val labels = propagate(edges, maxIterations)
+        edges.unpersist()
+        labels
+    }
+  }
 
+  /** Union-find over collected (src, dst) edges, rooted at each
+    * component's min id. Null endpoints get the row the propagation
+    * loop gives them, so both solvers agree row for row: the loop
+    * keys every null-source edge to one `doc_id = null` row that
+    * starts at the least non-null partner and never joins as a
+    * neighbor, so only pointer doubling moves it — to that partner's
+    * root once any round changes a label (a null label then drops
+    * out of the doubling join), and nowhere when the start labeling
+    * is already the fixpoint.
+    */
+  private def solveOnDriver(spark: SparkSession, edges: Array[Row]): DataFrame = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var v = x
+      while (parent(v) != v) {
+        val up = parent(parent(v))
+        parent(v) = up
+        v = up
+      }
+      v
+    }
+    var nullRow = false
+    var partner: Option[Long] = None
+    edges.foreach { r =>
+      if (r.isNullAt(0)) {
+        nullRow = true
+        if (!r.isNullAt(1)) partner = Some(partner.fold(r.getLong(1))(math.min(_, r.getLong(1))))
+      } else {
+        val s = r.getLong(0)
+        parent.getOrElseUpdate(s, s)
+        if (!r.isNullAt(1)) {
+          val d = r.getLong(1)
+          parent.getOrElseUpdate(d, d)
+          val (a, b) = (find(s), find(d))
+          if (a < b) parent(b) = a else if (b < a) parent(a) = b
+        }
+      }
+    }
+    // whether the loop's first round lowers any label: some node sees
+    // a neighbor whose start label (min over itself and its
+    // neighbors) is below its own
+    def changesAtStart: Boolean = {
+      val start = mutable.LongMap.empty[Long]
+      val linked = edges.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      linked.foreach { r =>
+        val s = r.getLong(0)
+        start(s) = math.min(start.getOrElse(s, s), r.getLong(1))
+      }
+      linked.exists(r => start(r.getLong(1)) < start(r.getLong(0)))
+    }
+    val nulls =
+      if (!nullRow) Nil
+      else if (!changesAtStart) Seq(Row(null, partner.map(Long.box).orNull))
+      else partner.map(p => Row(null, find(p))).toList
+    val rows = parent.keys.toSeq.map(v => Row(v, find(v))) ++ nulls
+    spark.createDataFrame(rows.asJava, Schema)
+  }
+
+  /** Iterative min-label propagation over the cached directed `edges`. */
+  private def propagate(edges: DataFrame, maxIterations: Int): DataFrame = {
+    // (Tried: AQE off for the loop — 1.5-2x SLOWER. The adaptive
+    // coalescing of each round's tiny shuffles down to 1-2 partitions
+    // is worth far more than the re-planning overhead it costs.)
     // localCheckpoint each round: iterative self-referential lineage
     // otherwise doubles the plan every iteration (exponential plan
     // size -> analysis/explain OOM long before any data problem).
@@ -169,7 +270,6 @@ object DedupGroups {
       converged = !anyChanged
       it += 1
     }
-    edges.unpersist()
     labels
   }
 

@@ -252,7 +252,8 @@ object Derived {
     // store's own bucket key, so the bucketed read stays in place
     val oldPairs = graft.functions.TextOps
       .minhashStarFromBanded(cb, "doc_id", keyCols)
-    // CC's result is already round-checkpointed internally
+    // CC's result is already materialized: a local relation, or the
+    // distributed loop's checkpointed labels
     val standing = graft.operators.DedupGroups.connectedComponents(oldPairs)
     MinhashStore(cb, keyCols, standing)
   }

@@ -21,10 +21,11 @@ import graft.operators.BloomOps
   * every other store, so a torn write never leaves a partial part
   * visible next to a committed one; the fold is a pure function of the
   * batch, with no standing-store read. Store maintenance is
-  * batch-proportional (≤ min(k·|batch|, numWords) rows per batch); the
-  * read-side fold is ≤ numWords·nParts rows, both bounded by the
-  * filter's [[BloomOps.MaxWords]] cap. The sharded store compacts its
-  * parts with the same bit_or ([[compact]]).
+  * batch-proportional (≤ min(k·|batch|, numWords) rows per batch); both
+  * folds compact their store with the read side's bit_or once it holds
+  * [[BatchSeqStore.CompactEvery]] parts, so the read-side fold is
+  * ≤ numWords·CompactEvery rows, bounded by the filter's
+  * [[BloomOps.MaxWords]] cap.
   */
 object BloomStream {
 
@@ -51,17 +52,30 @@ object BloomStream {
       k: Int,
       storePath: String,
       part: String
-  ): Unit =
-    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+  ): Unit = {
+    val spark = batch.sparkSession
+    if (BatchSeqStore.admits(spark, storePath, part)) {
       BatchSeqStore.write(BloomOps.bloomWordRows(batch, keyCol, numWords, k), storePath, part)
+      BatchSeqStore.compactWhenDue(spark, storePath)(compactWords(spark, storePath))
+    }
+  }
+
+  /** Fold the plain store's parts into one with the read side's bit_or
+    * ([[BatchSeqStore.compact]]); the fold runs it every
+    * [[BatchSeqStore.CompactEvery]] parts.
+    */
+  def compactWords(spark: SparkSession, storePath: String): Unit =
+    BatchSeqStore.compact(spark, storePath, WordSchema, orWords)
+
+  private def orWords(rows: DataFrame): DataFrame =
+    rows.groupBy(col("__w")).agg(expr("bit_or(__bits)").as("__bits"))
 
   /** The folded filter as sparse word rows (empty before the first
     * fold): one bit_or re-aggregation across the per-batch
     * contributions.
     */
   def readWordRows(spark: SparkSession, storePath: String): DataFrame =
-    BatchSeqStore.read(spark, storePath, WordSchema)
-      .map(_.groupBy(col("__w")).agg(expr("bit_or(__bits)").as("__bits")))
+    BatchSeqStore.read(spark, storePath, WordSchema).map(orWords)
       .getOrElse(spark.range(0).select(col("id").cast("int").as("__w"),
         col("id").as("__bits")))
 
@@ -112,10 +126,14 @@ object BloomStream {
       k: Int,
       storePath: String,
       part: String
-  ): Unit =
-    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+  ): Unit = {
+    val spark = batch.sparkSession
+    if (BatchSeqStore.admits(spark, storePath, part)) {
       BatchSeqStore.write(
         BloomOps.bloomShardRows(batch, keyCol, nShards, wordsPerShard, k), storePath, part)
+      BatchSeqStore.compactWhenDue(spark, storePath)(compact(spark, storePath))
+    }
+  }
 
   /** The folded sharded filter as a cluster-resident relation (empty
     * before the first fold): one bit_or re-aggregation across the
@@ -150,7 +168,8 @@ object BloomStream {
 
   /** Compact the sharded store's parts into one, bounding the read
     * side's fold at (filter bits)/64 rows: [[BatchSeqStore.compact]]
-    * with the read side's bit_or.
+    * with the read side's bit_or; the fold runs it every
+    * [[BatchSeqStore.CompactEvery]] parts.
     */
   def compact(spark: SparkSession, storePath: String): Unit =
     BatchSeqStore.compact(spark, storePath, ShardSchema, orShards)

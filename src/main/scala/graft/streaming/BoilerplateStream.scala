@@ -26,7 +26,8 @@ import graft.functions.TextOps
   * replay REPLACES its prior rows. Store maintenance is
   * batch-proportional (one count row per distinct line hash in the
   * batch — 16 bytes each, never line text); the read fold is one sum
-  * re-aggregation.
+  * re-aggregation over at most [[BatchSeqStore.CompactEvery]] parts,
+  * which the fold compacts with the same sum.
   */
 object BoilerplateStream {
 
@@ -50,14 +51,31 @@ object BoilerplateStream {
       textCol: String,
       storePath: String,
       part: String
-  ): Unit =
-    if (BatchSeqStore.admits(batch.sparkSession, storePath, part))
+  ): Unit = {
+    val spark = batch.sparkSession
+    // Compact BEFORE landing: the batch's own part then stays live
+    // until the next fold, so a scrub recovering this batch can still
+    // exclude it. The replay guard runs after the compaction, which
+    // may absorb a replayed batch's earlier landing.
+    BatchSeqStore.compactWhenDue(spark, storePath)(compact(spark, storePath))
+    if (BatchSeqStore.admits(spark, storePath, part))
       BatchSeqStore.write(
         TextOps.lineRows(batch, idCol, textCol)
           .select(col(idCol), col("__h"))
           .groupBy(col("__h"))
           .agg(countDistinct(col(idCol)).as("__nd")),
         storePath, part)
+  }
+
+  /** Fold the store's parts into one with the read side's sum
+    * ([[BatchSeqStore.compact]]); the fold runs it every
+    * [[BatchSeqStore.CompactEvery]] parts.
+    */
+  def compact(spark: SparkSession, storePath: String): Unit =
+    BatchSeqStore.compact(spark, storePath, Schema, sumCounts)
+
+  private def sumCounts(rows: DataFrame): DataFrame =
+    rows.groupBy(col("__h")).agg(sum(col("__nd")).as("__nd"))
 
   /** The folded per-line distinct-doc counts (empty before the first
     * fold): one sum re-aggregation across per-batch contributions.
@@ -69,8 +87,7 @@ object BoilerplateStream {
       storePath: String,
       except: String = null
   ): DataFrame =
-    BatchSeqStore.read(spark, storePath, Schema, except)
-      .map(_.groupBy(col("__h")).agg(sum(col("__nd")).as("__nd")))
+    BatchSeqStore.read(spark, storePath, Schema, except).map(sumCounts)
       .getOrElse(spark.range(0).select(col("id").as("__h"), col("id").as("__nd")))
 
   /** Line hashes whose standing distinct-doc count has reached
@@ -93,7 +110,8 @@ object BoilerplateStream {
     * fold-then-scrub ordering) must pass its own `batch_seq` as
     * `except` so the batch's already-folded lines do not count toward
     * `minDocs` against themselves — the [[SubstringStream]]
-    * self-exclusion contract.
+    * self-exclusion contract. The exclusion holds until the next
+    * fold, which may compact the batch's part into the rest.
     */
   def scrubBatch(
       batch: DataFrame,

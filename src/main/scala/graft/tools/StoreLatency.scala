@@ -34,9 +34,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.StoreLatency <storeSfDir> <batchSfDir> [slices]
   * Prints one STORE_LATENCY JSON line per family, with the live part
-  * count its store holds after the timed triggers (bounded by
-  * BatchSeqStore.CompactEvery for the stores that compact from their
-  * fold); assemble per-store runs into STREAM_STORE_LATENCY_r{N}.json.
+  * count its store holds after the timed triggers and whether that
+  * count is within BatchSeqStore.CompactEvery (every store compacts
+  * from its fold); assemble per-store runs into
+  * STREAM_STORE_LATENCY_r{N}.json.
   */
 object StoreLatency {
   def main(args: Array[String]): Unit = {
@@ -99,7 +100,7 @@ object StoreLatency {
     def emit(family: String, store: String, walls: Seq[Double], extra: String = ""): Unit = {
       val ws = walls.map(w => f"$w%.3f").mkString("[", ",", "]")
       val parts = BatchSeqStore.parts(spark, store).size
-      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${walls.size},"parts":$parts,"trigger_walls_sec":$ws$extra}""")
+      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${walls.size},"parts":$parts,"parts_bounded":${parts <= BatchSeqStore.CompactEvery},"trigger_walls_sec":$ws$extra}""")
     }
 
     // ---- substring: standing distinct-shingle store --------------------

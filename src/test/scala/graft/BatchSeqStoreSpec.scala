@@ -134,36 +134,36 @@ class BatchSeqStoreSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
 
   /** One store through its fold seam: `fold(root, batch, key, id)`
-    * lands a batch of documents, `compact(root)` runs its compaction
-    * (None: the store does not compact), `state(root)` renders what a
-    * reader sees, `recompute(batches)` the batch recompute.
+    * lands a batch of documents, `compact(root)` runs its compaction,
+    * `state(root)` renders what a reader sees, `recompute(batches)`
+    * the batch recompute.
     */
   private final case class Subject(
       name: String,
       fold: (String, DataFrame, String, Long) => Unit,
-      compact: Option[String => Unit],
+      compact: String => Unit,
       state: String => Seq[String],
       recompute: Seq[DataFrame] => Seq[String])
 
   private val subjects: Seq[Subject] = Seq(
     Subject("bloom",
       (r, b, k, i) => BloomStream.foldBatch(b, "text", 16, 3, r, BatchSeqStore.part(k, i)),
-      None,
+      r => BloomStream.compactWords(spark, r),
       r => BloomStream.readWords(spark, r, 16).toSeq.map(_.toString),
       bs => BloomOps.bloomWords(bs.reduce(_ union _), "text", 16, 3).toSeq.map(_.toString)),
     Subject("bloom_sharded",
       (r, b, k, i) => BloomStream.foldBatchSharded(b, "text", 4, 8, 3, r, BatchSeqStore.part(k, i)),
-      Some(r => BloomStream.compact(spark, r)),
+      r => BloomStream.compact(spark, r),
       r => render(BloomStream.readShardRows(spark, r)),
       bs => render(BloomOps.bloomShardRows(bs.reduce(_ union _), "text", 4, 8, 3))),
     Subject("cms",
       (r, b, k, i) => CmsStream.foldBatch(tokens(b), "tok", 64, 3, r, BatchSeqStore.part(k, i)),
-      Some(r => CmsStream.compact(spark, r)),
+      r => CmsStream.compact(spark, r),
       r => CmsStream.readCells(spark, r, 64, 3).toSeq.map(_.toString),
       bs => CmsOps.cmsCells(tokens(bs.reduce(_ union _)), "tok", 64, 3).toSeq.map(_.toString)),
     Subject("substring",
       (r, b, k, i) => SubstringStream.foldBatch(b, "doc_id", "text", 3, r, s"${r}_spans", i, k),
-      Some(r => SubstringStream.compact(spark, r)),
+      r => SubstringStream.compact(spark, r),
       r => render(SubstringStream.readStoreHashes(spark, r)) ++
         BatchSeqStore.read(spark, s"${r}_spans", new StructType().add("doc_id", "long")
           .add("span_start", "long").add("span_end", "long").add("n_tokens", "long"))
@@ -175,19 +175,19 @@ class BatchSeqStoreSpec extends SparkSpec {
           .sorted),
     Subject("edge",
       (r, b, k, i) => EdgeStream.foldBatch(facts(b), "doc_id", "item", r, i, k),
-      Some(r => EdgeStream.compact(spark, r)),
+      r => EdgeStream.compact(spark, r),
       r => render(EdgeStream.readStore(spark, r)),
       bs => render(GraphOps.itemEdgeSupports(facts(bs.reduce(_ union _)), "doc_id", "item"))),
     Subject("rollup",
       (r, b, k, i) => StreamingRollup.writeBatch(rollupRows(b), r, k, i),
       // compactPartitions infers the schema of the rows a store holds
-      Some(r => if (BatchSeqStore.parts(spark, r).nonEmpty) RollupStore.compactPartitions(spark, r, Nil)),
+      r => if (BatchSeqStore.parts(spark, r).nonEmpty) RollupStore.compactPartitions(spark, r, Nil),
       r => BatchSeqStore.read(spark, r, RollupSchema).toSeq
         .flatMap(df => render(df.drop(BatchSeqStore.Col))),
       bs => render(rollupRows(bs.reduce(_ union _)))),
     Subject("boilerplate",
       (r, b, k, i) => BoilerplateStream.foldBatch(b, "doc_id", "text", r, BatchSeqStore.part(k, i)),
-      None,
+      r => BoilerplateStream.compact(spark, r),
       r => render(BoilerplateStream.readLineCounts(spark, r)),
       bs => render(TextOps.lineRows(bs.reduce(_ union _), "doc_id", "text")
         .groupBy(col("__h")).agg(countDistinct(col("doc_id")).as("__nd")))))
@@ -237,23 +237,21 @@ class BatchSeqStoreSpec extends SparkSpec {
           w.toSeq
         case AfterCompactionCommit(step) =>
           s.fold(root, b, key, id)
-          s.compact.foreach { c =>
-            BatchSeqStore.onCompactStep = st =>
-              if (st == step) throw new IllegalStateException(s"crash at $step")
-            try intercept[IllegalStateException](c(root))
-            finally BatchSeqStore.onCompactStep = _ => ()
-          }
+          BatchSeqStore.onCompactStep = st =>
+            if (st == step) throw new IllegalStateException(s"crash at $step")
+          try intercept[IllegalStateException](s.compact(root))
+          finally BatchSeqStore.onCompactStep = _ => ()
           val w = check("inside the window", i + 1)
           s.fold(root, b, key, id)
           w.toSeq ++ check("after the replay", i + 1)
         case ReplacedCheckpoint =>
-          s.compact.foreach(_(root))
+          s.compact(root)
           s.fold(root, b, key, id)
           Nil
       }
     }
-    s.compact.foreach(_(root))
-    val bounded = s.compact.isEmpty || BatchSeqStore.parts(spark, root).size == 1
+    s.compact(root)
+    val bounded = BatchSeqStore.parts(spark, root).size == 1
     failures ++ check("at the end", batches.size) ++
       (if (bounded) None else Some(s"${s.name}: $crash left ${BatchSeqStore.parts(spark, root)}"))
   }
@@ -280,6 +278,18 @@ class BatchSeqStoreSpec extends SparkSpec {
       val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2)
         .withInitialSeed(Seed(20261019L + c)), prop)
       assert(result.passed, result.status.toString)
+    }
+  }
+
+  test("bloom, sharded bloom and boilerplate compact from their folds") {
+    val n = BatchSeqStore.CompactEvery + 1
+    val batches = (0 until n).map(i => Seq((i.toLong, docs(i % docs.size)._2)).toDF("doc_id", "text"))
+    for (s <- subjects.filter(s => Set("bloom", "bloom_sharded", "boilerplate")(s.name))) {
+      val root = tmp(s"bss_fold_compacts_${s.name}")
+      batches.zipWithIndex.foreach { case (b, i) => s.fold(root, b, "k", i.toLong) }
+      val live = BatchSeqStore.parts(spark, root)
+      assert(live.size <= 2 && live.exists(BatchSeqStore.isCompacted), s"${s.name}: $live")
+      assert(s.state(root) == s.recompute(batches), s.name)
     }
   }
 

@@ -119,7 +119,7 @@ class ExchangeBudgetSpec extends SparkSpec {
     "q_cuped" -> 4,
     "q_daily_coverage" -> 2,
     "q_dedup_funnel" -> 4,
-    // build-store returns the checkpointed CC labels (exchanges paid
+    // build-store returns the materialized CC labels (exchanges paid
     // inside the build, like q_dedup_groups)
     "q_dedup_build_store" -> 0,
     "q_dedup_groups" -> 0,

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
-
 import graft.sources.Tables
 
 /** The table readers infer a file's schema once: a second read of a
@@ -29,21 +24,6 @@ class TablesSchemaSpec extends SparkSpec {
     "region" -> (() => Tables.region(spark, sfDir)),
     "documents" -> (() => Tables.documents(spark, sfDir)),
     "embeddings" -> (() => Tables.embeddings(spark, sfDir)))
-
-  /** Jobs submitted while `body` runs, counted after the bus drains. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftBridge.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      GraftBridge.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("building each table reader a second time submits no Spark job") {
     readers.foreach { case (_, read) => read() }
