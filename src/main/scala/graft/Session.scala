@@ -7,9 +7,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The one run harness: every graft main and the test JVM build their
   * session through [[local]], and everything that times a query runs
-  * it through [[consume]] after [[warmUp]], so a number from Bench,
-  * ProfileQuery or FixedBatchSweep measures the same session shape and
-  * the same action.
+  * it through [[consume]] after [[warmUp]], so a number from Bench or
+  * ProfileQuery measures the same session shape and the same action.
   */
 object Session {
 

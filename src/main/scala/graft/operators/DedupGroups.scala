@@ -308,18 +308,11 @@ object DedupGroups {
   def incrementalGroups(
       labels: DataFrame,
       newPairs: DataFrame,
-      maxIterations: Int = 10,
-      broadcastBatch: Boolean = true
+      maxIterations: Int = 10
   ): DataFrame = {
     // The batch-bounded frames (nodes/nodeLbl/remap/...) are hinted
-    // broadcast by default — right for the daily-ingest shape where
-    // the batch is orders of magnitude under the corpus. A batch too
-    // big to broadcast (a backfill merging months at once) would
-    // bypass the optimizer's size check through the hint and can OOM
-    // the driver: pass broadcastBatch = false there and let AQE pick
-    // the join strategy from runtime sizes.
-    val hint: DataFrame => DataFrame =
-      if (broadcastBatch) broadcast(_) else identity
+    // broadcast — right for the daily-ingest shape, where the batch is
+    // orders of magnitude under the corpus.
     val pairs = newPairs.select(
       col("doc_a").cast("long").as("doc_a"), col("doc_b").cast("long").as("doc_b"))
     val lbl = labels.select(
@@ -328,13 +321,13 @@ object DedupGroups {
       .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
     // standing rows for docs incident to a new pair (batch-bounded);
     // the one scan of the corpus-sized label table on the fold path
-    val nodeLbl = lbl.join(hint(nodes), Seq("doc_id"))
+    val nodeLbl = lbl.join(broadcast(nodes), Seq("doc_id"))
     // collapse endpoints to their standing groups; an edge whose ends
     // share a group carries no new information and is dropped
     val collapsed = pairs
-      .join(hint(nodeLbl.select(col("doc_id").as("doc_a"), col("group_id").as("__ga"))),
+      .join(broadcast(nodeLbl.select(col("doc_id").as("doc_a"), col("group_id").as("__ga"))),
         Seq("doc_a"), "left")
-      .join(hint(nodeLbl.select(col("doc_id").as("doc_b"), col("group_id").as("__gb"))),
+      .join(broadcast(nodeLbl.select(col("doc_id").as("doc_b"), col("group_id").as("__gb"))),
         Seq("doc_b"), "left")
       .select(coalesce(col("__ga"), col("doc_a")).as("doc_a"),
         coalesce(col("__gb"), col("doc_b")).as("doc_b"))
@@ -342,10 +335,10 @@ object DedupGroups {
     // cc nodes = touched group ids + new doc ids; labels = component
     // min over them = component min over all underlying members
     val cc = connectedComponents(collapsed, maxIterations)
-    val newIds = nodes.join(hint(nodeLbl.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    val newDocRows = cc.join(hint(newIds), Seq("doc_id"))
+    val newIds = nodes.join(broadcast(nodeLbl.select(col("doc_id"))), Seq("doc_id"), "left_anti")
+    val newDocRows = cc.join(broadcast(newIds), Seq("doc_id"))
     lbl.withColumnRenamed("group_id", "old_group")
-      .join(hint(cc.select(col("doc_id").as("old_group"), col("group_id"))),
+      .join(broadcast(cc.select(col("doc_id").as("old_group"), col("group_id"))),
         Seq("old_group"), "left")
       .select(col("doc_id"),
         coalesce(col("group_id"), col("old_group")).as("group_id"))

@@ -829,12 +829,11 @@ object MicrostructureOps {
 
   /** Conf key capping the exact stage's packed-series BROADCAST:
     * when the screen's move subtree exceeds this many bytes by plan
-    * statistics, `broadcastSeries = true` is demoted to the chunked
-    * shuffle path automatically. Bytes of the PRE-packed moves; the
-    * packed table is smaller (16 B/cell + key overhead), so the
-    * default 2 GiB estimate bounds the broadcast comfortably under
-    * a 1 GiB build while never demoting a 15k×63-cell sf1 universe
-    * (~15 MB packed).
+    * statistics, the exact stage takes the chunked shuffle path
+    * instead. Bytes of the PRE-packed moves; the packed table is
+    * smaller (16 B/cell + key overhead), so the default 2 GiB
+    * estimate bounds the broadcast comfortably under a 1 GiB build
+    * while never demoting a 15k×63-cell sf1 universe (~15 MB packed).
     */
   val MaxBroadcastSeriesBytesConf = "spark.graft.corr.maxBroadcastSeriesBytes"
   private val DefaultMaxBroadcastSeriesBytes = 2L * 1024 * 1024 * 1024
@@ -855,8 +854,8 @@ object MicrostructureOps {
     // non-file-backed inputs (in-memory relations, post-shuffle or
     // cached frames) have NO real estimate — Spark substitutes
     // spark.sql.defaultSizeInBytes (Long.MaxValue by default), which
-    // would silently demote an explicitly requested broadcast on a
-    // meaningless number. Unknown size → honor the caller's choice.
+    // would silently demote the broadcast on a meaningless number.
+    // Unknown size → keep broadcasting.
     // >= rather than ==: a filter/project over an unsized leaf SCALES
     // the sentinel (so it no longer equals it but is still
     // meaningless), and anything at or past the sentinel — or past
@@ -868,13 +867,11 @@ object MicrostructureOps {
     val ok = unknown || est <= cap
     if (unknown) org.slf4j.LoggerFactory.getLogger(getClass).info(
       "corrScreen: moves plan has no size estimate (defaultSizeInBytes) — " +
-        "keeping the requested broadcast path; pass broadcastSeries=false " +
-        "to force the chunked path for an unsized input")
+        "keeping the broadcast path")
     if (!ok) org.slf4j.LoggerFactory.getLogger(getClass).warn(
       s"corrScreen: packed-series broadcast demoted to the chunked shuffle path " +
         s"(moves plan estimate $est B > $MaxBroadcastSeriesBytesConf=$cap B); " +
-        "pass broadcastSeries=false explicitly to silence, or raise the conf " +
-        "if the driver can hold the packed universe")
+        "raise the conf if the driver can hold the packed universe")
     ok
   }
 
@@ -913,8 +910,9 @@ object MicrostructureOps {
     * order — bit-identical corr to the row-level form and the full
     * matrix entry.
     *
-    * `broadcastSeries = false` is the guard for universes whose packed
-    * series exceed broadcast comfort (≳5e7 cells ≈ 1 GB): the series
+    * The chunked path is the guard for universes whose packed series
+    * exceed broadcast comfort (≳5e7 cells ≈ 1 GB), taken when
+    * [[seriesBroadcastable]] rejects the moves' plan estimate: the series
     * are packed per (key, week-chunk) instead, the pair×chunk rows
     * flow through SHUFFLE_HASH joins (sorting pair×series-array rows
     * is exactly the SMJ pathology the broadcast path avoids — measured
@@ -926,10 +924,10 @@ object MicrostructureOps {
     */
   private def exactCorrOnPairs(
       pairs: DataFrame, moves: DataFrame, keyCol: String,
-      extraCols: Seq[String], broadcastSeries: Boolean): DataFrame = {
+      extraCols: Seq[String]): DataFrame = {
     val outCols = (Seq("key_a", "key_b") ++ extraCols).map(col) ++ Seq(
       col("hamming"), col("n_aligned"), col("corr"))
-    if (broadcastSeries) {
+    if (seriesBroadcastable(moves)) {
       val packed = moves
         .groupBy(col(keyCol).as("__k"))
         .agg(array_sort(collect_list(struct(col("__us"), col("__d"))))
@@ -1034,15 +1032,13 @@ object MicrostructureOps {
       keyCol: String,
       bucketCol: String,
       maxHamming: Int = 7,
-      bucketCap: Long = 10000L,
-      broadcastSeries: Boolean = true
+      bucketCap: Long = 10000L
   ): DataFrame = {
     // maxHamming passes through unchanged: beyond the chosen width's
     // pigeonhole radius (64/bits − 1) recall is probabilistic, which is
     // corrScreen's documented standard-LSH semantics
     corrScreen(rollup, keyCol, bucketCol, maxHamming = maxHamming,
-      bucketCap = bucketCap, bandBits = measuredBandBits(rollup, keyCol),
-      broadcastSeries = broadcastSeries)
+      bucketCap = bucketCap, bandBits = measuredBandBits(rollup, keyCol))
   }
 
   /** [[corrScreenSigned]] with the band width measured the same way —
@@ -1053,12 +1049,10 @@ object MicrostructureOps {
       keyCol: String,
       bucketCol: String,
       maxHamming: Int = 7,
-      bucketCap: Long = 10000L,
-      broadcastSeries: Boolean = true
+      bucketCap: Long = 10000L
   ): DataFrame =
     corrScreenSigned(rollup, keyCol, bucketCol, maxHamming = maxHamming,
-      bucketCap = bucketCap, bandBits = measuredBandBits(rollup, keyCol),
-      broadcastSeries = broadcastSeries)
+      bucketCap = bucketCap, bandBits = measuredBandBits(rollup, keyCol))
 
   /** Sign-sketch correlation screen at an EXPLICIT band width.
     * `bandBits` has no default by design: pick it with
@@ -1073,8 +1067,7 @@ object MicrostructureOps {
       bucketCol: String,
       maxHamming: Int = 7,
       bucketCap: Long = 10000L,
-      bandBits: Int,
-      broadcastSeries: Boolean = true
+      bandBits: Int
   ): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 64,
       s"maxHamming=$maxHamming outside [0, 64]")
@@ -1094,8 +1087,7 @@ object MicrostructureOps {
       .filter(col("hamming") <= maxHamming)
       .select(col("key_a"), col("key_b"), col("hamming"))
       .distinct()
-    exactCorrOnPairs(pairs, moves, keyCol, Seq.empty,
-      broadcastSeries && seriesBroadcastable(moves))
+    exactCorrOnPairs(pairs, moves, keyCol, Seq.empty)
   }
 
   /** BOTH sides of the screen: co-moving pairs (near-equal sign
@@ -1118,8 +1110,7 @@ object MicrostructureOps {
       bucketCol: String,
       maxHamming: Int = 7,
       bucketCap: Long = 10000L,
-      bandBits: Int,
-      broadcastSeries: Boolean = true
+      bandBits: Int
   ): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32,
       s"maxHamming=$maxHamming outside [0, 31] (>= 32 would overlap the sides)")
@@ -1148,7 +1139,6 @@ object MicrostructureOps {
       .select(col("key_a"), col("key_b"), col("hamming"),
         lit("anti_moving").as("side"))
     val pairs = co.unionByName(anti).distinct()
-    exactCorrOnPairs(pairs, moves, keyCol, Seq("side"),
-      broadcastSeries && seriesBroadcastable(moves))
+    exactCorrOnPairs(pairs, moves, keyCol, Seq("side"))
   }
 }

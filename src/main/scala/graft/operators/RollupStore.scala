@@ -232,10 +232,13 @@ object RollupStore {
       .partitionBy(PartitionCol).parquet(path)
   }
 
+  /** Rows per file a compacted month holds. */
+  private val CompactRowsPerFile = 1000000L
+
   /** Small-file compaction — the `OPTIMIZE TABLE` analog for streaming
     * sinks: append-mode foreachBatch writers accumulate one file per
     * micro-batch per partition; periodically rewrite each month
-    * partition into ~`targetRowsPerFile`-row files. Idempotent and
+    * partition into ~1M-row files. Idempotent and
     * partition-scoped (dynamic overwrite leaves other months alone).
     *
     * A store written by the exactly-once streaming sink
@@ -255,12 +258,11 @@ object RollupStore {
   def compactPartitions(
       spark: SparkSession,
       path: String,
-      months: Seq[String],
-      targetRowsPerFile: Long = 1000000L
+      months: Seq[String]
   ): Unit =
     if (BatchSeqStore.parts(spark, path).nonEmpty) {
       def files(rows: DataFrame) =
-        rows.repartition(math.max(1, math.ceil(rows.count().toDouble / targetRowsPerFile).toInt))
+        rows.repartition(math.max(1, math.ceil(rows.count().toDouble / CompactRowsPerFile).toInt))
       BatchSeqStore.compact(spark, path, spark.read.parquet(path).schema, files, PartitionCol)
     } else {
       val df = spark.read.parquet(path)
@@ -269,7 +271,7 @@ object RollupStore {
       val counts = df.groupBy(col(PartitionCol)).count()
         .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
       val nFiles = math.max(1,
-        math.ceil(counts.values.sum.toDouble / targetRowsPerFile).toInt)
+        math.ceil(counts.values.sum.toDouble / CompactRowsPerFile).toInt)
       df.repartition(nFiles, col(PartitionCol))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy(PartitionCol).parquet(path)

@@ -1342,21 +1342,17 @@ object IndicatorQueries {
 
     // ----- VPIN-style flow toxicity on the volume clock: equal-volume
     // buckets via a per-key prefix sum, tick-rule signed flow, one
-    // division per bucket. Cents are derived PER ROW before the rollup
-    // aggregation via the pure-IEEE floor(v*100+0.5) (Cents.scala) and
-    // summed as longs — no engine-owned rounding policy anywhere in the
-    // hash-compared path, and every oracle column carries an explicit
+    // division per bucket. The cent-exact candle derives volume cents
+    // PER ROW before the rollup aggregation via the pure-IEEE
+    // floor(v*100+0.5) (Cents.scala) and sums them as longs; the close
+    // cents are the same function of the candle's close tick — no
+    // engine-owned rounding policy anywhere in the hash-compared path,
+    // and every oracle column carries an explicit
     // portable CAST (the r6-r8 red was the uncast HUGEINT vol_bucket,
     // whose pandas/arrow conversion differs across DuckDB releases) ----
     Q("q_vpin", (s, dir) => {
-      val cents = graft.functions.Cents.cents(col("value"))
-      val pre = Tables.events(s, dir)
-        .groupBy(col("user_id"),
-          graft.functions.TimeBucket.time_bucket(col("ts"), "1 hour")
-            .as("bucket_ts"))
-        .agg(
-          max_by(cents, col("ts")).as("close_cents"),
-          sum(cents).as("vol_cents"))
+      val pre = userCandlesCents(s, dir, "1 hour")
+        .withColumn("close_cents", graft.functions.Cents.cents(col("close")))
       MicrostructureOps.vpinFromCents(pre, Seq("user_id"), "bucket_ts",
         "close_cents", "vol_cents", bucketVolumeCents = 50000L)
     },

@@ -53,7 +53,7 @@ import graft.functions.TextOps
   * shingle positions for the span merge. Nothing corpus-sized ever
   * shuffles; shuffle rows are the batch's 24-byte (hash, doc, pos)
   * triples, never text. Batches whose distinct-hash count exceeds
-  * `maxBroadcastHashes` fall back to a shuffle join (correct, just
+  * `MaxBroadcastHashes` (5M) fall back to a shuffle join (correct, just
   * not broadcast).
   */
 object SubstringStream {
@@ -62,7 +62,7 @@ object SubstringStream {
     * overhead each; 5M ≈ 120 MB build). Above this the per-batch
     * joins degrade to shuffles instead of risking the driver.
     */
-  val DefaultMaxBroadcastHashes = 5000000L
+  private val MaxBroadcastHashes = 5000000L
 
   private val HashSchema = StructType(Seq(StructField("__h", LongType)))
   private val SpanSchema = StructType(
@@ -75,13 +75,11 @@ object SubstringStream {
       k: Int,
       storePath: String,
       spansPath: String,
-      checkpoint: String,
-      maxBroadcastHashes: Long = DefaultMaxBroadcastHashes
+      checkpoint: String
   ): DataStreamWriter[Row] = {
     val key = BatchSeqStore.streamKey(checkpoint)
     BatchSeqStore.sink(docs, checkpoint) { (batch, batchId, _) =>
-      foldBatch(batch, idCol, textCol, k, storePath, spansPath,
-        batchId, key, maxBroadcastHashes)
+      foldBatch(batch, idCol, textCol, k, storePath, spansPath, batchId, key)
     }
   }
 
@@ -114,8 +112,7 @@ object SubstringStream {
       storePath: String,
       spansPath: String,
       batchId: Long,
-      key: String,
-      maxBroadcastHashes: Long = DefaultMaxBroadcastHashes
+      key: String
   ): Unit = {
     val spark = batch.sparkSession
     val part = BatchSeqStore.part(key, batchId)
@@ -128,7 +125,7 @@ object SubstringStream {
     val shp = TextOps.shinglePositions(batch, idCol, textCol, k)
       .localCheckpoint(true)
     val batchHashes = shp.select(col("__h")).distinct().localCheckpoint(true)
-    val small = batchHashes.count() <= maxBroadcastHashes
+    val small = batchHashes.count() <= MaxBroadcastHashes
     def maybeBroadcast(df: DataFrame) = if (small) broadcast(df) else df
     // which batch hashes the standing corpus already holds: the store
     // scans in place, the (bounded) batch set broadcasts into it

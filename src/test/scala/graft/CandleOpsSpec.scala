@@ -90,11 +90,16 @@ class CandleOpsSpec extends SparkSpec {
   }
 
   test("the candle's argmin open is defined once in main code") {
-    // RollupRouting's Catalyst rewrite maps a matched MinBy onto the
-    // rollup's carriers; it reads the candle, it does not define one
-    val defs = SourceCode.census("""\bmin_by\(|\bMinBy\(""", "src/main/scala")
+    // RollupRouting's Catalyst rewrite maps a matched MinBy/MaxBy onto
+    // the rollup's carriers; it reads the candle, it does not define one
+    def defs(needle: String) = SourceCode.census(needle, "src/main/scala")
       .filter { case (f, _) => !f.endsWith("org/apache/spark/sql/graft/RollupRouting.scala") }
-    assert(defs == Map("src/main/scala/graft/operators/CandleOps.scala" -> 1))
+    assert(defs("""\bmin_by\(|\bMinBy\(""") ==
+      Map("src/main/scala/graft/operators/CandleOps.scala" -> 1))
+    // the argmax close likewise: ohlc's close plus the two latest-row
+    // helpers (latestByKeyAgg, latestPerKey), all in CandleOps
+    assert(defs("""\bmax_by\(|\bMaxBy\(""") ==
+      Map("src/main/scala/graft/operators/CandleOps.scala" -> 3))
   }
 
   test("P3 candleChecks rejects exactly the CHECK-violating rows") {

@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.MicrostructureOps
 
-/** The corrScreen exact stage's `broadcastSeries = false` week-chunk
-  * fallback — the 100 TB guard for universes whose packed series
-  * exceed broadcast comfort. Pins (1) bit-identical equivalence to the
-  * broadcast path on a planted-copycat fixture spanning multiple week
-  * chunks, (2) the plan shape the doc claims (per-(key, chunk)
-  * SHUFFLE_HASH joins + per-pair co-moment re-aggregation, no
-  * sort-merge over pair×series rows), and (3) the plan-statistics
-  * auto-demotion gate.
+/** The corrScreen exact stage's week-chunk fallback — the 100 TB guard
+  * for universes whose packed series exceed broadcast comfort, forced
+  * here by a one-byte `MaxBroadcastSeriesBytesConf`. Pins (1)
+  * bit-identical equivalence to the broadcast path on a
+  * planted-copycat fixture spanning multiple week chunks, (2) the plan
+  * shape the doc claims (per-(key, chunk) SHUFFLE_HASH joins +
+  * per-pair co-moment re-aggregation, no sort-merge over pair×series
+  * rows), and (3) the plan-statistics auto-demotion gate.
   */
 class CorrScreenFallbackSpec extends SparkSpec {
   import spark.implicits._
@@ -42,21 +42,27 @@ class CorrScreenFallbackSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) = df
     .orderBy("key_a", "key_b").collect()
 
+  /** `body` with the packed-series broadcast capped at one byte, so
+    * every screen it plans takes the chunked path.
+    */
+  private def chunkedPath[T](body: => T): T = {
+    spark.conf.set(MicrostructureOps.MaxBroadcastSeriesBytesConf, "1")
+    try body finally spark.conf.unset(MicrostructureOps.MaxBroadcastSeriesBytesConf)
+  }
+
   test("broadcastSeries=false is bit-identical to the broadcast path (corrScreen + signed)") {
     val wide = MicrostructureOps.corrScreen(
       fixture, "sym", "bucket_ts", maxHamming = 24, bandBits = 8)
-    val chunked = MicrostructureOps.corrScreen(
-      fixture, "sym", "bucket_ts", maxHamming = 24, bandBits = 8,
-      broadcastSeries = false)
+    val chunked = chunkedPath(MicrostructureOps.corrScreen(
+      fixture, "sym", "bucket_ts", maxHamming = 24, bandBits = 8))
     val w = rows(wide); val c = rows(chunked)
     assert(w.nonEmpty, "fixture must surface candidate pairs")
     assert(c.sameElements(w), "chunked exact stage diverged from broadcast")
 
     val signedB = MicrostructureOps.corrScreenSigned(
       fixture, "sym", "bucket_ts", maxHamming = 7, bandBits = 8)
-    val signedC = MicrostructureOps.corrScreenSigned(
-      fixture, "sym", "bucket_ts", maxHamming = 7, bandBits = 8,
-      broadcastSeries = false)
+    val signedC = chunkedPath(MicrostructureOps.corrScreenSigned(
+      fixture, "sym", "bucket_ts", maxHamming = 7, bandBits = 8))
     val sb = signedB.orderBy("key_a", "key_b", "side").collect()
     val sc = signedC.orderBy("key_a", "key_b", "side").collect()
     assert(sb.exists(_.getAs[String]("side") == "anti_moving"),
@@ -69,9 +75,8 @@ class CorrScreenFallbackSpec extends SparkSpec {
   }
 
   test("the chunked plan joins on (key, week-chunk) and re-aggregates co-moments; no SMJ over series rows") {
-    val chunked = MicrostructureOps.corrScreen(
-      fixture, "sym", "bucket_ts", maxHamming = 24, bandBits = 8,
-      broadcastSeries = false)
+    val chunked = chunkedPath(MicrostructureOps.corrScreen(
+      fixture, "sym", "bucket_ts", maxHamming = 24, bandBits = 8))
     val plan = chunked.queryExecution.executedPlan.toString()
     assert(plan.contains("__ck"), s"expected week-chunk join key in plan:\n$plan")
     assert(plan.contains("ShuffledHashJoin"),
@@ -165,7 +170,7 @@ class CorrScreenFallbackSpec extends SparkSpec {
     try {
       val demoted = MicrostructureOps.corrScreen(
         fixture, "sym", "bucket_ts", maxHamming = 24,
-        bandBits = 8) // broadcastSeries left at default
+        bandBits = 8)
       val plan = demoted.queryExecution.executedPlan.toString()
       assert(plan.contains("__ck"), "gate must demote to the chunked path")
       assert(rows(demoted).sameElements(want), "demotion must not change results")

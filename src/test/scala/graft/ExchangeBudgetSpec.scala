@@ -2,16 +2,16 @@ package graft
 
 /** Suite-wide shuffle budget: EVERY SparkEntry query is planned against
   * real data and its shuffle-exchange count pinned to the value the
-  * current plans produce (generated by `graft.tools.ExchangeAudit`,
-  * same session shape as this JVM). An extra Exchange in any query is
-  * a silent multiplier on 100 TB of traffic that a correctness gate
-  * cannot see and a bench run only shows as an unexplained slowdown —
-  * this spec turns it into a named red test at build time.
+  * current plans produce in this JVM's session. An extra Exchange in
+  * any query is a silent multiplier on 100 TB of traffic that a
+  * correctness gate cannot see and a bench run only shows as an
+  * unexplained slowdown — this spec turns it into a named red test at
+  * build time.
   *
-  * The pins are MAXIMA: a plan that drops an exchange passes (run the
-  * audit tool and tighten the pin when an improvement is deliberate);
-  * a plan that adds one fails with the query name. New queries must be
-  * added here — the completeness check fails otherwise.
+  * The pins are MAXIMA: a plan that drops an exchange passes (tighten
+  * the pin when an improvement is deliberate); a plan that adds one
+  * fails with the query name. New queries must be added here — the
+  * completeness check fails otherwise, naming the count it measured.
   */
 class ExchangeBudgetSpec extends SparkSpec {
 
@@ -374,9 +374,9 @@ class ExchangeBudgetSpec extends SparkSpec {
         catch { case e: Throwable =>
           fail(s"$name failed to plan: ${e.getMessage}")
         }
-      val n = graft.tools.ExchangeAudit.shuffleExchanges(plan)
+      val n = shuffleExchanges(plan)
       budgets.get(name) match {
-        case None => over += s"$name: NEW query with no pinned budget (counted $n) - run ExchangeAudit and add it"
+        case None => over += s"$name: NEW query with no pinned budget (counted $n) - pin that count here"
         case Some(b) if n > b => over += s"$name: $n exchanges > pinned $b"
         case _ => ()
       }
@@ -405,7 +405,7 @@ class ExchangeBudgetSpec extends SparkSpec {
       val plan = graft.api.Par.spreadKeyed(child, keys)
         .withColumn("r", row_number().over(byKey))
         .queryExecution.executedPlan.toString
-      assert(graft.tools.ExchangeAudit.shuffleExchanges(plan) == 1, s"$name:\n$plan")
+      assert(shuffleExchanges(plan) == 1, s"$name:\n$plan")
       val origins = "(ENSURE_REQUIREMENTS|REPARTITION_BY_NUM)".r.findAllIn(plan).toSeq
       assert(origins == Seq(origin), s"$name:\n$plan")
     }

@@ -25,7 +25,7 @@ class FoldPlanSpec extends SparkSpec {
       .join(delta, Seq("x", "y"), "full_outer")
     val plan = folded.queryExecution.executedPlan.toString
     // exactly one shuffle: the delta side matching the bucket layout
-    val n = graft.tools.ExchangeAudit.shuffleExchanges(plan)
+    val n = shuffleExchanges(plan)
     assert(n == 1, s"expected 1 exchange (delta side only), got $n:\n$plan")
     // the standing scan is bucketed: selected bucket count appears in
     // the FileScan line, and no Sort sits between it and the join on
@@ -50,7 +50,7 @@ class FoldPlanSpec extends SparkSpec {
     // exchange budget: the new batch's shuffle to the bucket layout +
     // the output distinct — the corpus-signature side must contribute
     // ZERO (a third exchange means the store reshuffled)
-    val n = graft.tools.ExchangeAudit.shuffleExchanges(plan)
+    val n = shuffleExchanges(plan)
     assert(n <= 2, s"expected <=2 exchanges (new side + distinct), got $n:\n$plan")
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions.{array, col, lit, map, struct}
 
 /** The run harness exists once: every session in `src/` is built by
   * [[Session.local]] (the test JVM's included), and the timed action
-  * is defined once, in [[Session.consume]].
+  * is defined once, in [[Session.consume]]. The engine ships two
+  * mains, Verify and Bench; dev tools run from the test source set.
   */
 class SessionSpec extends SparkSpec {
   import SourceCode.{census, code}
@@ -16,6 +17,14 @@ class SessionSpec extends SparkSpec {
       Map("src/main/scala/graft/Session.scala" -> 1))
     assert(census("""\bdef\s+consume\b""", "src/main/scala") ==
       Map("src/main/scala/graft/Session.scala" -> 1))
+  }
+
+  test("src/main defines only the Verify and Bench mains; no dev tool ships in it") {
+    assert(census("""\bdef\s+main\b""", "src/main/scala") == Map(
+      "src/main/scala/graft/Verify.scala" -> 1,
+      "src/main/scala/graft/Bench.scala" -> 1))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("src/main/scala/graft/tools")),
+      "dev tools belong under src/test/scala/graft/tools")
   }
 
   test("the comment stripper keeps code and drops comments") {

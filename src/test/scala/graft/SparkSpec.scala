@@ -41,4 +41,12 @@ abstract class SparkSpec extends AnyFunSuite {
       jobs.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Shuffle exchanges in a physical-plan string: hash / range /
+    * single-partition / round-robin repartitions — NOT broadcast
+    * exchanges, which move O(small) bytes and are counted separately
+    * where a spec cares.
+    */
+  protected def shuffleExchanges(plan: String): Int =
+    "(?<![A-Za-z])Exchange [A-Za-z]".r.findAllIn(plan).size
 }

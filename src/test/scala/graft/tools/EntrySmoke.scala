@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Dev smoke runner mirroring the driver's entry check: rows > 0 on
-  * sf0.001. `sbt "runMain graft.tools.EntrySmoke"`.
+  * sf0.001. `sbt "Test/runMain graft.tools.EntrySmoke"`.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {

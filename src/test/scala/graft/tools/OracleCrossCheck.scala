@@ -38,7 +38,7 @@ import org.apache.spark.sql.DataFrame
   * different result scales for decimal division — same rational,
   * different rendering).
   *
-  * Usage: runMain graft.tools.OracleCrossCheck [sfDir]
+  * Usage: Test/runMain graft.tools.OracleCrossCheck [sfDir]
   * Prints one `CROSSCHECK <name> MATCH|MATCH_SHIM|MISMATCH[_SHIM]|
   * UNSUPPORTED …` line per oracle plus a summary line; assemble into
   * ORACLE_MATRIX_r{N}.

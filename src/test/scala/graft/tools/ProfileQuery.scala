@@ -23,7 +23,7 @@ import scala.collection.mutable
   * compile 0; more means its generated classes were evicted from the
   * codegen cache or differ between runs (per-run literals in the code).
   *
-  * Usage: runMain graft.tools.ProfileQuery [--plans=<tag>] q1 q2 ...
+  * Usage: Test/runMain graft.tools.ProfileQuery [--plans=<tag>] q1 q2 ...
   */
 object ProfileQuery {
 

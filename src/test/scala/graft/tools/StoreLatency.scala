@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
 
 /** Streaming STORE_LATENCY bench: the per-micro-batch trigger wall of
   * each incremental store family against a LARGE standing store — the
-  * streaming complement of [[FixedBatchSweep]] (which proved the
-  * batch-mode folds flat). A production operator watches exactly this
-  * number: with a CONSTANT micro-batch, does the per-trigger wall stay
-  * flat as the standing store grows sf1 → sf10?
+  * streaming complement of the r13 fixed-batch sweep (which proved the
+  * batch-mode folds flat; SCALE_SWEEP_FIXED_BATCH_r13.json). A
+  * production operator watches exactly this number: with a CONSTANT
+  * micro-batch, does the per-trigger wall stay flat as the standing
+  * store grows sf1 → sf10?
   *
   * Harness: a real MemoryStream → foreachBatch streaming query per
   * family (default trigger, `processAllAvailable` per slice) with the
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
   *  - edge: delta fold (the batch's pair supports only) + the
   *    consumer read and one compaction, timed outside the trigger path
   *
-  * Usage: runMain graft.tools.StoreLatency <storeSfDir> <batchSfDir> [slices]
+  * Usage: Test/runMain graft.tools.StoreLatency <storeSfDir> <batchSfDir> [slices]
   * Prints one STORE_LATENCY JSON line per family, with the live part
   * count its store holds after the timed triggers and whether that
   * count is within BatchSeqStore.CompactEvery (every store compacts
@@ -61,8 +62,8 @@ object StoreLatency {
       .select(col("doc_id"), col("text"))
     val storeMaxId = storeDocs.agg(max(col("doc_id"))).head().getLong(0)
     val batchIdOffset = math.max(storeMaxId + 1L, 1000000000L)
-    // the CONSTANT micro-batch (FixedBatchSweep's convention): every
-    // 10th batchDir doc under ids disjoint from any store, split into
+    // the CONSTANT micro-batch (the fixed-batch sweep's convention):
+    // every 10th batchDir doc under ids disjoint from any store, split into
     // nSlices trigger-sized pieces — collected once (bounded: a
     // micro-batch by definition)
     val batchRows: Array[(Long, String)] = Tables.documents(spark, batchDir)

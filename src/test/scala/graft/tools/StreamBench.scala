@@ -68,7 +68,7 @@ object StreamBench {
     // identity-scan wall before vs after, with a bit-identity check
     // (count + order-independent row checksum) proving compaction is a
     // pure layout change.
-    var cStore = s"$work/out/rollup_1m"
+    val cStore = s"$work/out/rollup_1m"
     def storeFiles(): Int = {
       val root = new org.apache.hadoop.fs.Path(cStore)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -105,27 +105,18 @@ object StreamBench {
         .filter(_.startsWith("bucket_month="))
         .map(_.stripPrefix("bucket_month=")).toSeq.sorted
     }
-    // two regimes on two equivalent stores: max-fold (the 1M-row/file
-    // default — minimal file count, the cluster-scale shape where a
-    // month holds >> 1M rows anyway) and a parallelism-preserving fold
-    // sized so the folded month still scans wide on this box
-    var cMismatch = 0L
-    Seq(("max_fold", s"$work/out/rollup_1m", 1000000L),
-        ("sized_fold", s"$work/out/rollup_5m", 125000L)).foreach {
-      case (label, store, target) =>
-        cStore = store
-        val filesBefore = storeFiles()
-        val (nBefore, hBefore, wallBefore) = scanWall()
-        val ms = months()
-        val tc = System.nanoTime()
-        graft.operators.RollupStore.compactPartitions(spark, cStore, ms, target)
-        val compactWall = (System.nanoTime() - tc) / 1e9
-        val filesAfter = storeFiles()
-        val (nAfter, hAfter, wallAfter) = scanWall()
-        val bad = if (nBefore == nAfter && hBefore.compareTo(hAfter) == 0) 0L else 1L
-        cMismatch += bad
-        println(s"""COMPACT_BENCH {"regime":"$label","files_before":$filesBefore,"files_after":$filesAfter,"read_wall_before":$wallBefore,"read_wall_after":$wallAfter,"compact_wall":$compactWall,"rows":$nBefore,"months":${ms.size},"mismatch":$bad,"sf":"$sfDir"}""")
-    }
+    // one fold to RollupStore's 1M-row files: minimal file count, the
+    // cluster-scale shape where a month holds >> 1M rows anyway
+    val filesBefore = storeFiles()
+    val (nBefore, hBefore, wallBefore) = scanWall()
+    val ms = months()
+    val tc = System.nanoTime()
+    graft.operators.RollupStore.compactPartitions(spark, cStore, ms)
+    val compactWall = (System.nanoTime() - tc) / 1e9
+    val filesAfter = storeFiles()
+    val (nAfter, hAfter, wallAfter) = scanWall()
+    val cMismatch = if (nBefore == nAfter && hBefore.compareTo(hAfter) == 0) 0L else 1L
+    println(s"""COMPACT_BENCH {"regime":"max_fold","files_before":$filesBefore,"files_after":$filesAfter,"read_wall_before":$wallBefore,"read_wall_after":$wallAfter,"compact_wall":$compactWall,"rows":$nBefore,"months":${ms.size},"mismatch":$cMismatch,"sf":"$sfDir"}""")
 
     // ---- sketch store: streamed daily HLL parts ≡ batch build ------
     // The ingest path of the AggregatingMergeTree analog: the same
