@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Scale-adaptive parallelism pin for compute-dense stages.
   *
@@ -37,6 +37,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * most `maxUniverse` aligned keys), so byte-skew splitting has
   * nothing to split there, while the compute bill it would ignore is
   * the whole stage.
+  *
+  * [[bySize]] is the other scale decision: whether an input is small
+  * enough to solve on the driver at all.
   */
 object Par {
 
@@ -95,6 +98,40 @@ object Par {
   def spreadRange(df: DataFrame, cols: Seq[Column]): DataFrame =
     df.repartitionByRange(
       df.sparkSession.sessionState.conf.numShufflePartitions, cols: _*)
+
+  /** Size-adaptive dispatch: solve an input on the driver when it fits
+    * where a broadcast would be built, else run the distributed path.
+    *
+    * `df` is cached once, and up to `autoBroadcastJoinThreshold` /
+    * `rowBytes` of its rows are collected. When that is all of them,
+    * `onDriver` gets the rows — an input of a few thousand rows then
+    * costs one collect instead of a Spark job per stage. A larger input
+    * (or a threshold of -1, which turns broadcasting off) goes to
+    * `distributed` as the cached frame, so its lineage is computed
+    * once either way. The cache is dropped when the chosen path
+    * returns; a distributed path that returns a lazy frame over it must
+    * materialise that frame first. Both paths must give the same
+    * answer: specs run each case under the default threshold and at -1.
+    */
+  def bySize[T](df: DataFrame, rowBytes: Long)(onDriver: Array[Row] => T)(
+      distributed: DataFrame => T): T = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val cached = df.cache()
+    try {
+      val small =
+        if (threshold < 0) None
+        else {
+          val bound = math.min(threshold / rowBytes, Int.MaxValue - 1L).toInt
+          Some(cached.limit(bound + 1).collect()).filter(_.length <= bound)
+        }
+      small match {
+        case Some(rows) =>
+          cached.unpersist()
+          onDriver(rows)
+        case None => distributed(cached)
+      }
+    } finally cached.unpersist()
+  }
 
   private def bucketedOn(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

@@ -64,26 +64,11 @@ object DedupGroups {
         struct(col("__a").as("src"), col("__b").as("dst")),
         struct(col("__b").as("src"), col("__a").as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .cache()
-    // The size probe reads the same cache the propagation loop reads,
-    // so a graph past the bound has its pair lineage computed once.
-    val spark = pairs.sparkSession
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val small =
-      if (threshold < 0) None
-      else {
-        val bound = math.min(threshold / EdgeBytes, Int.MaxValue - 1L).toInt
-        Some(edges.limit(bound + 1).collect()).filter(_.length <= bound)
-      }
-    small match {
-      case Some(seen) =>
-        edges.unpersist()
-        solveOnDriver(spark, seen)
-      case None =>
-        val labels = propagate(edges, maxIterations)
-        edges.unpersist()
-        labels
-    }
+    // One size probe (graft.api.Par.bySize) reads the same cache the
+    // propagation loop reads, so a graph past the bound has its pair
+    // lineage computed once; the loop's eager checkpoints outlive it.
+    graft.api.Par.bySize(edges, EdgeBytes)(solveOnDriver(pairs.sparkSession, _))(
+      propagate(_, maxIterations))
   }
 
   /** Union-find over collected (src, dst) edges, rooted at each

@@ -1,5 +1,6 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.nio.file.Files
 
 import scala.collection.mutable
@@ -18,8 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Harness: a real MemoryStream → foreachBatch streaming query per
   * family (default trigger, `processAllAvailable` per slice) with the
-  * wall measured INSIDE the foreachBatch body — per-trigger fold cost,
-  * free of query-startup noise. The standing stores are built untimed
+  * wall and the JVM's process CPU measured INSIDE the foreachBatch
+  * body — per-trigger fold cost, free of query-startup noise. Wall
+  * moves with host load; process CPU (every JVM thread: tasks, driver,
+  * JIT, GC) is the steadier number for comparing two builds of a fold. The standing stores are built untimed
   * from the store corpus via the same fold bodies the sinks run.
   *
   * Families (the verdict-listed incremental stores):
@@ -34,13 +37,33 @@ import org.apache.spark.sql.functions._
   *    consumer read and one compaction, timed outside the trigger path
   *
   * Usage: Test/runMain graft.tools.StoreLatency <storeSfDir> <batchSfDir> [slices]
-  * Prints one STORE_LATENCY JSON line per family, with the live part
+  * Prints one STORE_LATENCY JSON line per family — per-trigger walls
+  * and CPU seconds, and the median of each — with the live part
   * count its store holds after the timed triggers and whether that
   * count is within BatchSeqStore.CompactEvery (every store compacts
   * from its fold); assemble per-store runs into
   * STREAM_STORE_LATENCY_r{N}.json.
   */
 object StoreLatency {
+
+  /** One trigger's cost: wall and JVM process CPU seconds. */
+  private final case class Cost(wall: Double, cpu: Double)
+
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  private def costOf(body: => Unit): Cost = {
+    val (t0, c0) = (System.nanoTime(), os.getProcessCpuTime)
+    body
+    Cost((System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - c0) / 1e9)
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) Double.NaN
+    else if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val storeDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batchDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
@@ -75,33 +98,30 @@ object StoreLatency {
         .map(_._2.map(_._1).toSeq)
 
     /** Drive one real streaming query over the constant batch: a
-      * MemoryStream, one processAllAvailable per slice, the wall
-      * measured inside foreachBatch. Returns per-trigger walls.
+      * MemoryStream, one processAllAvailable per slice, the cost
+      * measured inside foreachBatch. Returns per-trigger costs.
       */
-    def drive(ckpt: String)(fold: (DataFrame, Long) => Unit): Seq[Double] = {
+    def drive(ckpt: String)(fold: (DataFrame, Long) => Unit): Seq[Cost] = {
       implicit val sq = spark.sqlContext
       val ms = MemoryStream[(Long, String)]
-      val walls = mutable.Buffer[Double]()
+      val costs = mutable.Buffer[Cost]()
       val q = ms.toDF().toDF("doc_id", "text")
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          val t0 = System.nanoTime()
-          fold(b, id)
-          walls += (System.nanoTime() - t0) / 1e9
-          ()
-        }
+        .foreachBatch { (b: DataFrame, id: Long) => costs += costOf(fold(b, id)); () }
         .start()
       slices.foreach { sl => ms.addData(sl); q.processAllAvailable() }
       q.stop()
-      walls.toSeq
+      costs.toSeq
     }
 
-    def emit(family: String, store: String, walls: Seq[Double], extra: String = ""): Unit = {
-      val ws = walls.map(w => f"$w%.3f").mkString("[", ",", "]")
+    def emit(family: String, store: String, costs: Seq[Cost], extra: String = ""): Unit = {
+      def list(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
+      val (walls, cpus) = (costs.map(_.wall), costs.map(_.cpu))
       val parts = BatchSeqStore.parts(spark, store).size
-      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${walls.size},"parts":$parts,"parts_bounded":${parts <= BatchSeqStore.CompactEvery},"trigger_walls_sec":$ws$extra}""")
+      println(s"""STORE_LATENCY {"family":"$family","sf":"$sfLabel","batch_docs":${batchRows.length},"triggers":${costs.size},"parts":$parts,"parts_bounded":${parts <= BatchSeqStore.CompactEvery},"trigger_walls_sec":${list(walls)},"trigger_cpu_sec":${list(cpus)}""" +
+        f""","wall_p50_sec":${median(walls)}%.3f,"cpu_p50_sec":${median(cpus)}%.3f$extra}""")
     }
 
     // ---- substring: standing distinct-shingle store --------------------
@@ -115,11 +135,11 @@ object StoreLatency {
     }
     val ssRows = SubstringStream.readStoreHashes(spark, ssStore).count()
     val ssKey2 = BatchSeqStore.streamKey(s"$work/substr_ckpt")
-    val ssWalls = drive(s"$work/substr_ckpt") { (b, id) =>
+    val ssCosts = drive(s"$work/substr_ckpt") { (b, id) =>
       SubstringStream.foldBatch(b, "doc_id", "text", sK, ssStore, ssSpans,
         batchId = id, key = ssKey2)
     }
-    emit("substring_fold", ssStore, ssWalls, s""","store_hashes":$ssRows""")
+    emit("substring_fold", ssStore, ssCosts, s""","store_hashes":$ssRows""")
 
     // ---- boilerplate: standing line-count store + per-batch scrub ------
     val blStore = s"$work/boiler_store"
@@ -128,14 +148,14 @@ object StoreLatency {
         storeDocs.filter(col("doc_id") % 4 === i), "doc_id", "text",
         blStore, f"build-$i%09d")
     }
-    val blWalls = drive(s"$work/boiler_ckpt") { (b, id) =>
+    val blCosts = drive(s"$work/boiler_ckpt") { (b, id) =>
       BoilerplateStream.foldBatch(b, "doc_id", "text", blStore, f"lat-$id%09d")
       // the read side a scrubbing pipeline pays per batch
       BoilerplateStream.scrubBatch(b, "doc_id", "text", blStore,
         minDocs = 50L, except = f"lat-$id%09d").count()
       ()
     }
-    emit("boilerplate_fold_scrub", blStore, blWalls)
+    emit("boilerplate_fold_scrub", blStore, blCosts)
 
     // ---- bloom: standing SHARDED filter + per-batch fold + join probe --
     // (r15: the literal path — readWords collect + flagBatch plan
@@ -157,7 +177,7 @@ object StoreLatency {
         "text_hash", bShards, bWordsPerShard, bK, bStore, f"build-$i%09d")
     }
     BloomStream.compact(spark, bStore) // the standing store, one part
-    val bloomWalls = drive(s"$work/bloom_ckpt") { (b, id) =>
+    val bloomCosts = drive(s"$work/bloom_ckpt") { (b, id) =>
       val keys = b.select(md5(col("text").cast("binary")).as("text_hash"))
       BloomStream.foldBatchSharded(keys, "text_hash", bShards,
         bWordsPerShard, bK, bStore, f"lat-$id%09d")
@@ -166,7 +186,7 @@ object StoreLatency {
         .filter(col("bloom_hit")).count()
       ()
     }
-    emit("bloom_fold_probe", bStore, bloomWalls,
+    emit("bloom_fold_probe", bStore, bloomCosts,
       s""","num_shards":$bShards,"words_per_shard":$bWordsPerShard""")
 
     // ---- cms: standing sketch + per-batch fold + cell read -------------
@@ -179,13 +199,13 @@ object StoreLatency {
       CmsStream.foldBatch(tokens(storeDocs.filter(col("doc_id") % 4 === i)),
         "tok", cW, cD, cStore, f"build-$i%09d")
     }
-    val cmsWalls = drive(s"$work/cms_ckpt") { (b, id) =>
+    val cmsCosts = drive(s"$work/cms_ckpt") { (b, id) =>
       CmsStream.foldBatch(tokens(b), "tok", cW, cD, cStore, f"lat-$id%09d")
       CmsStream.readCellRows(spark, cStore)
         .groupBy(col("__d")).agg(count(lit(1))).count()
       ()
     }
-    emit("cms_fold_read", cStore, cmsWalls)
+    emit("cms_fold_read", cStore, cmsCosts)
 
     // ---- edge: delta-part store (the per-trigger fold is the batch's
     // aggregated pair supports only; the store-proportional merge is
@@ -209,25 +229,23 @@ object StoreLatency {
     val factSlices = factRows.zipWithIndex.groupBy(_._2 % nSlices).toSeq
       .sortBy(_._1).map(_._2.map(_._1).toSeq)
     val eKey = BatchSeqStore.streamKey(s"$work/edge_ckpt")
-    val eWalls = {
+    val eCosts = {
       implicit val sq = spark.sqlContext
       val ms = MemoryStream[(Long, Long)]
-      val walls = mutable.Buffer[Double]()
+      val costs = mutable.Buffer[Cost]()
       val q = ms.toDF().toDF("l_orderkey", "l_partkey")
         .writeStream.outputMode("append")
         .option("checkpointLocation", s"$work/edge_ckpt")
         .foreachBatch { (b: DataFrame, id: Long) =>
-          val t0 = System.nanoTime()
           // a NEW stream against an existing store must start at batch
           // 0 (the replay guard's new-key rule)
-          EdgeStream.foldBatch(b, "l_orderkey", "l_partkey", eStore, id, eKey)
-          walls += (System.nanoTime() - t0) / 1e9
+          costs += costOf(EdgeStream.foldBatch(b, "l_orderkey", "l_partkey", eStore, id, eKey))
           ()
         }
         .start()
       factSlices.foreach { sl => ms.addData(sl); q.processAllAvailable() }
       q.stop()
-      walls.toSeq
+      costs.toSeq
     }
     // the amortized store-proportional costs, measured OUTSIDE the
     // trigger path: the read-side SUM over the parts a consumer pays
@@ -239,7 +257,7 @@ object StoreLatency {
     val tComp = System.nanoTime()
     EdgeStream.compact(spark, eStore)
     val compactWall = (System.nanoTime() - tComp) / 1e9
-    emit("edge_delta_fold", eStore, eWalls,
+    emit("edge_delta_fold", eStore, eCosts,
       s""","store_supports":$eSupports,"batch_facts":${factRows.length}""" +
         f""","read_merge_wall_sec":$readMergeWall%.3f""" +
         f""","compact_wall_sec":$compactWall%.3f""")
